@@ -1,0 +1,1 @@
+"""Lake benchmark: seeded workloads, end-to-end and per-layer metrics."""
