@@ -388,14 +388,19 @@ class CatalogServiceCommitIO:
     def _materialize(meta_dir: str, version: int, payload: str) -> None:
         """Write the conventional metadata file from the committed
         payload. Create-if-absent: concurrent healers race benignly
-        (identical bytes); an already-present file is left untouched."""
+        (identical bytes); an already-present file is left untouched.
+        The bytes go to a temp file that is then hard-linked into place,
+        so a reader that finds vN never opens it half-written."""
+        path = os.path.join(meta_dir, f"v{version}.metadata.json")
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            f.write(payload)
         try:
-            with open(
-                os.path.join(meta_dir, f"v{version}.metadata.json"), "x"
-            ) as f:
-                f.write(payload)
+            os.link(tmp, path)
         except FileExistsError:
             pass
+        finally:
+            os.remove(tmp)
 
     def _seed_version(self, con, meta_dir: str) -> int:
         """Adopt a table with no service row: seed from a directory

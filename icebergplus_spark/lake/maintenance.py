@@ -278,7 +278,7 @@ def compact(
         writer = writer.partitionBy(*pcols)
     writer.parquet(out_dir)
 
-    new_entries = table._harvest_dir(out_dir)
+    new_entries = table._harvest_dir(out_dir, drop_empty=True)
     # Consolidated manifest: untouched big files + the new compacted files.
     all_entries = sorted(big + new_entries, key=lambda e: e["file_path"])
     manifest = table._write_manifest(all_entries)

@@ -3121,6 +3121,38 @@ def _split_statements(sql: str) -> list[str]:
     return [s for s in out if s]
 
 
+def _report_df(spark, report: dict):
+    """One-row frame over a maintenance report, columns in key order:
+    bool, int and float values as boolean, long and double; lists and
+    dicts as JSON text; anything else as string."""
+    from pyspark.sql.types import (
+        BooleanType,
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    row, fields = {}, []
+    for k, v in sorted(report.items()):
+        if isinstance(v, bool):
+            dt = BooleanType()
+        elif isinstance(v, int):
+            dt = LongType()
+        elif isinstance(v, float):
+            dt = DoubleType()
+        else:
+            dt = StringType()
+            if isinstance(v, (list, dict)):
+                v = json.dumps(v)
+            elif v is not None:
+                v = str(v)
+        row[k] = v
+        fields.append(StructField(k, dt))
+    return local_rows_df(spark, [row], StructType(fields))
+
+
 def lake_sql(catalog: LocalLakeCatalog, sql: str):
     """Execute one SQL statement against the catalog. SELECT/VALUES pass
     through to ``spark.sql``; DML routes onto LakeTable ops (see module
@@ -3783,11 +3815,7 @@ def lake_sql(catalog: LocalLakeCatalog, sql: str):
                 [c.strip() for c in zcols.split(",")] if zcols else None
             ),
         )
-        row = {
-            k: (json.dumps(v) if isinstance(v, (list, dict)) else v)
-            for k, v in sorted(report.items())
-        }
-        return local_rows_df(spark, [row])
+        return _report_df(spark, report)
 
     if head == "RESTORE":
         # Delta syntax: RESTORE TABLE t TO VERSION AS OF <snapshot_id>
@@ -3801,9 +3829,7 @@ def lake_sql(catalog: LocalLakeCatalog, sql: str):
         from icebergplus_spark.lake.maintenance import rollback
 
         report = rollback(catalog.load_table(m.group(1)), int(m.group(2)))
-        return local_rows_df(
-            spark, [{k: str(v) for k, v in sorted(report.items())}]
-        )
+        return _report_df(spark, {k: str(v) for k, v in report.items()})
 
     if head == "COPY":
         # export direction first (Trino/DuckDB COPY ... TO shape):
@@ -3990,11 +4016,7 @@ def lake_sql(catalog: LocalLakeCatalog, sql: str):
                 f"({type(e).__name__}: {e}); see the procedure list in "
                 "the module docstring"
             ) from e
-        row = {
-            k: (json.dumps(v) if isinstance(v, (list, dict)) else v)
-            for k, v in sorted(report.items())
-        }
-        return local_rows_df(spark, [row])
+        return _report_df(spark, report)
 
     if head == "MERGE":
         # MERGE ... USING (SELECT ...) alias (r8): the subquery source

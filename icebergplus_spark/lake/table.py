@@ -3832,7 +3832,7 @@ class LakeTable:
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(out_dir)
-        new_entries.extend(self._harvest_dir(out_dir))
+        new_entries.extend(self._harvest_dir(out_dir, drop_empty=True))
         new_entries.sort(key=lambda e: e["file_path"])
         manifest = self._write_manifest(
             sorted(untouched + new_entries, key=lambda e: e["file_path"])
@@ -4703,7 +4703,9 @@ class LakeTable:
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(out_dir)
-        new_entries: list[dict[str, Any]] = self._harvest_dir(out_dir)
+        new_entries: list[dict[str, Any]] = self._harvest_dir(
+            out_dir, drop_empty=True
+        )
         manifest = self._write_manifest(
             sorted(untouched + new_entries, key=lambda e: e["file_path"])
         )
@@ -4725,9 +4727,11 @@ class LakeTable:
         predicates: dict[str, tuple[str, Any]] | list[dict[str, Any]],
     ) -> "LakeTable":
         """Copy-on-write row-level DELETE (beyond the append-only
-        reference, SURVEY.md §2.C): only files whose stats ranges
-        intersect the predicate are rewritten; untouched files carry over
-        to the new REPLACE snapshot unchanged.
+        reference, SURVEY.md §2.C): files whose stats prove every row
+        matches leave the manifest unread, only files the predicate
+        partially covers are rewritten, and untouched files carry over
+        to the new REPLACE snapshot unchanged. A rewrite that keeps no
+        row commits no file.
 
         ``predicates`` is either one conjunction dict (rows matching ALL
         conditions are removed; values may be AND-lists for closed
@@ -4755,11 +4759,19 @@ class LakeTable:
         )
         affected_paths = {f["file_path"] for f in affected}
         untouched = [f for f in all_files if f["file_path"] not in affected_paths]
+        mapping = self._column_mapping
+        phys_branches = [
+            {mapping.get(c, c): v for c, v in b.items()} for b in branches
+        ]
+        partial = sorted(
+            f["file_path"]
+            for f in affected
+            if not any(_file_fully_matches(f, pb) for pb in phys_branches)
+        )
         new_entries: list[dict[str, Any]] = []
-        if affected:
+        if partial:
             from pyspark.sql import functions as _F
 
-            mapping = self._column_mapping
             snap_now = self.snapshot()
             # survivor rows KEEP their row ids through the rewrite
             # (Iceberg v3): read id-annotated when the table allocates
@@ -4767,10 +4779,10 @@ class LakeTable:
             carry_lineage = "row_id_assignments" in self._meta
             if carry_lineage:
                 # (also applies MOR tombstones, like _read_live)
-                df = self._lineage_frame(snap_now, sorted(affected_paths))
+                df = self._lineage_frame(snap_now, partial)
             else:
                 # _read_live: MOR tombstones must not resurrect in the rewrite
-                df = self._read_live(sorted(affected_paths), snap_now)
+                df = self._read_live(partial, snap_now)
             # keep rows that do NOT match any branch conjunction; NULL
             # comparisons mean no-match → keep (SQL DELETE semantics)
             matched = _branches_match_cond(
@@ -4783,8 +4795,7 @@ class LakeTable:
             if pcols:
                 writer = writer.partitionBy(*pcols)
             writer.parquet(out_dir)
-            new_entries.extend(self._harvest_dir(out_dir))
-            new_entries.sort(key=lambda e: e["file_path"])
+            new_entries = self._harvest_dir(out_dir, drop_empty=True)
         manifest = self._write_manifest(
             sorted(untouched + new_entries, key=lambda e: e["file_path"])
         )
@@ -4797,7 +4808,7 @@ class LakeTable:
             delete_manifests=snap.get("delete_manifests", []) if snap else [],
             lineage_files=(
                 [e["file_path"] for e in new_entries]
-                if affected and "row_id_assignments" in self._meta
+                if new_entries and "row_id_assignments" in self._meta
                 else None
             ),
         )
@@ -5093,7 +5104,9 @@ class LakeTable:
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(out_dir)
-        new_entries: list[dict[str, Any]] = self._harvest_dir(out_dir)
+        new_entries: list[dict[str, Any]] = self._harvest_dir(
+            out_dir, drop_empty=True
+        )
         manifest = self._write_manifest(
             sorted(untouched + new_entries, key=lambda e: e["file_path"])
         )

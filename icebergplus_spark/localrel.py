@@ -1,18 +1,24 @@
-"""Single-partition local relations over driver-computed rows.
+"""Local relations over driver-computed rows.
 
-``spark.createDataFrame(rows)`` slices even a 1-row list into
-``defaultParallelism`` partitions; an action over such a frame then pays
-one task launch per partition, and ``take(n)`` on a frame with fewer
-than ``n`` rows escalates through several such jobs (measured ~1.2 s for
-``createDataFrame([(v,)]).take(2)`` on local[32] vs ~0.1 s for the same
-relation as a literal plan). Manifest folds, metadata tables and report
-frames are all driver-computed and tiny at ANY scale — on a real
-cluster each of those empty tasks is additionally a network round trip
-— so they are built here as a one-partition pure-JVM literal plan
-(guide §1.2/§5: don't schedule work you throw away; the driver already
-holds the rows). Rows whose values the literal path cannot express fall
-back to a one-partition parallelized RDD — same semantics, still one
-task per action.
+Manifest folds, metadata tables, lineage frames and report frames are
+all computed on the driver and are tiny at any table scale. They reach
+Spark through ``local_rows_df``, which builds a ``pyarrow.Table`` from
+the rows against the declared schema and hands it to
+``spark.createDataFrame(table, schema)``.
+
+Contract: while the serialized Arrow batches stay under
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by default)
+Spark plans the frame as a ``LocalRelation`` (``LocalTableScan``).
+``collect()`` and ``take()`` over it run no Spark job and start no
+Python worker; a plan built on top of it (a merge aggregate, a join)
+runs its jobs on the JVM only. Above the threshold Spark itself falls
+back to a parallelized Arrow RDD, with the same rows and schema.
+
+Values take the same meaning as under ``createDataFrame(list, schema)``:
+rows pass through ``StructType.toInternal`` first, so a naive
+``datetime`` names the same instant on both paths, dict rows bind by
+field name (tuples and ``Row`` by position), and declared nullability
+is kept even for an empty frame.
 
 ``local_rows_df`` also attaches the Python rows on the returned frame as
 ``_lake_local_rows`` so in-process consumers (the SQL scalar-subquery
@@ -22,108 +28,34 @@ consumer."""
 
 from __future__ import annotations
 
-import datetime
-import decimal
 from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
-
-# value types F.lit renders faithfully as a Catalyst literal (lists are
-# excluded on purpose: array literals exist but element-type corner
-# cases — empty lists, mixed null — are not worth auditing here)
-_LIT_TYPES = (
-    bool,
-    int,
-    float,
-    str,
-    bytes,
-    bytearray,
-    decimal.Decimal,
-    datetime.datetime,
-    datetime.date,
-)
-
-# Literal-plan analysis cost grows ~linearly with row count (~10 ms/row
-# measured) while the one-partition RDD path is flat (~235 ms); the
-# literal plan wins only for tiny frames — exactly the scalar-fold /
-# report shapes that dominate.
-_LIT_ROW_CAP = 8
-
-
-def _literal_plan(
-    spark: SparkSession, rows: list, schema: StructType
-) -> DataFrame:
-    """rows → one-partition JVM literal plan: a 1-row Range (or 0-row
-    for empty input) selecting an exploded array of typed structs. No
-    Python worker is involved when an action later runs it."""
-    base = spark.range(0, 1 if rows else 0, 1, 1)
-    if not rows:
-        return base.select(
-            *[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-    structs = [
-        F.struct(
-            *[
-                F.lit(v).cast(f.dataType).alias(f.name)
-                for v, f in zip(r, schema.fields)
-            ]
-        )
-        for r in rows
-    ]
-    return base.select(F.explode(F.array(*structs)).alias("__r")).select(
-        "__r.*"
-    )
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def local_rows_df(
-    spark: SparkSession, rows: Iterable[Any], schema: Any = None
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
 ) -> DataFrame:
-    """Build a DataFrame over driver-local ``rows`` with ONE partition.
+    """Build a DataFrame over driver-local ``rows`` as a local relation.
 
-    ``schema`` is required when ``rows`` may be empty (nothing to infer
-    from). Dict rows are converted to ``Row`` so both the schema-less
-    inference path and the attached-rows consumers see stable field
-    order."""
-    rows = list(rows)
-    if rows and isinstance(rows[0], dict):
-        rows = [Row(**r) for r in rows]
-    df = None
-    # empty frames stay on the RDD path: createDataFrame([], schema)
-    # preserves declared nullability exactly, the literal plan does not
-    if schema is not None and rows and len(rows) <= _LIT_ROW_CAP:
-        st = schema
-        if isinstance(st, str):
-            try:
-                from pyspark.sql.types import _parse_datatype_string
-
-                st = _parse_datatype_string(st)
-            except Exception:
-                st = None
-        if (
-            isinstance(st, StructType)
-            and all(len(r) == len(st.fields) for r in rows)
-            and all(
-                v is None or isinstance(v, _LIT_TYPES)
-                for r in rows
-                for v in r
-            )
-        ):
-            try:
-                df = _literal_plan(spark, rows, st)
-            except Exception:
-                df = None  # unrenderable literal — RDD path below
-    if df is None:
-        rdd = spark.sparkContext.parallelize(rows, 1)
-        df = (
-            spark.createDataFrame(rdd, schema)
-            if schema is not None
-            else spark.createDataFrame(rdd)
-        )
+    ``schema`` is a ``StructType`` or a DDL string. Dict rows bind by
+    field name and are attached as ``Row`` in schema order."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = [
+        Row(**{n: r.get(n) for n in schema.names}) if isinstance(r, dict) else r
+        for r in rows
+    ]
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*map(schema.toInternal, rows))) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    df = spark.createDataFrame(table, schema)
     df._lake_local_rows = rows  # type: ignore[attr-defined]
     return df
 

@@ -12,8 +12,10 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     from icebergplus_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    s = get_spark("icebergplus-tests", shuffle_partitions=8)
+    # local[min(nproc, 8)] whatever SPARK_GRAFT_CPUS says: the suite's
+    # tables are tiny, so slots past 8 add per-task overhead, not speed
+    cores = min(len(os.sched_getaffinity(0)), 8)
+    s = get_spark("icebergplus-tests", master=f"local[{cores}]", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

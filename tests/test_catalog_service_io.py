@@ -247,3 +247,39 @@ def test_busy_database_surfaces_as_concurrent_commit_error(spark, tmp_path):
     v = io.current_version(meta_dir) + 1
     io.publish(meta_dir, v, '{"snapshots": [], "_version": %d}' % v)
     assert io.current_version(meta_dir) == v
+
+
+def test_readers_never_open_a_half_written_metadata_file(tmp_path):
+    """A reader that finds the committed version opens a whole file:
+    the payload is materialized under a temp name and linked into
+    place, never written in place under ``vN.metadata.json``."""
+    import json
+    import os
+
+    meta_dir = str(tmp_path / "wh" / "t" / "metadata")
+    os.makedirs(meta_dir)
+    io = CatalogServiceCommitIO()
+    payload = json.dumps({"pad": "x" * (1 << 20)})
+    io.publish(meta_dir, 1, payload)
+    stop, torn = threading.Event(), []
+
+    def reader():
+        while not stop.is_set():
+            v = io.current_version(meta_dir)
+            with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as f:
+                text = f.read()
+            if text != payload:
+                torn.append((v, len(text)))
+
+    threads = [threading.Thread(target=reader) for _ in range(4)]
+    for th in threads:
+        th.start()
+    try:
+        for v in range(2, 42):
+            io.publish(meta_dir, v, payload)
+    finally:
+        stop.set()
+        for th in threads:
+            th.join(timeout=60)
+    assert not any(th.is_alive() for th in threads)
+    assert torn == []
