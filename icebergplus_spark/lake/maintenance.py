@@ -273,12 +273,9 @@ def compact(
         # just fewer write tasks
         df = df.coalesce(n_out)
     df, pcols = table._apply_partition_transforms(df)
-    writer = df.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(out_dir)
-
-    new_entries = table._harvest_dir(out_dir, drop_empty=True)
+    # the driver writer makes one file: only a one-file target has a bound
+    bound = sum(f["record_count"] for f in small) if n_out == 1 else None
+    new_entries = table._harvest_rewrite(table._write_frame(df, out_dir, pcols, bound))
     # Consolidated manifest: untouched big files + the new compacted files.
     all_entries = sorted(big + new_entries, key=lambda e: e["file_path"])
     manifest = table._write_manifest(all_entries)

@@ -2437,10 +2437,8 @@ def _align(df, table: LakeTable):
     if [f.name for f in df.schema.fields] == want and all(
         a.dataType == b.dataType for a, b in zip(df.schema.fields, fields)
     ):
-        # already aligned: the select below would be an identity — skip
-        # it so fold-built frames keep their attached driver rows (r12:
-        # INSERT INTO ... SELECT <fold> then takes the driver-side
-        # tiny-batch write instead of a Spark job)
+        # already aligned: the select below would be an identity (and
+        # costs a py4j round trip per column to build) — skip it
         return df
     if sorted(df.columns) == sorted(want):
         pairs = [(f.name, f) for f in fields]

@@ -34,9 +34,14 @@ from typing import Any
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.types as _T
 from pyspark.sql.types import StructType
 
-from icebergplus_spark.localrel import local_rows_df
+from icebergplus_spark.localrel import (
+    local_relation_rows,
+    local_rows_df,
+    rows_to_arrow,
+)
 
 from icebergplus_spark.lake.commitio import (  # noqa: F401 — re-export
     ConcurrentCommitError,
@@ -118,6 +123,17 @@ MANIFEST_SCHEMA = pa.schema(
 # correctness. 512 bytes per (file, column) of manifest weight.
 _BLOOM_M = 4096
 _BLOOM_K = 5
+
+# Column types LakeTable._write_frame writes on the driver: for these a
+# pyarrow file's footer stats equal those of Spark's writer. DECIMAL is
+# left out: parquet-cpp and parquet-mr expose different footer-stat
+# subsets for FLBA decimals (cpp: min/max + null_count, mr: null_count
+# only through this harvest).
+_DRIVER_WRITE_TYPES = (
+    _T.BooleanType, _T.ByteType, _T.ShortType, _T.IntegerType, _T.LongType,
+    _T.FloatType, _T.DoubleType, _T.StringType, _T.BinaryType, _T.DateType,
+    _T.TimestampType, _T.TimestampNTZType,
+)
 
 
 def _bloom_key(v: Any) -> bytes:
@@ -2472,9 +2488,11 @@ class LakeTable:
         if (self.properties or {}).get("delete.representation") == "dv":
             return self._commit_dv_delete(t0, snap, matches)
         out_dir = os.path.join(self.table_dir, "data", "deletes", f"pos-{uuid.uuid4().hex}")
-        matches.write.mode("overwrite").parquet(out_dir)
+        paths = self._write_frame(
+            matches, out_dir, [], sum(f["record_count"] for f in affected)
+        )
         new_entries = self._harvest_delete_files(
-            out_dir, "position", "", snap["snapshot_id"] if snap else 0
+            paths, "position", "", snap["snapshot_id"] if snap else 0
         )
         if sum(e["record_count"] for e in new_entries) == 0:
             for e in new_entries:
@@ -2543,25 +2561,19 @@ class LakeTable:
         out_dir = os.path.join(
             self.table_dir, "data", "deletes", f"dv-{uuid.uuid4().hex}"
         )
-        enc_df.write.mode("overwrite").parquet(out_dir)
         new_entries = []
-        for root, _dirs, fns in os.walk(out_dir):
-            for fn in fns:
-                if fn.endswith(".parquet"):
-                    p = os.path.join(root, fn)
-                    t = pq.read_table(p, columns=["n_new"])
-                    new_entries.append(
-                        {
-                            "file_path": p,
-                            "record_count": int(
-                                sum(t.column("n_new").to_pylist())
-                            ),
-                            "file_size_bytes": os.path.getsize(p),
-                            "content": "dv",
-                            "equality_cols": "",
-                            "applies_before": snap["snapshot_id"] if snap else 0,
-                        }
-                    )
+        for p in self._write_frame(enc_df, out_dir, [], None):
+            t = pq.read_table(p, columns=["n_new"])
+            new_entries.append(
+                {
+                    "file_path": p,
+                    "record_count": int(sum(t.column("n_new").to_pylist())),
+                    "file_size_bytes": os.path.getsize(p),
+                    "content": "dv",
+                    "equality_cols": "",
+                    "applies_before": snap["snapshot_id"] if snap else 0,
+                }
+            )
         if sum(e["record_count"] for e in new_entries) == 0:
             import shutil as _shutil
 
@@ -2731,11 +2743,14 @@ class LakeTable:
                 t0, snap, matches, extra_summary=extra_summary
             )
         out_dir = os.path.join(self.table_dir, "data", "deletes", f"eq-{uuid.uuid4().hex}")
-        keys.select(
+        key_rows = keys.select(
             *[_F.col(c).alias(p) for c, p in zip(keys.columns, phys_cols)]
-        ).dropDuplicates().write.mode("overwrite").parquet(out_dir)
+        ).dropDuplicates()
         new_entries = self._harvest_delete_files(
-            out_dir, "equality", json.dumps(phys_cols), snap["snapshot_id"]
+            self._write_frame(key_rows, out_dir, [], local_relation_rows(keys)),
+            "equality",
+            json.dumps(phys_cols),
+            snap["snapshot_id"],
         )
         dmanifest = self._write_delete_manifest(new_entries)
         self._commit_snapshot(
@@ -2779,115 +2794,89 @@ class LakeTable:
                 pcols.append(hidden)
         return df, pcols
 
-    # Spark scalar type → (pyarrow type factory, value converter); the
-    # closed set the driver-side tiny-batch writer supports. Physical
-    # parquet types match what Spark's own writer emits under this
-    # engine's session confs (TIMESTAMP_MICROS adjusted-to-UTC, date32,
-    # decimal128, no INT96).
-    def _write_rows_driver(
-        self, rows: list, schema: StructType, snap_dir: str
-    ) -> list[str] | None:
-        """Write a driver-local row batch as ONE parquet data file with
-        pyarrow, skipping the Spark write job entirely (r12, guide
-        §1.2/§5). Returns the written path list, or None to decline —
-        partitioned/sorted tables, >4096 rows, type coercion needed,
-        non-scalar or long-string values, or a non-UTC driver process
-        (naive datetimes would be reinterpreted) all fall back to the
-        ordinary Spark write, which is never wrong, only slower."""
-        import datetime as _dt
+    # _write_frame's driver path: at most this many rows, and string /
+    # binary values of at most this many bytes
+    DRIVER_WRITE_MAX_ROWS = 4096
+    DRIVER_WRITE_MAX_STR = 256
+
+    def _write_frame(
+        self,
+        df: DataFrame,
+        out_dir: str,
+        pcols: list[str],
+        max_rows: int | None,
+    ) -> list[str]:
+        """Write a physical-schema frame as parquet data files under
+        ``out_dir`` and return their paths, sorted: the one writer of
+        every data and delete file.
+
+        ``max_rows`` is the caller's bound on the frame's rows, known
+        without running anything (the record counts of the files being
+        rewritten, plus the source's rows when it is a local relation),
+        or None when unknown. When the bound is at most
+        ``DRIVER_WRITE_MAX_ROWS``, the output is unpartitioned, the
+        table declares no ``write.sort-order`` and every column has a
+        type in ``_DRIVER_WRITE_TYPES``, the rows are pulled to the
+        driver (a no-job ``collect()`` for a local relation, one
+        ``toArrow()`` job otherwise) and written as one snappy parquet
+        file with pyarrow: no write job, no commit protocol. Anything
+        else takes Spark's writer, and so do pulled values whose footer
+        stats the two writers record differently: a string or binary
+        value longer than ``DRIVER_WRITE_MAX_STR`` bytes, and a float
+        NaN (parquet-mr takes it as the max, parquet-cpp skips it)."""
         import time as _time
 
-        from pyspark.sql.types import (
-            BinaryType,
-            BooleanType,
-            ByteType,
-            DateType,
-            DecimalType,
-            DoubleType,
-            FloatType,
-            IntegerType,
-            LongType,
-            ShortType,
-            StringType,
-            TimestampNTZType,
-            TimestampType,
-        )
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        if self.partition_spec or len(rows) > 4096:
-            return None
-        if (self.properties or {}).get("write.sort-order", "").strip():
-            return None
-        table_types = {f.name: f.dataType for f in self.schema.fields}
-        mapping = self._column_mapping
-        utc_process = _time.timezone == 0 and not _time.daylight
-        simple = {
-            BooleanType: pa.bool_,
-            ByteType: pa.int8,
-            ShortType: pa.int16,
-            IntegerType: pa.int32,
-            LongType: pa.int64,
-            FloatType: pa.float32,
-            DoubleType: pa.float64,
-            StringType: pa.string,
-            BinaryType: pa.binary,
-            DateType: pa.date32,
-        }
-        arrays, fields = [], []
-        for i, f in enumerate(schema.fields):
-            dt = table_types.get(f.name)
-            if dt is None or dt != f.dataType:
-                return None  # coercion needed — Spark cast semantics
-            vals = [
-                (r[f.name] if hasattr(r, "__fields__") else r[i])
-                for r in rows
-            ]
-            if type(dt) in simple:
-                pa_t = simple[type(dt)]()
-                if isinstance(dt, (StringType, BinaryType)) and any(
-                    v is not None and len(v) > 256 for v in vals
-                ):
-                    return None  # keep footer min/max trivially exact
-            elif isinstance(dt, TimestampType):
-                pa_t = pa.timestamp("us", tz="UTC")
-                if not utc_process and any(
-                    v is not None and v.tzinfo is None for v in vals
-                ):
-                    return None
-                vals = [
-                    (
-                        v.replace(tzinfo=_dt.timezone.utc)
-                        if v is not None and v.tzinfo is None
-                        else v
-                    )
-                    for v in vals
-                ]
-            elif isinstance(dt, TimestampNTZType):
-                pa_t = pa.timestamp("us")
+        fields = df.schema.fields
+        if (
+            max_rows is not None
+            and max_rows <= self.DRIVER_WRITE_MAX_ROWS
+            and not pcols
+            and not (self.properties or {}).get("write.sort-order", "").strip()
+            and all(isinstance(f.dataType, _DRIVER_WRITE_TYPES) for f in fields)
+        ):
+            # collect() hands TIMESTAMP values back as naive local
+            # datetimes, which a DST-observing process cannot always
+            # map back to one instant: there, such frames use toArrow()
+            utc_process = _time.timezone == 0 and not _time.daylight
+            if local_relation_rows(df) is not None and (
+                utc_process
+                or not any(isinstance(f.dataType, _T.TimestampType) for f in fields)
+            ):
+                table = rows_to_arrow(df.collect(), df.schema)
             else:
-                # nested/interval/etc — Spark path. DECIMAL declines
-                # too: parquet-cpp and parquet-mr expose different
-                # footer-stat subsets for FLBA decimals (cpp: min/max +
-                # null_count, mr: null_count only through this harvest),
-                # and stats parity is the invariant here.
-                return None
-            try:
-                arrays.append(pa.array(vals, type=pa_t))
-            except Exception:
-                return None  # unrenderable value — Spark path
-            fields.append(pa.field(mapping.get(f.name, f.name), pa_t))
-        if not rows:
-            return []  # empty commit: no file at all (Spark path would
-            # write zero-row task files and drop them again)
-        os.makedirs(snap_dir, exist_ok=True)
-        path = os.path.join(
-            snap_dir, f"part-00000-{uuid.uuid4().hex}.parquet"
+                # A Dataset keeps its executed plan, broadcast relations
+                # included, while its py4j proxy lives, which is until
+                # Python's cycle collector runs: pull through a
+                # throwaway Dataset and release it in the JVM at once
+                pull = df.select("*")
+                try:
+                    table = pull.toArrow().cast(to_arrow_schema(df.schema))
+                finally:
+                    self.spark.sparkContext._gateway.detach(pull._jdf)
+            if not any(
+                (pc.max(pc.binary_length(c)).as_py() or 0)
+                > self.DRIVER_WRITE_MAX_STR
+                if pa.types.is_string(c.type) or pa.types.is_binary(c.type)
+                else pa.types.is_floating(c.type) and pc.any(pc.is_nan(c)).as_py()
+                for c in table.columns
+            ):
+                os.makedirs(out_dir, exist_ok=True)
+                path = os.path.join(out_dir, f"part-00000-{uuid.uuid4().hex}.parquet")
+                pq.write_table(table, path, compression="snappy")
+                return [path]
+        writer = df.write.mode("overwrite")
+        if pcols:
+            writer = writer.partitionBy(*pcols)
+        writer.parquet(out_dir)
+        return sorted(
+            os.path.join(root, fn)
+            for root, _dirs, fns in os.walk(out_dir)
+            for fn in fns
+            if fn.endswith(".parquet")
         )
-        pq.write_table(
-            pa.Table.from_arrays(arrays, schema=pa.schema(fields)),
-            path,
-            compression="snappy",
-        )
-        return [path]
 
     def _write_data_files(
         self, df: DataFrame, distribution: str | None
@@ -2906,12 +2895,8 @@ class LakeTable:
         # files every later scan fails to read.
         from pyspark.sql import functions as _F
 
-        from icebergplus_spark.localrel import attached_rows
-
         mapping = self._column_mapping
         types = {f.name: f.dataType for f in self.schema.fields}
-        local_rows = attached_rows(df)
-        local_schema = df.schema if local_rows is not None else None
         # Skip the rename/cast select when it would be an identity
         # projection (r12, guide §1.2): the common append ships a frame
         # already in the table's names and types, and the per-column
@@ -2940,23 +2925,6 @@ class LakeTable:
         # with write.stats.ndv=false.
         phys_cols = list(df.columns)
         snap_dir = os.path.join(self.table_dir, "data", f"snap-{uuid.uuid4().hex}")
-        # Tiny driver-computed batches (scalar-fold INSERTs, watermark/
-        # checkpoint rows, report frames — local_rows_df carriers) write
-        # their ONE parquet file directly on the driver (r12, guide
-        # §1.2/§5: don't schedule a distributed job for rows the driver
-        # already holds). A 1-row watermark append used to pay a full
-        # Spark write job (~0.2-0.4 s of pure task/commit overhead —
-        # and on a real cluster, a network round trip per empty task);
-        # pyarrow writes the same TIMESTAMP_MICROS/date32/decimal128
-        # physical types Spark would. Gated: equal source/target types
-        # (the cast select above is then a pure rename), scalar types
-        # only, unpartitioned, no declared sort order, <= 4096 rows —
-        # anything else declines to the ordinary Spark write below.
-        paths_override: list[str] | None = None
-        if local_rows is not None:
-            paths_override = self._write_rows_driver(
-                local_rows, local_schema, snap_dir
-            )
         df, pcols = self._apply_partition_transforms(df)
         # Write distribution (Iceberg write.distribution-mode parity):
         # a partitionBy write emits one file PER (task, partition value)
@@ -2990,19 +2958,12 @@ class LakeTable:
             if not pcols and distribution == "range":
                 df = df.repartitionByRange(*[_F.col(c) for c in order])
             df = df.sortWithinPartitions(*order)
-        if paths_override is None:
-            writer = df.write.mode("overwrite")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(snap_dir)
-            paths = [
-                os.path.join(root, fn)
-                for root, _dirs, files in os.walk(snap_dir)
-                for fn in files
-                if fn.endswith(".parquet")
-            ]
-        else:
-            paths = paths_override
+        # A batch that is a local relation (SQL VALUES, scalar-fold
+        # INSERTs, watermark/checkpoint rows, report frames) bounds its
+        # own row count, so a small one is written on the driver
+        # without a Spark job (_write_frame); other sources have no
+        # bound before they run and take Spark's writer.
+        paths = self._write_frame(df, snap_dir, pcols, local_relation_rows(df))
         inverse = {p: l for l, p in mapping.items()}
         want_ndv = (self.properties or {}).get("write.stats.ndv", "true") != "false"
         import numpy as _np
@@ -3137,51 +3098,35 @@ class LakeTable:
             entries.append(e)
         return entries
 
-    def _harvest_dir(
-        self, out_dir: str, drop_empty: bool = False
-    ) -> list[dict[str, Any]]:
-        """Harvest every parquet file a rewrite job left under
-        ``out_dir`` as ONE batch through ``_harvest_data_files`` —
+    def _harvest_rewrite(self, paths: list[str]) -> list[dict[str, Any]]:
+        """Harvest the parquet files a rewrite wrote (``_write_frame``'s
+        paths) as ONE batch through ``_harvest_data_files`` —
         identical per-file stats, but past the distributed threshold
         the column reads fan out next to the data instead of running
         as a driver-serial loop (r12, guide §5: a MERGE/UPDATE/DELETE/
         compaction rewriting thousands of files at 100 TB must not
         harvest them one-by-one on the driver; the append path already
-        fans out, the rewrite paths now share it). ``drop_empty`` skips
-        zero-row task files in the returned entries (the DV-combining
-        callers keep those files on disk but never register them)."""
-        paths = [
-            os.path.join(root, fn)
-            for root, _dirs, fns in os.walk(out_dir)
-            for fn in fns
-            if fn.endswith(".parquet")
-        ]
-        entries = self._harvest_data_files(paths)
-        if drop_empty:
-            entries = [e for e in entries if e["record_count"]]
+        fans out, the rewrite paths now share it). Zero-row files are
+        left out of the returned entries (they stay on disk, never
+        registered)."""
+        entries = [e for e in self._harvest_data_files(paths) if e["record_count"]]
         return sorted(entries, key=lambda e: e["file_path"])
 
     def _harvest_delete_files(
         self,
-        out_dir: str,
+        paths: list[str],
         content: str,
         equality_cols: str,
         applies_before: int,
     ) -> list[dict[str, Any]]:
-        """Delete-manifest entries for the tombstone files a delete job
-        wrote under ``out_dir`` — footer-only stats (delete entries
+        """Delete-manifest entries for the tombstone files a delete
+        wrote (``_write_frame``'s paths) — footer-only stats (delete entries
         carry no column stats, so the data-file harvest's column decode
         would be pure waste here), batched so past the distributed
         threshold the footer reads fan out as a Spark job instead of a
         driver-serial loop (r13: the last rewrite family the r12
         harvest batching left driver-serial). Below the threshold the
         per-file work is byte-identical to the old loop."""
-        paths = sorted(
-            os.path.join(root, fn)
-            for root, _dirs, fns in os.walk(out_dir)
-            for fn in fns
-            if fn.endswith(".parquet")
-        )
         threshold = int(
             self.properties.get("write.stats-harvest.distributed-threshold", "64")
         )
@@ -3243,11 +3188,14 @@ class LakeTable:
         out_dir = os.path.join(
             self.table_dir, "data", "deletes", f"eq-{uuid.uuid4().hex}"
         )
-        df.select(
+        key_rows = df.select(
             *[_F.col(c).alias(p) for c, p in zip(keys, phys_keys)]
-        ).dropDuplicates().write.mode("overwrite").parquet(out_dir)
+        ).dropDuplicates()
         del_entries = self._harvest_delete_files(
-            out_dir, "equality", json.dumps(phys_keys), base["snapshot_id"]
+            self._write_frame(key_rows, out_dir, [], local_relation_rows(df)),
+            "equality",
+            json.dumps(phys_keys),
+            base["snapshot_id"],
         )
         dmanifest = self._write_delete_manifest(del_entries)
         entries, ndv, manifest = self._write_data_files(df, None)
@@ -3828,11 +3776,13 @@ class LakeTable:
         else:
             merged = incoming
         merged, pcols = self._apply_partition_transforms(merged)
-        writer = merged.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(out_dir)
-        new_entries.extend(self._harvest_dir(out_dir, drop_empty=True))
+        # kept rows are a subset of the affected files' rows, and each
+        # incoming row joins at most one (grouped) old id
+        n = local_relation_rows(df)
+        bound = None if n is None else n + sum(f["record_count"] for f in affected)
+        new_entries.extend(
+            self._harvest_rewrite(self._write_frame(merged, out_dir, pcols, bound))
+        )
         new_entries.sort(key=lambda e: e["file_path"])
         manifest = self._write_manifest(
             sorted(untouched + new_entries, key=lambda e: e["file_path"])
@@ -3956,6 +3906,22 @@ class LakeTable:
             _F.min(k0).alias("lo"), _F.max(k0).alias("hi")
         ).first()
         return bounds, None, keys_phys
+
+    def _merge_write_bound(
+        self,
+        affected: list[dict[str, Any]],
+        source: DataFrame,
+        key_sample: list | None,
+    ) -> int | None:
+        """Bound on the rows a MERGE rewrite writes: the affected files'
+        rows plus the source's, known when the source is a local
+        relation whose key tuples are all distinct (``key_sample`` from
+        ``_merge_source_probe``), so no target row joins two source
+        rows. None otherwise."""
+        n = local_relation_rows(source)
+        if n is None or key_sample is None or len(key_sample) != n:
+            return None
+        return n + sum(f["record_count"] for f in affected)
 
     def _merge_unhit_exempt(
         self,
@@ -4318,11 +4284,10 @@ class LakeTable:
             out_dir = os.path.join(
                 self.table_dir, "data", f"merge-{uuid.uuid4().hex}"
             )
-            writer = phys.write.mode("overwrite")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(out_dir)
-            new_entries = self._harvest_dir(out_dir, drop_empty=True)
+            bound = self._merge_write_bound(affected, source, key_sample)
+            new_entries = self._harvest_rewrite(
+                self._write_frame(phys, out_dir, pcols, bound)
+            )
         dmanifest = (
             self._build_dv_manifest(snap, matches) if snap else None
         )
@@ -4699,12 +4664,9 @@ class LakeTable:
         )
         phys, pcols = self._apply_partition_transforms(phys)
         out_dir = os.path.join(self.table_dir, "data", f"merge-{uuid.uuid4().hex}")
-        writer = phys.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(out_dir)
-        new_entries: list[dict[str, Any]] = self._harvest_dir(
-            out_dir, drop_empty=True
+        bound = self._merge_write_bound(affected, source, key_sample)
+        new_entries = self._harvest_rewrite(
+            self._write_frame(phys, out_dir, pcols, bound)
         )
         manifest = self._write_manifest(
             sorted(untouched + new_entries, key=lambda e: e["file_path"])
@@ -4763,11 +4725,12 @@ class LakeTable:
         phys_branches = [
             {mapping.get(c, c): v for c, v in b.items()} for b in branches
         ]
-        partial = sorted(
-            f["file_path"]
+        partial_files = [
+            f
             for f in affected
             if not any(_file_fully_matches(f, pb) for pb in phys_branches)
-        )
+        ]
+        partial = sorted(f["file_path"] for f in partial_files)
         new_entries: list[dict[str, Any]] = []
         if partial:
             from pyspark.sql import functions as _F
@@ -4791,11 +4754,10 @@ class LakeTable:
             keep_cond = ~_F.coalesce(matched, _F.lit(False))
             survivors, pcols = self._apply_partition_transforms(df.filter(keep_cond))
             out_dir = os.path.join(self.table_dir, "data", f"delete-{uuid.uuid4().hex}")
-            writer = survivors.write.mode("overwrite")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(out_dir)
-            new_entries = self._harvest_dir(out_dir, drop_empty=True)
+            bound = sum(f["record_count"] for f in partial_files)
+            new_entries = self._harvest_rewrite(
+                self._write_frame(survivors, out_dir, pcols, bound)
+            )
         manifest = self._write_manifest(
             sorted(untouched + new_entries, key=lambda e: e["file_path"])
         )
@@ -4962,12 +4924,9 @@ class LakeTable:
         out_dir = os.path.join(
             self.table_dir, "data", f"update-{uuid.uuid4().hex}"
         )
-        writer = phys.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(out_dir)
-        new_entries: list[dict[str, Any]] = self._harvest_dir(
-            out_dir, drop_empty=True
+        bound = sum(f["record_count"] for f in affected)
+        new_entries = self._harvest_rewrite(
+            self._write_frame(phys, out_dir, pcols, bound)
         )
         dmanifest = self._build_dv_manifest(snap, matches)
         if dmanifest is None and not new_entries:
@@ -5100,12 +5059,9 @@ class LakeTable:
         )
         phys, pcols = self._apply_partition_transforms(phys)
         out_dir = os.path.join(self.table_dir, "data", f"update-{uuid.uuid4().hex}")
-        writer = phys.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(out_dir)
-        new_entries: list[dict[str, Any]] = self._harvest_dir(
-            out_dir, drop_empty=True
+        bound = sum(f["record_count"] for f in affected)
+        new_entries = self._harvest_rewrite(
+            self._write_frame(phys, out_dir, pcols, bound)
         )
         manifest = self._write_manifest(
             sorted(untouched + new_entries, key=lambda e: e["file_path"])

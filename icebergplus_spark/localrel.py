@@ -49,15 +49,31 @@ def local_rows_df(
         Row(**{n: r.get(n) for n in schema.names}) if isinstance(r, dict) else r
         for r in rows
     ]
+    df = spark.createDataFrame(rows_to_arrow(rows, schema), schema)
+    df._lake_local_rows = rows  # type: ignore[attr-defined]
+    return df
+
+
+def rows_to_arrow(rows: list, schema: StructType) -> pa.Table:
+    """``rows`` (tuples or ``Row``, positional) as a ``pyarrow.Table``
+    against ``schema``, each row passed through ``StructType.toInternal``
+    so values mean what they mean to ``createDataFrame(list, schema)``."""
     arrow_schema = to_arrow_schema(schema)
     cols = list(zip(*map(schema.toInternal, rows))) or [()] * len(schema)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
-    df = spark.createDataFrame(table, schema)
-    df._lake_local_rows = rows  # type: ignore[attr-defined]
-    return df
+
+
+def local_relation_rows(df: DataFrame) -> int | None:
+    """The row count of ``df`` when its optimized plan is a
+    ``LocalRelation`` (SQL ``VALUES``, ``local_rows_df``, and projections
+    Spark folds into them), whose ``collect()`` runs no job; else None."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return plan.data().size()
 
 
 def attached_rows(df: DataFrame) -> list | None:

@@ -1,20 +1,25 @@
-"""Driver-side tiny-batch write path (r12 optimization).
+"""The one data-file writer, ``LakeTable._write_frame``.
 
-``LakeTable._write_rows_driver`` writes local_rows_df batches as one
-pyarrow parquet file instead of running a Spark write job. These tests
-prove the fast path is INVISIBLE: scans, footer-stat harvests, folds and
-commits must be byte-for-byte-in-effect identical to the Spark write it
-replaces, and every gated shape must decline to the Spark path rather
-than write something different.
+Small, unpartitioned, unsorted frames of scalar columns whose row count
+the caller bounds before running anything (local-relation sources,
+copy-on-write rewrites of small files) are pulled to the driver and
+written as one pyarrow parquet file instead of a Spark write job. These
+tests prove the driver path is INVISIBLE: scans, every harvested stat,
+folds and commits equal what Spark's writer produces, and every gated
+shape takes Spark's writer instead of writing something different.
 """
 
 import datetime
 import decimal
+import json
+import math
 import os
 
+import pandas as pd
 import pytest
 
 from icebergplus_spark.lake import LocalLakeCatalog
+from icebergplus_spark.lake.sql_dml import lake_sql
 from icebergplus_spark.localrel import local_rows_df
 
 
@@ -23,74 +28,170 @@ def cat(spark, tmp_path):
     return LocalLakeCatalog(spark, str(tmp_path)).start()
 
 
+def _jobs(spark):
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids) if ids else -1
+
+
+def _spark_wrote(out_dir):
+    """Spark's file committer leaves ``_SUCCESS``; the driver path never
+    does."""
+    return os.path.exists(os.path.join(out_dir, "_SUCCESS"))
+
+
+def _driver_wrote_one_file(out_dir):
+    names = os.listdir(out_dir)
+    return len(names) == 1 and names[0].endswith(".parquet")
+
+
 ALL_TYPES_DDL = (
-    "b boolean, i int, l long, f float, d double, s string, "
-    "bin binary, dt date, ts timestamp"
+    "b boolean, y tinyint, sh smallint, i int, l long, f float, d double, "
+    "s string, bin binary, dt date, ts timestamp, tsn timestamp_ntz"
 )
 
-ROWS = [
+NAN = float("nan")
+
+ALL_TYPES_ROWS = [
     (
-        True,
-        7,
-        7_000_000_000,
-        1.5,
-        2.25,
-        "hello",
-        b"\x01\x02",
+        True, 127, 32767, 7, 7_000_000_000, 1.5, 2.25, "hello", b"\x01\x02",
         datetime.date(1996, 3, 1),
+        datetime.datetime(1996, 3, 1, 12, 30, 45, 123456),
         datetime.datetime(1996, 3, 1, 12, 30, 45, 123456),
     ),
     (
-        False,
-        -3,
-        -1,
-        -0.5,
-        -9.75,
-        "zz-top",
-        b"\xff",
+        False, -128, -32768, -3, -1, -0.0, 0.0, "", b"",
         datetime.date(2001, 12, 31),
         datetime.datetime(2001, 12, 31, 23, 59, 59),
+        datetime.datetime(2038, 1, 19, 3, 14, 8),
     ),
-    (None, None, None, None, None, None, None, None, None),
+    (
+        None, 0, 5, None, 0, 0.0, -0.0, "zz-top", b"\xff", None,
+        datetime.datetime(1970, 1, 1, 0, 0, 0),
+        None,
+    ),
+    (None, None, None, 2, None, -2.5, 1e300, None, None,
+     datetime.date(1969, 12, 31), None, datetime.datetime(1900, 1, 1)),
+    (None,) * 12,
 ]
 
 
-def _mk(spark, ddl):
+ENTRY_STATS = (
+    "record_count",
+    "column_mins",
+    "column_maxs",
+    "column_null_counts",
+    "column_nan_counts",
+    "column_sums",
+    "column_distincts",
+    "column_blooms",
+    "column_hlls",
+)
+
+
+def _canon_stat(v):
+    """A stat value for comparison: JSON text decoded and re-encoded
+    with sorted keys, so NaN compares equal to NaN."""
+    if isinstance(v, str):
+        v = json.loads(v)
+    return json.dumps(v, sort_keys=True, default=str)
+
+
+def _row_key(t):
+    return tuple(
+        (v is None, isinstance(v, float) and math.isnan(v), repr(v)) for v in t
+    )
+
+
+def _two_tables(spark, cat, ddl, name):
     from pyspark.sql.types import _parse_datatype_string
 
-    return _parse_datatype_string(ddl)
+    schema = _parse_datatype_string(ddl)
+    tables = []
+    for side in ("fast", "slow"):
+        t = cat.create_table(f"{name}.{side}", schema, bloom_cols=["s", "l"])
+        t.set_property("write.stats.hll-columns", "s,i")
+        tables.append(t)
+    return schema, tables
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+def test_stats_parity_whole_entry(spark, cat, tz):
+    """The same rows through the driver path and through Spark's writer
+    harvest the same entry, field for field: every accepted type, ±0.0
+    doubles, nulls, empty strings and bytes, byte/short, date,
+    ``timestamp`` under the given session time zone and
+    ``timestamp_ntz``."""
+    rows = ALL_TYPES_ROWS
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        schema, (fast, slow) = _two_tables(
+            spark, cat, ALL_TYPES_DDL, f"p{tz.replace('/', '_').lower()}"
+        )
+        fast.append(local_rows_df(spark, rows, schema))
+        slow.append(spark.createDataFrame(rows, schema).coalesce(1))
+        ea, eb = fast.plan_files(), slow.plan_files()
+        assert len(ea) == len(eb) == 1
+        assert not _spark_wrote(os.path.dirname(ea[0]["file_path"]))
+        assert _spark_wrote(os.path.dirname(eb[0]["file_path"]))
+        for key in ENTRY_STATS:
+            assert key in ea[0], key
+            assert _canon_stat(ea[0].get(key)) == _canon_stat(eb[0].get(key)), key
+        a = sorted(map(tuple, fast.scan().collect()), key=_row_key)
+        b = sorted(map(tuple, slow.scan().collect()), key=_row_key)
+        assert [_row_key(r) for r in a] == [_row_key(r) for r in b]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
 def test_driver_write_taken_and_equals_spark_write(spark, cat):
     """Same rows through both writers: identical scan results, identical
     harvested footer stats (min/max/null counts), and the driver path
     really produced exactly one file without a Spark job."""
-    schema = _mk(spark, ALL_TYPES_DDL)
+    from pyspark.sql.types import _parse_datatype_string
+
+    ddl = (
+        "b boolean, i int, l long, f float, d double, s string, "
+        "bin binary, dt date, ts timestamp"
+    )
+    rows = [
+        (
+            True, 7, 7_000_000_000, 1.5, 2.25, "hello", b"\x01\x02",
+            datetime.date(1996, 3, 1),
+            datetime.datetime(1996, 3, 1, 12, 30, 45, 123456),
+        ),
+        (
+            False, -3, -1, -0.5, -9.75, "zz-top", b"\xff",
+            datetime.date(2001, 12, 31),
+            datetime.datetime(2001, 12, 31, 23, 59, 59),
+        ),
+        (None,) * 9,
+    ]
+    schema = _parse_datatype_string(ddl)
     t_fast = cat.create_table("t.fast", schema)
     t_slow = cat.create_table("t.slow", schema)
 
-    df_local = local_rows_df(spark, ROWS, schema)
-    assert t_fast._write_rows_driver(ROWS, schema, os.path.join(
-        t_fast.table_dir, "data", "probe"
-    )) is not None  # the gate accepts this shape
+    df_local = local_rows_df(spark, rows, schema)
+    probe = os.path.join(t_fast.table_dir, "data", "probe")
+    before = _jobs(spark)
+    t_fast._write_frame(df_local, probe, [], 3)
+    assert _jobs(spark) == before  # a local relation: no job at all
+    assert _driver_wrote_one_file(probe)  # the gate accepts this shape
     t_fast.append(df_local)
 
-    # Spark-writer control: same rows, attachment stripped
-    df_spark = spark.createDataFrame(ROWS, schema).coalesce(1)
+    # Spark-writer control: same rows, not a local relation
+    df_spark = spark.createDataFrame(rows, schema).coalesce(1)
     t_slow.append(df_spark)
 
-    key = lambda t: tuple((v is None, v) for v in t)  # noqa: E731
-    a = sorted(map(tuple, t_fast.scan().collect()), key=key)
-    b = sorted(map(tuple, t_slow.scan().collect()), key=key)
-    assert a == b == sorted(map(tuple, ROWS), key=key)
+    a = sorted(map(tuple, t_fast.scan().collect()), key=_row_key)
+    b = sorted(map(tuple, t_slow.scan().collect()), key=_row_key)
+    assert a == b == sorted(map(tuple, rows), key=_row_key)
 
     # exactly one driver-written file
     fa = t_fast.snapshot()
     assert fa["summary"]["added-data-files"] == 1
 
     # footer-harvest equality: the stats every fold/prune tier reads
-    import json
-
     ea = t_fast.plan_files()
     eb = t_slow.plan_files()
     assert len(ea) == len(eb) == 1
@@ -104,9 +205,9 @@ def test_driver_write_taken_and_equals_spark_write(spark, cat):
 def test_fold_reads_driver_written_stats(spark, cat):
     """MAX/COUNT folds answer from a driver-written file's footer stats
     exactly as from a Spark-written one."""
-    from icebergplus_spark.lake.sql_dml import lake_sql
+    from pyspark.sql.types import _parse_datatype_string
 
-    schema = _mk(spark, "wm timestamp")
+    schema = _parse_datatype_string("wm timestamp")
     t = cat.create_table("t.cp", schema)
     rows = [
         (datetime.datetime(2024, 1, 5, 0, 0, 0),),
@@ -123,13 +224,12 @@ def test_insert_select_fold_roundtrip(spark, cat):
     then read the watermark back — through lake_sql only."""
     from pyspark.sql import functions as F
 
-    from icebergplus_spark.lake.sql_dml import lake_sql
     from icebergplus_spark.sources import load_table
 
     orders = load_table(spark, "/root/testdata/sf0.001", "orders")
     t = cat.create_table("t.ord", orders.schema)
     t.append(orders)
-    cp = cat.create_table(
+    cat.create_table(
         "t.cp2", orders.select(F.col("o_orderdate").alias("wm")).limit(0).schema
     )
     lake_sql(cat, "INSERT INTO t.cp2 SELECT MAX(o_orderdate) AS wm FROM t.ord")
@@ -138,45 +238,257 @@ def test_insert_select_fold_roundtrip(spark, cat):
     assert got == expect
 
 
-def test_declines_to_spark_path(spark, cat):
-    """Every gate: partitioned table, sort order, type coercion, long
-    strings, >4096 rows, nested types — all return None (Spark path)."""
-    schema = _mk(spark, "k int, s string")
+# -- the copy-on-write statements of a small file ---------------------------
+
+FACT_DDL = "k bigint, g int, q bigint, note string"
+CASTS = "CAST(k AS BIGINT) AS k, CAST(g AS INT) AS g, CAST(q AS BIGINT) AS q, note"
+
+
+def _values(rows):
+    return ", ".join(f"({k}, {g}, {q}, '{n}')" for k, g, q, n in rows)
+
+
+def _fact(spark, cat, name):
+    """One 8-row file written by Spark, and its pandas model."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(FACT_DDL)
+    rows = [(k, k % 3, 10 * k, f"n{k}") for k in range(0, 16, 2)]
+    t = cat.create_table(name, schema)
+    t.append(spark.createDataFrame(rows, schema).coalesce(1))
+    return pd.DataFrame(rows, columns=["k", "g", "q", "note"])
+
+
+def _paths(cat, name):
+    return {f["file_path"] for f in cat.load_table(name).plan_files()}
+
+
+def _run_one_driver_file(cat, name, sql, model):
+    """Run ``sql``; it must commit exactly one new data file, alone in a
+    directory with no ``_SUCCESS`` or ``_temporary``, and leave the
+    table equal to ``model``. Returns the Spark jobs the statement ran."""
+    spark = cat.spark
+    before = _paths(cat, name)
+    jobs0 = _jobs(spark)
+    lake_sql(cat, sql)
+    jobs = _jobs(spark) - jobs0
+    t = cat.load_table(name)
+    assert t.snapshot()["summary"]["added-data-files"] == 1
+    (new,) = _paths(cat, name) - before
+    assert _driver_wrote_one_file(os.path.dirname(new)), os.listdir(
+        os.path.dirname(new)
+    )
+    got = sorted(tuple(r) for r in t.scan().select("k", "g", "q", "note").collect())
+    want = sorted(
+        (int(k), int(g), int(q), n) for k, g, q, n in model.itertuples(index=False)
+    )
+    assert got == want
+    return jobs
+
+
+def test_cow_statements_on_small_file_write_one_driver_file(spark, cat):
+    """A copy-on-write DELETE, UPDATE and MERGE of one small file, and an
+    ``INSERT … VALUES``, each commit exactly one driver-written data
+    file, and the scans equal the pandas model."""
+    name = "db.fact"
+    model = _fact(spark, cat, name)
+
+    model = model[~model.k.isin([2, 6])]
+    _run_one_driver_file(cat, name, f"DELETE FROM {name} WHERE k IN (2, 6)", model)
+
+    model = model.assign(
+        q=[q + 7 if 4 <= k <= 10 else q for k, q in zip(model.k, model.q)]
+    )
+    _run_one_driver_file(
+        cat, name, f"UPDATE {name} SET q = q + 7 WHERE k BETWEEN 4 AND 10", model
+    )
+
+    src = [(4, 1, 999, "n4"), (5, 2, 55, "n5")]
+    model = model.assign(q=[999 if k == 4 else q for k, q in zip(model.k, model.q)])
+    model = pd.concat(
+        [model, pd.DataFrame([src[1]], columns=["k", "g", "q", "note"])]
+    )
+    _run_one_driver_file(
+        cat,
+        name,
+        f"MERGE INTO {name} t USING (SELECT {CASTS} FROM VALUES {_values(src)} "
+        f"AS v(k, g, q, note)) s ON t.k = s.k "
+        f"WHEN MATCHED THEN UPDATE SET q = s.q WHEN NOT MATCHED THEN INSERT *",
+        model,
+    )
+
+    ins = [(100, 1, 1, "n100"), (101, 2, 2, "n101"), (102, 0, 3, "n102")]
+    model = pd.concat([model, pd.DataFrame(ins, columns=["k", "g", "q", "note"])])
+    _run_one_driver_file(
+        cat,
+        name,
+        f"INSERT INTO {name} SELECT {CASTS} FROM VALUES {_values(ins)} "
+        f"AS v(k, g, q, note)",
+        model,
+    )
+
+
+def test_insert_values_runs_no_spark_job(spark, cat):
+    name = "db.ins"
+    model = _fact(spark, cat, name)
+    ins = [(200, 1, 1, "n200"), (201, 2, 2, "n201")]
+    model = pd.concat([model, pd.DataFrame(ins, columns=["k", "g", "q", "note"])])
+    jobs = _run_one_driver_file(
+        cat,
+        name,
+        f"INSERT INTO {name} SELECT {CASTS} FROM VALUES {_values(ins)} "
+        f"AS v(k, g, q, note)",
+        model,
+    )
+    assert jobs == 0
+
+
+# -- declines ---------------------------------------------------------------
+
+
+def test_declines_to_spark_path(spark, cat, tmp_path):
+    """Every gate takes Spark's writer: partitioned output, a declared
+    sort order, decimal, nested types, a >256-byte string, a NaN float,
+    a bound above 4,096 rows and an unknown bound."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string("k int, s string")
     rows = [(1, "a"), (2, "b")]
+    df = local_rows_df(spark, rows, schema)
+    n = iter(range(100))
+
+    def out():
+        return str(tmp_path / f"out{next(n)}")
 
     part = cat.create_table("t.p", schema, partition_cols=["k"])
-    assert part._write_rows_driver(rows, schema, "/tmp/x") is None
+    d = out()
+    part._write_frame(df, d, ["k"], 2)
+    assert _spark_wrote(d)
 
     t = cat.create_table("t.g", schema)
     t.set_property("write.sort-order", "k")
-    assert t._write_rows_driver(rows, schema, "/tmp/x") is None
+    d = out()
+    t._write_frame(df, d, [], 2)
+    assert _spark_wrote(d)
     t.set_property("write.sort-order", "")
+    d = out()
+    t._write_frame(df, d, [], 2)
+    assert not _spark_wrote(d) and _driver_wrote_one_file(d)  # the control
 
-    wrong = _mk(spark, "k long, s string")  # k needs a cast
-    assert t._write_rows_driver(rows, wrong, "/tmp/x") is None
+    long_s = local_rows_df(spark, [(1, "x" * 300)], schema)
+    d = out()
+    t._write_frame(long_s, d, [], 1)
+    assert _spark_wrote(d)
 
-    long_s = [(1, "x" * 300)]
-    assert t._write_rows_driver(long_s, schema, "/tmp/x") is None
+    # parquet-mr records a NaN as the column max, parquet-cpp skips it
+    for ddl in ("k int, x double", "k int, x float"):
+        fs = _parse_datatype_string(ddl)
+        d = out()
+        t._write_frame(local_rows_df(spark, [(1, 1.0), (2, NAN)], fs), d, [], 2)
+        assert _spark_wrote(d), ddl
 
-    many = [(i, "v") for i in range(5000)]
-    assert t._write_rows_driver(many, schema, "/tmp/x") is None
+    many = local_rows_df(spark, [(i, "v") for i in range(5000)], schema)
+    d = out()
+    t._write_frame(many, d, [], 5000)
+    assert _spark_wrote(d)
+    d = out()
+    t._write_frame(df, d, [], t.DRIVER_WRITE_MAX_ROWS + 1)
+    assert _spark_wrote(d)
+    d = out()
+    t._write_frame(df, d, [], None)
+    assert _spark_wrote(d)
 
-    nested = _mk(spark, "k int, s array<int>")
+    nested = _parse_datatype_string("k int, s array<int>")
     tn = cat.create_table("t.n", nested)
-    assert tn._write_rows_driver([(1, [1, 2])], nested, "/tmp/x") is None
+    d = out()
+    tn._write_frame(local_rows_df(spark, [(1, [1, 2])], nested), d, [], 1)
+    assert _spark_wrote(d)
 
     # decimal declines: parquet-cpp/mr footer-stat parity (see impl)
-    dec = _mk(spark, "k int, d decimal(12,3)")
+    dec = _parse_datatype_string("k int, d decimal(12,3)")
     td = cat.create_table("t.dec", dec)
-    assert td._write_rows_driver(
-        [(1, decimal.Decimal("1.5"))], dec, "/tmp/x"
-    ) is None
+    d = out()
+    td._write_frame(
+        local_rows_df(spark, [(1, decimal.Decimal("1.5"))], dec), d, [], 1
+    )
+    assert _spark_wrote(d)
+
+
+def test_timestamps_in_dst_process_pull_with_arrow(spark, cat, tmp_path, monkeypatch):
+    """collect() returns TIMESTAMP values as naive local datetimes, which
+    a DST-observing process cannot always map back to one instant: there
+    a local frame with a TIMESTAMP column is pulled with toArrow() (one
+    job) and still written on the driver, with the same instants."""
+    import time
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string("k int, ts timestamp")
+    t = cat.create_table("t.ts", schema)
+    rows = [(1, datetime.datetime(2024, 11, 3, 1, 30)), (2, None)]
+    df = local_rows_df(spark, rows, schema)
+    d_utc, d_dst = str(tmp_path / "utc"), str(tmp_path / "dst")
+    before = _jobs(spark)
+    t._write_frame(df, d_utc, [], 2)
+    assert _jobs(spark) == before
+    monkeypatch.setattr(time, "daylight", 1)
+    t._write_frame(df, d_dst, [], 2)
+    assert _jobs(spark) == before + 1
+    assert _driver_wrote_one_file(d_utc) and _driver_wrote_one_file(d_dst)
+    a, b = (pq.read_table(os.path.join(d, os.listdir(d)[0])) for d in (d_utc, d_dst))
+    assert a.equals(b)
+
+
+def test_coerced_local_batch_writes_declared_types(spark, cat):
+    """A local batch whose types differ from the table's is cast before
+    the writer sees it: the driver-written file carries the declared
+    physical types, and the rows read back unchanged."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string("k int, s string")
+    t = cat.create_table("t.c", schema)
+    wide = _parse_datatype_string("k long, s string")
+    t.append(local_rows_df(spark, [(1, "a"), (2, "b")], wide))
+    (entry,) = t.plan_files()
+    assert not _spark_wrote(os.path.dirname(entry["file_path"]))
+    assert str(pq.read_schema(entry["file_path"]).field("k").type) == "int32"
+    assert sorted(map(tuple, t.scan().collect())) == [(1, "a"), (2, "b")]
+
+
+def test_merge_with_non_local_source_takes_spark_writer(spark, cat):
+    """A MERGE whose source is a table scan has no row bound before it
+    runs: its rewrite takes Spark's writer."""
+    name = "db.m"
+    model = _fact(spark, cat, name)
+    from pyspark.sql.types import _parse_datatype_string
+
+    src_t = cat.create_table("db.src", _parse_datatype_string(FACT_DDL))
+    src_t.append(
+        spark.createDataFrame([(4, 1, 77, "n4")], FACT_DDL).coalesce(1)
+    )
+    lake_sql(
+        cat,
+        f"MERGE INTO {name} t USING db.src s ON t.k = s.k "
+        f"WHEN MATCHED THEN UPDATE SET q = s.q WHEN NOT MATCHED THEN INSERT *",
+    )
+    t = cat.load_table(name)
+    dirs = {os.path.dirname(f["file_path"]) for f in t.plan_files()}
+    assert len(dirs) == 1 and _spark_wrote(dirs.pop())
+    model = model.assign(q=[77 if k == 4 else q for k, q in zip(model.k, model.q)])
+    got = sorted(tuple(r) for r in t.scan().select("k", "g", "q", "note").collect())
+    assert got == sorted(
+        (int(k), int(g), int(q), n) for k, g, q, n in model.itertuples(index=False)
+    )
 
 
 def test_declined_append_still_correct(spark, cat):
     """A declined local frame (long strings) still appends correctly via
     the Spark path."""
-    schema = _mk(spark, "k int, s string")
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string("k int, s string")
     t = cat.create_table("t.d", schema)
     rows = [(1, "y" * 400), (2, "z")]
     t.append(local_rows_df(spark, rows, schema))
@@ -185,7 +497,9 @@ def test_declined_append_still_correct(spark, cat):
 
 
 def test_empty_local_append_commits_no_files(spark, cat):
-    schema = _mk(spark, "k int, s string")
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string("k int, s string")
     t = cat.create_table("t.e", schema)
     t.append(local_rows_df(spark, [], schema))
     assert t.scan().count() == 0
@@ -196,9 +510,11 @@ def test_constraint_violation_message_and_pass(spark, cat):
     """The fused one-action constraint check keeps exact behavior: clean
     batches pass, violating batches raise with the same message shape
     (constraint name, expression, example row)."""
+    from pyspark.sql.types import _parse_datatype_string
+
     from icebergplus_spark.lake.table import ConstraintViolation
 
-    schema = _mk(spark, "k int, v int")
+    schema = _parse_datatype_string("k int, v int")
     t = cat.create_table("t.c", schema)
     t.add_constraint("v_pos", "v > 0")
     t.append(local_rows_df(spark, [(1, 5), (2, 6)], schema))

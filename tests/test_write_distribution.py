@@ -243,54 +243,91 @@ def test_rewrite_paths_harvest_distributed_equivalence(spark, tmp_path):
     """The rewrite paths (UPDATE / MERGE / DELETE CoW / compact) harvest
     their output files through the same batched ``_harvest_data_files``
     as append (r12 `_harvest_dir`), so past the distributed threshold
-    the column reads fan out instead of running driver-serial. Stats
-    and data must be identical either side of the threshold."""
-    import json as _json
-
+    the column reads fan out instead of running driver-serial. The SAME
+    written files must harvest to identical entries on either side of
+    the threshold, and each entry a rewrite committed must equal them.
+    (Two independently built tables are not comparable: row ids follow
+    the sorted order of uuid-named files.) Row lineage is checked per
+    logical row."""
     from icebergplus_spark.lake import compact
 
-    def build(root, threshold):
-        cat = LocalLakeCatalog(spark, root).start()
-        t = cat.create_table("db.rw", SCHEMA, bloom_cols=["v"])
-        t.set_property(
-            "write.stats-harvest.distributed-threshold", str(threshold)
+    cat = LocalLakeCatalog(spark, str(tmp_path / "wh")).start()
+    t = cat.create_table("db.rw", SCHEMA, bloom_cols=["v"])
+    t.set_property("write.stats-harvest.distributed-threshold", "0")
+    t.refresh()
+    for lo in (0, 120):
+        t.append(
+            spark.createDataFrame(
+                [(f"p{i % 3}", i) for i in range(lo, lo + 120)], SCHEMA
+            ).repartition(4)
         )
-        t.refresh()
-        for lo in (0, 120):
-            t.append(
-                spark.createDataFrame(
-                    [(f"p{i % 3}", i) for i in range(lo, lo + 120)], SCHEMA
-                ).repartition(4)
-            )
-        t.update_where({"part": ("=", "p1")}, {"v": F.col("v") + 1000})
-        t.delete({"v": (">", 1300)})
-        src = spark.createDataFrame([("px", 7), ("py", 8)], SCHEMA)
-        t.merge_into(
-            src,
+
+    def ids():
+        return {
+            (r["part"], r["v"]): r["_row_id"]
+            for r in t.scan_with_lineage().collect()
+        }
+
+    born = ids()
+    committed = {f["file_path"]: f for f in t.plan_files()}
+
+    def step(op):
+        nonlocal t
+        op()
+        t = cat.load_table("db.rw")
+        new = [f for f in t.plan_files() if f["file_path"] not in committed]
+        assert new  # every rewrite below commits files of its own
+        committed.update((f["file_path"], f) for f in new)
+
+    step(lambda: t.update_where({"part": ("=", "p1")}, {"v": F.col("v") + 1000}))
+    step(lambda: t.delete({"v": (">", 1200)}))
+    step(
+        lambda: t.merge_into(
+            spark.createDataFrame([("px", 7), ("py", 8)], SCHEMA),
             on=["v"],
             when_matched_update={"part": F.col("src_part")},
             when_not_matched_insert=True,
         )
-        compact(t, target_file_size=1 << 20, small_file_threshold=1 << 20)
-        stats = sorted(
-            repr(
-                (
-                    _json.loads(f["column_mins"]),
-                    _json.loads(f["column_maxs"]),
-                    _json.loads(f["column_null_counts"]),
-                    f.get("column_blooms"),
-                    f["record_count"],
-                )
-            )
-            for f in t.plan_files()
+    )
+    # a second file for compaction to fold in
+    step(lambda: t.append(spark.createDataFrame([("pz", 5000)], SCHEMA)))
+    step(
+        lambda: compact(
+            t, target_file_size=1 << 20, small_file_threshold=1 << 20
         )
-        rows = sorted(map(tuple, t.scan().collect()))
-        return stats, rows
+    )
 
-    d_stats, d_rows = build(str(tmp_path / "wh_driver"), 10_000)
-    x_stats, x_rows = build(str(tmp_path / "wh_dist"), 0)
-    assert d_rows == x_rows
-    assert d_stats == x_stats
+    def harvest(threshold):
+        t.set_property(
+            "write.stats-harvest.distributed-threshold", str(threshold)
+        )
+        t.refresh()
+        return {e["file_path"]: e for e in t._harvest_data_files(list(committed))}
+
+    driver, dist = harvest(10_000), harvest(0)
+    assert set(driver) == set(dist) == set(committed)
+    for path, d in driver.items():
+        x = dist[path]
+        for key in set(d) | set(x):
+            assert d.get(key) == x.get(key), (path, key)
+        for key in d:
+            assert committed[path].get(key) == d[key], (path, key)
+
+    # lineage per logical row: survivors and the updated p1 rows keep
+    # their id, the MERGE-updated row keeps its id under its new part,
+    # the deleted rows are gone, and the inserted rows get fresh ids
+    want = {}
+    for (part, v), rid in born.items():
+        if part == "p1":
+            v += 1000
+        if v > 1200:
+            continue
+        want[("py" if v == 8 else part, v)] = rid
+    got = ids()
+    new = {got.pop(("px", 7)), got.pop(("pz", 5000))}
+    assert got == want
+    assert len(new) == 2 and not new & set(born.values())
+    assert len(set(got.values()) | new) == len(got) + 2
 
 
 def test_delete_file_harvest_distributed_equivalence(spark, tmp_path):
