@@ -258,7 +258,7 @@ class LocalLakeCatalog:
             "snapshots": [],
             "current_snapshot_id": None,
         }
-        self.commit_io.publish(meta_dir, 1, json.dumps(meta, indent=1))
+        self.commit_io.publish(meta_dir, 1, json.dumps(meta, separators=(",", ":")))
         with open(self._pointer_file(identifier), "w") as f:
             json.dump({"table_dir": table_dir}, f)
         return self.load_table(identifier)
@@ -353,7 +353,7 @@ class LocalLakeCatalog:
                     shutil.copy2(
                         os.path.join(src._meta_dir, m), os.path.join(meta_dir, m)
                     )
-        self.commit_io.publish(meta_dir, 1, json.dumps(meta, indent=1))
+        self.commit_io.publish(meta_dir, 1, json.dumps(meta, separators=(",", ":")))
         with open(self._pointer_file(dst_identifier), "w") as f:
             json.dump({"table_dir": table_dir}, f)
         # register the clone on the SOURCE: its data files are now shared,

@@ -184,12 +184,9 @@ def compact(
     # of mostly-sequential values — negligible bytes at any scale.
     small_paths = [f["file_path"] for f in small]
     carry_lineage = "row_id_assignments" in table._meta or bool(
-        table._materialized_lineage_paths(snap) & set(small_paths)
+        table._materialized_lineage_paths(snap, small_paths)
     )
-    if carry_lineage:
-        df = table._lineage_frame(snap, small_paths)
-    else:
-        df = table._read_live(small_paths, snap)
+    df = table._rewrite_input(snap, small, carry_lineage)
     if zorder_by and sort_by:
         raise ValueError("pass either sort_by or zorder_by, not both")
     if zorder_by:
@@ -607,7 +604,7 @@ def expire_snapshots(
             for p, v in meta["row_id_assignments"].items()
             if p in keep_data
         }
-    table.io.publish(table._meta_dir, version, json.dumps(meta, indent=1))
+    table.io.publish(table._meta_dir, version, json.dumps(meta, separators=(",", ":")))
     table.refresh()
     return {"expired": len(expired), "deleted_files": deleted}
 

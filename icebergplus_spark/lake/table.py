@@ -24,10 +24,14 @@ footers at write time — the same stats Iceberg collects via
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
+import operator
 import os
+import re
 import time
+import unicodedata
 import uuid
 from typing import Any
 
@@ -306,11 +310,33 @@ def _ddl_of(arrow_schema: "pa.Schema") -> str:
     )
 
 
+# Characters java.net.URI may percent-encode in a path, which is how
+# Hadoop turns a plain path into the URI Spark reports: every ASCII
+# character outside "unreserved / punct / @ /", and non-ASCII spaces and
+# controls. Other non-ASCII characters stay as they are.
+_URI_UNSAFE = re.compile(r"[^-A-Za-z0-9_.!~*'();:&=+$,/@]")
+
+
+def _uri_escape(m: "re.Match[str]") -> str:
+    ch = m.group(0)
+    if ch > "\x7f" and unicodedata.category(ch) not in ("Cc", "Zs", "Zl", "Zp"):
+        return ch
+    return "".join(f"%{b:02X}" for b in ch.encode("utf-8"))
+
+
+@functools.lru_cache(maxsize=1 << 16)
+def _file_uri(abs_path: str) -> str:
+    return "file:" + _URI_UNSAFE.sub(_uri_escape, abs_path)
+
+
 def _as_uri(path: str) -> str:
-    """Spark's _metadata.file_path is a Hadoop-form file URI
-    (``file:/abs/path`` — single slash, unencoded); manifests store
-    plain paths. One canonical form for joins/lookups."""
-    return path if path.startswith("file:") else "file:" + os.path.abspath(path)
+    """A plain data-file path (what manifests store) as exactly the
+    string Spark's ``_metadata.file_path`` reports for it: a Hadoop-form
+    file URI (``file:/abs/path``, single slash) with the characters
+    ``java.net.URI`` quotes percent-encoded (space → ``%20``, ``%`` →
+    ``%25``, ``#`` → ``%23``). One canonical form for joins/lookups;
+    planning calls it per file, hence the cache."""
+    return path if path.startswith("file:") else _file_uri(os.path.abspath(path))
 
 
 def _harvest_footer(path: str) -> dict[str, Any]:
@@ -998,7 +1024,9 @@ class LakeTable:
                     f"{self.identifier}: head metadata held by transaction "
                     f"{head_txn['id']} — refresh() and retry"
                 )
-        self.io.publish(self._meta_dir, version, json.dumps(meta, indent=1))
+        self.io.publish(
+            self._meta_dir, version, json.dumps(meta, separators=(",", ":"))
+        )
         return self.refresh()
 
     # -- table properties (Iceberg ALTER TABLE SET TBLPROPERTIES parity) ----
@@ -1708,7 +1736,9 @@ class LakeTable:
                     f"{self.identifier}: expected metadata v{version - 1}, found "
                     f"v{on_disk} — refresh() and retry"
                 )
-            self.io.publish(self._meta_dir, version, json.dumps(meta, indent=1))
+            self.io.publish(
+                self._meta_dir, version, json.dumps(meta, separators=(",", ":"))
+            )
         self.refresh()
         s = snapshot["summary"]
         self.reporter.report(
@@ -2262,10 +2292,13 @@ class LakeTable:
     LINEAGE_ID_COL = "__lineage_row_id"
     LINEAGE_BIRTH_COL = "__lineage_birth"
 
-    def _materialized_lineage_paths(self, snap: dict[str, Any]) -> set[str]:
+    def _materialized_lineage_paths(
+        self, snap: dict[str, Any], paths: list[str] | None = None
+    ) -> set[str]:
         """Live data files carrying materialized lineage columns: the
         union of every snapshot's recorded rewrite outputs, restricted
-        to this snapshot's file set (an O(metadata) walk, no I/O)."""
+        to ``paths`` (files of ``snap``) or else to the snapshot's whole
+        file set (an O(metadata) walk plus its manifests' paths)."""
         mat: set[str] = set()
         for s in self._meta["snapshots"]:
             mat.update(s.get("lineage_files") or [])
@@ -2273,10 +2306,13 @@ class LakeTable:
         # live — expire_snapshots re-homes their lineage_files records
         # here so 'ids survive compaction' survives maintenance too
         mat.update(self._meta.get("materialized_lineage_files") or [])
-        return mat & set(self._snapshot_paths(snap))
+        return mat & set(self._snapshot_paths(snap) if paths is None else paths)
 
     def _lineage_assignments(
-        self, snap: dict[str, Any], subset: list[str], all_paths: list[str]
+        self,
+        snap: dict[str, Any],
+        subset: list[str],
+        all_paths: list[str] | None = None,
     ) -> list[tuple[str, int, int]]:
         """(file URI, first_row_id, birth) for files WITHOUT
         materialized lineage. Preferred source: the ``row_id_assignments``
@@ -2284,7 +2320,8 @@ class LakeTable:
         id is then independent of every other file, so CoW removals of
         OTHER files can never shift it. Legacy tables (created before
         assignments existed) fall back to the (birth, path)-cumulative
-        derivation over the full snapshot file set."""
+        derivation over the full snapshot file set (``all_paths``,
+        default: read from the snapshot's manifests)."""
         births = self._file_births()
         assignments = self._meta.get("row_id_assignments") or {}
         if all(p in assignments for p in subset):
@@ -2292,6 +2329,8 @@ class LakeTable:
                 (_as_uri(p), int(assignments[p]), births.get(p, 0))
                 for p in subset
             ]
+        if all_paths is None:
+            all_paths = list(self._snapshot_paths(snap))
         counts: dict[str, int] = {}
         for m in snap["manifests"]:
             t = pq.read_table(
@@ -2318,20 +2357,22 @@ class LakeTable:
         paths: list[str] | None = None,
         keep_meta: bool = False,
     ) -> DataFrame:
-        """PHYSICAL-schema read of ``paths`` (default: the snapshot's
-        full file set) with ``__lineage_row_id`` / ``__lineage_birth``
-        attached. Files with materialized lineage supply the columns
-        from their own bytes; other files derive id = first-row-id +
-        row position from committed metadata. MoR tombstones apply.
-        ``keep_meta`` keeps ``__file``/``__pos`` in the frame — the MoR
-        UPDATE/MERGE paths need positions for DV encoding alongside the
-        lineage columns."""
+        """PHYSICAL-schema Spark read of ``paths`` (default: the
+        snapshot's full file set) with ``__lineage_row_id`` /
+        ``__lineage_birth`` attached. Files with materialized lineage
+        supply the columns from their own bytes; other files derive id =
+        first-row-id + row position from committed metadata. MoR
+        tombstones apply. ``keep_meta`` keeps ``__file``/``__pos`` in the
+        frame — the MoR UPDATE/MERGE paths need positions for DV encoding
+        alongside the lineage columns. ``scan_with_lineage`` reads
+        through it; rewrites read through ``_rewrite_input``, whose
+        driver read of small rewrites applies the same rule."""
         from pyspark.sql import functions as _F
         from pyspark.sql.types import LongType, StructField
 
         all_paths = sorted(self._snapshot_paths(snap))
         paths = all_paths if paths is None else sorted(paths)
-        mat = self._materialized_lineage_paths(snap)
+        mat = self._materialized_lineage_paths(snap, paths)
         plain = [p for p in paths if p not in mat]
         mat_paths = [p for p in paths if p in mat]
         pieces: list[DataFrame] = []
@@ -2398,6 +2439,118 @@ class LakeTable:
         for d in pieces[1:]:
             out = out.unionByName(d)
         return out
+
+    def _rewrite_input(
+        self,
+        snap: dict[str, Any],
+        entries: list[dict[str, Any]],
+        lineage: bool,
+        keep_meta: bool = False,
+    ) -> DataFrame:
+        """The physical-schema frame of the live rows of ``entries``, the
+        manifest entries of ``snap`` a rewrite replaces: the one input
+        of copy-on-write DELETE/UPDATE/MERGE, merge-on-read UPDATE/MERGE
+        and compaction. ``lineage`` adds ``__lineage_row_id`` /
+        ``__lineage_birth`` (``_lineage_frame``'s rule); ``keep_meta``
+        adds ``__file`` / ``__pos`` (``_metadata`` file URI and row
+        index).
+
+        A small rewrite is read on the driver (``_read_small``) and
+        reaches Spark as a local relation, so the caller's filters and
+        projections fold into one and ``_write_frame`` pulls it without
+        a job. Any other input is read by Spark, tombstones applied."""
+        df = self._read_small(snap, entries, lineage, keep_meta)
+        if df is not None:
+            return df
+        paths = sorted(e["file_path"] for e in entries)
+        if lineage:
+            return self._lineage_frame(snap, paths, keep_meta)
+        if keep_meta:
+            df = self._read_physical(paths, with_meta=True)
+            return self._apply_deletes(df, snap, paths)
+        return self._read_live(paths, snap)
+
+    def _read_small(
+        self,
+        snap: dict[str, Any],
+        entries: list[dict[str, Any]],
+        lineage: bool,
+        keep_meta: bool,
+    ) -> DataFrame | None:
+        """``_rewrite_input`` read with pyarrow on the driver, or None
+        when Spark must read. Taken when the entries hold at most
+        ``DRIVER_WRITE_MAX_ROWS`` rows in all and their types are
+        written on the driver (``_driver_sized``, as for the
+        rewrite's output), the table is unpartitioned with no file in a
+        ``k=v`` directory, ``snap`` has no merge-on-read deletes and the
+        table no column defaults. Each file must also hold every
+        physical column under its exact name and with exactly the Arrow
+        type Spark's rows convert to, so its values are the ones Spark's
+        reader would return; any other file declines the whole read."""
+        import numpy as _np
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        phys = self.physical_schema
+        paths = sorted(e["file_path"] for e in entries)
+        if not (
+            paths
+            and self._driver_sized(sum(e["record_count"] for e in entries), phys.fields)
+            and not self.partition_spec
+            and not any("=" in os.path.basename(os.path.dirname(p)) for p in paths)
+            and not snap.get("delete_manifests")
+            and not self._meta.get("column_defaults")
+        ):
+            return None
+        # Spark's file reads are nullable whatever the table declares
+        schema = StructType([_T.StructField(f.name, f.dataType) for f in phys.fields])
+        names = list(schema.names)
+        want = list(to_arrow_schema(schema))
+        if keep_meta:
+            schema = schema.add("__file", _T.StringType(), nullable=False)
+            schema = schema.add("__pos", _T.LongType(), nullable=False)
+        lin_cols = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
+        if lineage:
+            for c in lin_cols:
+                schema = schema.add(c, _T.LongType())
+            mat = self._materialized_lineage_paths(snap, paths)
+            first_birth = {
+                u: (first, birth)
+                for group in ([p for p in paths if p not in mat], sorted(mat))
+                for u, first, birth in self._lineage_assignments(snap, group)
+            }
+        out = to_arrow_schema(schema)
+        tables = []
+        for p in paths:
+            with pq.ParquetFile(p) as pf:
+                have = pf.schema_arrow
+                carried = [
+                    c for c in lin_cols if lineage and p in mat and c in have.names
+                ]
+                if not all(
+                    have.get_field_index(f.name) >= 0
+                    and have.field(f.name).type == f.type
+                    for f in want + [pa.field(c, pa.int64()) for c in carried]
+                ):
+                    return None
+                t = pf.read(columns=names + carried)
+            n, uri = t.num_rows, _as_uri(p)
+            cols = [t.column(c) for c in names]
+            pos = pa.array(_np.arange(n, dtype=_np.int64))
+            if keep_meta:
+                cols += [pa.array([uri] * n, pa.string()), pos]
+            if lineage:
+                # Iceberg v3 inheritance, as in _lineage_frame: a NULL or
+                # absent materialized cell takes the file's committed
+                # first-row-id + position and birth
+                first, birth = first_birth[uri]
+                for c, v in zip(
+                    lin_cols,
+                    (pc.add(pos, first), pa.array(_np.full(n, birth, _np.int64))),
+                ):
+                    cols.append(pc.coalesce(t.column(c), v) if c in carried else v)
+            tables.append(pa.Table.from_arrays(cols, schema=out))
+        return self.spark.createDataFrame(pa.concat_tables(tables), schema)
 
     def scan_with_lineage(self, snapshot_id: int | None = None) -> DataFrame:
         """Row-lineage read (Iceberg v3 ``_row_id`` /
@@ -2799,6 +2952,18 @@ class LakeTable:
     DRIVER_WRITE_MAX_ROWS = 4096
     DRIVER_WRITE_MAX_STR = 256
 
+    def _driver_sized(self, max_rows: int | None, fields: list) -> bool:
+        """Whether at most ``max_rows`` rows of ``fields`` are handled on
+        the driver: the bound is known and at most
+        ``DRIVER_WRITE_MAX_ROWS``, and every type is in
+        ``_DRIVER_WRITE_TYPES``. The gate ``_write_frame`` writes by and
+        ``_rewrite_input`` reads by."""
+        return (
+            max_rows is not None
+            and max_rows <= self.DRIVER_WRITE_MAX_ROWS
+            and all(isinstance(f.dataType, _DRIVER_WRITE_TYPES) for f in fields)
+        )
+
     def _write_frame(
         self,
         df: DataFrame,
@@ -2816,14 +2981,20 @@ class LakeTable:
         or None when unknown. When the bound is at most
         ``DRIVER_WRITE_MAX_ROWS``, the output is unpartitioned, the
         table declares no ``write.sort-order`` and every column has a
-        type in ``_DRIVER_WRITE_TYPES``, the rows are pulled to the
-        driver (a no-job ``collect()`` for a local relation, one
-        ``toArrow()`` job otherwise) and written as one snappy parquet
+        type in ``_DRIVER_WRITE_TYPES`` (``_driver_sized``), the rows are
+        pulled to the driver and written as one snappy parquet
         file with pyarrow: no write job, no commit protocol. Anything
         else takes Spark's writer, and so do pulled values whose footer
         stats the two writers record differently: a string or binary
         value longer than ``DRIVER_WRITE_MAX_STR`` bytes, and a float
-        NaN (parquet-mr takes it as the max, parquet-cpp skips it)."""
+        NaN (parquet-mr takes it as the max, parquet-cpp skips it).
+
+        The pull is a no-job ``collect()`` when the frame is a local
+        relation: SQL ``VALUES``, other driver-built sources, and the
+        filters and projections of a small rewrite over
+        ``_rewrite_input``'s driver read. Any other frame is pulled
+        with one ``toArrow()`` job. A bounded frame that takes Spark's
+        writer is written by one task."""
         import time as _time
 
         import pyarrow.compute as pc
@@ -2831,11 +3002,9 @@ class LakeTable:
 
         fields = df.schema.fields
         if (
-            max_rows is not None
-            and max_rows <= self.DRIVER_WRITE_MAX_ROWS
+            self._driver_sized(max_rows, fields)
             and not pcols
             and not (self.properties or {}).get("write.sort-order", "").strip()
-            and all(isinstance(f.dataType, _DRIVER_WRITE_TYPES) for f in fields)
         ):
             # collect() hands TIMESTAMP values back as naive local
             # datetimes, which a DST-observing process cannot always
@@ -2867,6 +3036,10 @@ class LakeTable:
                 path = os.path.join(out_dir, f"part-00000-{uuid.uuid4().hex}.parquet")
                 pq.write_table(table, path, compression="snappy")
                 return [path]
+        if max_rows is not None and max_rows <= self.DRIVER_WRITE_MAX_ROWS:
+            # a local relation spreads even a few rows over up to
+            # defaultParallelism tasks, each writing its own file
+            df = df.coalesce(1)
         writer = df.write.mode("overwrite")
         if pcols:
             writer = writer.partitionBy(*pcols)
@@ -3750,16 +3923,7 @@ class LakeTable:
         # read-side inheritance rule from the file's first-row-id.
         carry_lineage = bool(affected) and "row_id_assignments" in self._meta
         if affected:
-            if carry_lineage:
-                existing = self._lineage_frame(
-                    self.snapshot(), sorted(affected_paths)
-                )
-            else:
-                # _read_live: apply MOR tombstones so deleted rows don't
-                # resurrect through the rewrite
-                existing = self._read_live(
-                    sorted(affected_paths), self.snapshot()
-                )
+            existing = self._rewrite_input(self.snapshot(), affected, carry_lineage)
             keep = existing.join(
                 incoming.select(pkey), on=pkey, how="left_anti"
             )
@@ -4102,16 +4266,12 @@ class LakeTable:
             # this is the entire value of manifest pruning: a MERGE
             # whose source range misses the table costs zero data I/O.
             return self
-        paths = sorted(f["file_path"] for f in affected)
         carry_lineage = "row_id_assignments" in self._meta
         lin_cols = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
-        if paths:
-            if carry_lineage:
-                target = self._lineage_frame(snap, paths, keep_meta=True)
-            else:
-                target = self._read_physical(paths, with_meta=True)
-                target = self._apply_deletes(target, snap, paths)
-            target = target.select(
+        if affected:
+            target = self._rewrite_input(
+                snap, affected, carry_lineage, keep_meta=True
+            ).select(
                 *[
                     _F.col(mapping[f.name]).alias(f.name)
                     for f in self.schema.fields
@@ -4543,22 +4703,18 @@ class LakeTable:
         # keep ids; source-only inserts arrive with NULL lineage from
         # the outer join and the read-side inheritance rule mints theirs
         carry_lineage = bool(affected) and "row_id_assignments" in self._meta
-        if carry_lineage:
-            target = self._lineage_frame(
-                self.snapshot(), sorted(affected_paths)
-            ).select(
+        target = (
+            self._rewrite_input(self.snapshot(), affected, carry_lineage).select(
                 *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields],
-                self.LINEAGE_ID_COL,
-                self.LINEAGE_BIRTH_COL,
+                *(
+                    [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
+                    if carry_lineage
+                    else []
+                ),
             )
-        else:
-            target = (
-                self._read_live(sorted(affected_paths), self.snapshot()).select(
-                    *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields]
-                )
-                if affected
-                else local_rows_df(self.spark, [], self.schema)
-            )
+            if affected
+            else local_rows_df(self.spark, [], self.schema)
+        )
         target = target.withColumn("__t", _F.lit(True))
         join_cond = _F.lit(True)
         for c in keys:
@@ -4740,12 +4896,7 @@ class LakeTable:
             # (Iceberg v3): read id-annotated when the table allocates
             # ids, and the rewritten files carry them materialized
             carry_lineage = "row_id_assignments" in self._meta
-            if carry_lineage:
-                # (also applies MOR tombstones, like _read_live)
-                df = self._lineage_frame(snap_now, partial)
-            else:
-                # _read_live: MOR tombstones must not resurrect in the rewrite
-                df = self._read_live(partial, snap_now)
+            df = self._rewrite_input(snap_now, partial_files, carry_lineage)
             # keep rows that do NOT match any branch conjunction; NULL
             # comparisons mean no-match → keep (SQL DELETE semantics)
             matched = _branches_match_cond(
@@ -4862,14 +5013,9 @@ class LakeTable:
         )
         if snap is None or not affected:
             return self
-        paths = sorted(f["file_path"] for f in affected)
         mapping = self._column_mapping
         carry_lineage = "row_id_assignments" in self._meta
-        if carry_lineage:
-            df = self._lineage_frame(snap, paths, keep_meta=True)
-        else:
-            df = self._read_physical(paths, with_meta=True)
-            df = self._apply_deletes(df, snap, paths)
+        df = self._rewrite_input(snap, affected, carry_lineage, keep_meta=True)
         cond = _F.coalesce(
             _branches_match_cond(branches, lambda col: mapping.get(col, col)),
             _F.lit(False),
@@ -5008,19 +5154,12 @@ class LakeTable:
         lin_cols = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
         # rewrite in LOGICAL space (assignments reference logical names),
         # then map back to physical so renames stay metadata-only
-        if carry_lineage:
-            logical = self._lineage_frame(
-                self.snapshot(), sorted(affected_paths)
-            ).select(
-                *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields],
-                *lin_cols,
-            )
-        else:
-            logical = self._read_live(
-                sorted(affected_paths), self.snapshot()
-            ).select(
-                *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields]
-            )
+        logical = self._rewrite_input(
+            self.snapshot(), affected, carry_lineage
+        ).select(
+            *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields],
+            *(lin_cols if carry_lineage else []),
+        )
         # OR-of-AND match over logical names; NULL comparison = no match
         cond = _F.coalesce(
             _branches_match_cond(branches, lambda col: col), _F.lit(False)
@@ -8121,10 +8260,14 @@ def _pred_cond(c, op: str, val: Any):
         return c.isNull()
     if op == "notnull":
         return c.isNotNull()
-    return {
-        "<": c < val, "<=": c <= val, ">": c > val,
-        ">=": c >= val, "=": c == val, "!=": c != val,
-    }[op]
+    return _COMPARISONS[op](c, val)
+
+
+# one py4j call per term: only the requested comparison is built
+_COMPARISONS = {
+    "<": operator.lt, "<=": operator.le, ">": operator.gt,
+    ">=": operator.ge, "=": operator.eq, "!=": operator.ne,
+}
 
 
 def _float_stat_type(dtype: Any) -> bool:

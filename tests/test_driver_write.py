@@ -1,4 +1,5 @@
-"""The one data-file writer, ``LakeTable._write_frame``.
+"""The one data-file writer, ``LakeTable._write_frame``, and the one
+rewrite input, ``LakeTable._rewrite_input``.
 
 Small, unpartitioned, unsorted frames of scalar columns whose row count
 the caller bounds before running anything (local-relation sources,
@@ -6,7 +7,10 @@ copy-on-write rewrites of small files) are pulled to the driver and
 written as one pyarrow parquet file instead of a Spark write job. These
 tests prove the driver path is INVISIBLE: scans, every harvested stat,
 folds and commits equal what Spark's writer produces, and every gated
-shape takes Spark's writer instead of writing something different.
+shape takes Spark's writer instead of writing something different. The
+same holds for the read side: small rewrite inputs are read with pyarrow
+on the driver and equal Spark's read, and every other input is read by
+Spark.
 """
 
 import datetime
@@ -524,3 +528,201 @@ def test_constraint_violation_message_and_pass(spark, cat):
     msg = str(ei.value)
     assert "v_pos" in msg and "v > 0" in msg and "example" not in msg
     assert "'k': 4" in msg or "k=4" in msg or "-1" in msg
+
+
+# -- rewrite inputs: small files read on the driver ---------------------------
+
+RW_DDL = "id int, " + ALL_TYPES_DDL
+RW_ROWS = [(n, *r) for n, r in enumerate(ALL_TYPES_ROWS)] + [
+    (
+        len(ALL_TYPES_ROWS), True, 1, 1, 1, 1, NAN, NAN, "nan", b"n",
+        datetime.date(2020, 1, 1),
+        datetime.datetime(2020, 1, 1, 6, 0, 0),
+        datetime.datetime(2020, 1, 1, 6, 0, 0),
+    )
+]
+
+
+def _rows(df):
+    return sorted((_row_key(tuple(r)) for r in df.collect()))
+
+
+def _entries_by_content(t):
+    return sorted(
+        (
+            tuple(_canon_stat(e.get(k)) for k in ENTRY_STATS)
+            for e in t.plan_files()
+        )
+    )
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+def test_rewrite_input_local_read_equals_spark_read(spark, cat, tz):
+    """``_rewrite_input``'s driver read of small files equals Spark's read
+    of the same entries, frame for frame (with and without lineage and
+    ``__file``/``__pos``), and rewrites fed by either read commit the same
+    entries and the same ``scan_with_lineage`` rows: every accepted
+    type, nulls, NaN, ±0.0, empty string and bytes, ``timestamp`` under
+    the given session time zone and ``timestamp_ntz``, files written on
+    the driver and by Spark, and materialized-lineage files whose NULL
+    cells inherit."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from icebergplus_spark.localrel import local_relation_rows
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        schema, (fast, slow) = _two_tables(
+            spark, cat, RW_DDL, f"rw{tz.replace('/', '_').lower()}"
+        )
+        slow._read_small = lambda *a, **kw: None  # Spark reads every input
+        for t in (fast, slow):
+            t.append(local_rows_df(spark, RW_ROWS[:3], schema))
+            t.append(spark.createDataFrame(RW_ROWS[3:], schema).coalesce(1))
+
+        def same_reads():
+            snap, entries = fast.snapshot(), fast.plan_files()
+            paths = sorted(e["file_path"] for e in entries)
+            for lineage in (False, True):
+                for keep_meta in (False, True):
+                    local = fast._rewrite_input(snap, entries, lineage, keep_meta)
+                    assert local_relation_rows(local) == sum(
+                        e["record_count"] for e in entries
+                    )
+                    if lineage:
+                        ref = fast._lineage_frame(snap, paths, keep_meta)
+                    else:
+                        ref = fast._read_physical(paths, with_meta=keep_meta)
+                    # _lineage_frame's column order depends on its file mix
+                    ref = ref.select(*local.columns)
+                    assert local.schema == ref.schema, (lineage, keep_meta)
+                    assert _rows(local) == _rows(ref), (lineage, keep_meta)
+
+        def same_tables():
+            assert _entries_by_content(fast) == _entries_by_content(slow)
+            assert _rows(fast.scan_with_lineage()) == _rows(slow.scan_with_lineage())
+
+        same_reads()
+        for t in (fast, slow):
+            t.update_where({"id": ("<=", 1)}, {"s": "upd", "d": -0.0})
+        same_tables()
+        for t in (fast, slow):
+            t.delete({"id": ("=", 4)})
+        same_tables()
+        # the updated file carries materialized lineage with NULL births
+        same_reads()
+        for t in (fast, slow):
+            t.delete({"id": ("=", 2)})
+            t.merge(
+                local_rows_df(
+                    spark, [(0, *RW_ROWS[3][1:]), (40, *RW_ROWS[1][1:])], schema
+                ),
+                key="id",
+            )
+        same_tables()
+        same_reads()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_cow_delete_and_update_of_small_file_run_no_spark_job(spark, cat):
+    """A copy-on-write DELETE and UPDATE of one small file read it on the
+    driver and write it on the driver: no Spark job at all."""
+    name = "db.nojob"
+    model = _fact(spark, cat, name)
+    model = model[~model.k.isin([2, 6])]
+    jobs = _run_one_driver_file(
+        cat, name, f"DELETE FROM {name} WHERE k IN (2, 6)", model
+    )
+    assert jobs == 0
+    model = model.assign(
+        q=[q + 7 if 4 <= k <= 10 else q for k, q in zip(model.k, model.q)]
+    )
+    jobs = _run_one_driver_file(
+        cat, name, f"UPDATE {name} SET q = q + 7 WHERE k BETWEEN 4 AND 10", model
+    )
+    assert jobs == 0
+
+
+def _declines_then_deletes(t, model, key=2):
+    """``t``'s rewrite input is read by Spark; a DELETE of ``key`` leaves
+    the table equal to ``model`` without that key."""
+    snap = t.snapshot()
+    assert t._read_small(snap, t.plan_files(), True, False) is None
+    assert t._read_small(snap, t.plan_files(), False, True) is None
+    t.delete({"k": ("=", key)})
+    want = model[model.k != key]
+    cols = list(want.columns)
+    got = sorted(tuple(r) for r in t.scan().select(*cols).collect())
+    assert got == sorted(tuple(r) for r in want.itertuples(index=False))
+
+
+def test_rewrite_input_declines_to_spark_read(spark, cat, tmp_path):
+    """Each input the driver read cannot take is read by Spark, with
+    results equal to the pandas model: a bound over 4,096 rows, a
+    partitioned table, merge-on-read deletes, column defaults, a file
+    missing a column added later, files whose Arrow types differ from
+    Spark's (``large_string``, millisecond timestamps) and a column whose
+    name differs only in case."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string("k bigint, s string")
+    rows = [(k, f"s{k}") for k in range(8)]
+    model = pd.DataFrame(rows, columns=["k", "s"])
+
+    def table(name, **kw):
+        t = cat.create_table(name, schema, **kw)
+        t.append(spark.createDataFrame(rows, schema).coalesce(1))
+        return t
+
+    control = table("d.control")
+    assert control._read_small(control.snapshot(), control.plan_files(), True, True)
+
+    big_rows = [(k, "b") for k in range(control.DRIVER_WRITE_MAX_ROWS + 1)]
+    big = cat.create_table("d.big", schema)
+    big.append(spark.createDataFrame(big_rows, schema).coalesce(1))
+    _declines_then_deletes(big, pd.DataFrame(big_rows, columns=["k", "s"]))
+
+    _declines_then_deletes(table("d.part", partition_cols=["s"]), model)
+
+    mor = table("d.mor")
+    mor.set_property("write.delete.mode", "merge-on-read")
+    mor.delete({"k": ("=", 5)})
+    mor.set_property("write.delete.mode", "copy-on-write")
+    assert mor.snapshot().get("delete_manifests")
+    _declines_then_deletes(mor, model[model.k != 5])
+
+    dflt = table("d.dflt")
+    dflt.add_column("c", "int", default=9)
+    _declines_then_deletes(dflt, model.assign(c=9))
+
+    added = table("d.added")
+    added.add_column("c", "int")
+    _declines_then_deletes(added, model.assign(c=None))
+
+    for name, arrow in (
+        ("d.large", pa.table({
+            "k": pa.array(range(8), pa.int64()),
+            "s": pa.array([f"s{k}" for k in range(8)], pa.large_string()),
+        })),
+        ("d.ms", pa.table({
+            "k": pa.array(range(8), pa.int64()),
+            "s": pa.array([f"s{k}" for k in range(8)]),
+            "ts": pa.array(
+                [k * 1000 for k in range(8)], pa.timestamp("ms", tz="UTC")
+            ),
+        })),
+        ("d.case", pa.table({
+            "K": pa.array(range(8), pa.int64()),
+            "s": pa.array([f"s{k}" for k in range(8)]),
+        })),
+    ):
+        ddl = "k bigint, s string" + (", ts timestamp" if "ts" in arrow.column_names else "")
+        t = cat.create_table(name, _parse_datatype_string(ddl))
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(arrow, path)
+        t.add_files([path])
+        _declines_then_deletes(t, model)

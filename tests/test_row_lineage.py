@@ -305,3 +305,76 @@ def test_lineage_survives_expire_of_rewrite_snapshot(table):
     t = t.append(nation.limit(0))
     expire_snapshots(t, keep_last=1)
     assert _frame(t) == before
+
+
+# -- warehouse paths that need URI escaping ---------------------------------
+
+
+def test_as_uri_equals_scanned_file_path(spark, tmp_path):
+    """``_as_uri`` of a plain path is exactly Spark's
+    ``_metadata.file_path`` for that file, including the characters a
+    file URI percent-encodes and those it keeps as they are."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from icebergplus_spark.lake.table import _as_uri
+
+    for name in ("sp ace", "pct%25x", "hash#1", "plus+a", "naïve", "nb sp"):
+        d = tmp_path / name
+        d.mkdir()
+        path = str(d / "f.parquet")
+        pq.write_table(pa.table({"x": [1]}), path)
+        got = spark.read.parquet(path).select("_metadata.file_path").first()[0]
+        assert got == _as_uri(path), name
+
+
+@pytest.mark.parametrize("per_file", [5, 4200], ids=["local", "spark"])
+def test_dml_under_escaped_warehouse_path_keeps_rows_and_ids(
+    spark, tmp_path, per_file
+):
+    """DELETE, UPDATE, MERGE and compaction of a table whose warehouse
+    path holds a space and a ``%``: every untouched row and every
+    ``_row_id`` survives, whether the rewrite reads its files on the
+    driver (small) or with Spark (more than 4,096 rows)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from icebergplus_spark.lake import compact
+    from icebergplus_spark.localrel import local_rows_df
+
+    cat = LocalLakeCatalog(spark, str(tmp_path / "w h%25x" / "wh")).start()
+    schema = _parse_datatype_string("k bigint, v string")
+    t = cat.create_table("db.t", schema)
+    model = {k: f"v{k}" for k in range(2 * per_file)}
+    for lo in (0, per_file):
+        rows = [(k, model[k]) for k in range(lo, lo + per_file)]
+        t.append(spark.createDataFrame(rows, schema).coalesce(1))
+    snap, first = t.snapshot(), t.plan_files({"k": ("=", 3)})
+
+    def lineage():
+        return {r.k: (r.v, r._row_id) for r in t.scan_with_lineage().collect()}
+
+    ids = {k: i for k, (_v, i) in lineage().items()}
+
+    def check():
+        got = lineage()
+        assert {k: v for k, (v, _i) in got.items()} == model
+        assert {k: ids[k] for k in got if k in ids} == {
+            k: i for k, (_v, i) in got.items() if k in ids
+        }
+        assert len({i for _v, i in got.values()}) == len(got)
+
+    t.delete({"k": ("=", 3)})
+    del model[3]
+    check()
+    t.update_where({"k": ("=", 1)}, {"v": "upd"})
+    model[1] = "upd"
+    check()
+    assert compact(t, target_file_size=256 * 1024 * 1024)["compacted"] == 2
+    check()
+    new = 10 * per_file
+    t.merge(local_rows_df(spark, [(2, "mrg"), (new, "ins")], schema), key="k")
+    model.update({2: "mrg", new: "ins"})
+    check()
+    # the first rewrite read its file on the driver only when small
+    small = t._read_small(snap, first, True, False)
+    assert (small is not None) == (per_file < t.DRIVER_WRITE_MAX_ROWS)
