@@ -343,12 +343,15 @@ class LocalLakeCatalog:
         # clone); as a bonus the clone can time-travel into inherited
         # history. gc.enabled=false already blocks expiry from deleting
         # inherited (source-owned) files.
+        # Each snapshot's list file is copied under its own name, so the
+        # inherited snapshot entries stay valid in the clone.
         seen: set[str] = set()
         for snap in meta.get("snapshots", []):
-            for m in list(snap["manifests"]) + list(
-                snap.get("delete_manifests", [])
+            lists = src._lists(snap)
+            for m in (
+                [snap.get("manifest_list")] + lists.manifests + lists.delete_manifests
             ):
-                if m not in seen:
+                if m and m not in seen:
                     seen.add(m)
                     shutil.copy2(
                         os.path.join(src._meta_dir, m), os.path.join(meta_dir, m)

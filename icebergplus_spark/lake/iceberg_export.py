@@ -307,7 +307,7 @@ def export_iceberg_snapshot(
     snap = table.snapshot(snapshot_id)
     if snap is None:
         raise ValueError("table has no snapshot to export")
-    if snap.get("delete_manifests"):
+    if table._lists(snap).delete_manifests:
         raise ValueError(
             "cannot export a tombstoned snapshot as Iceberg v2: MoR "
             "position/equality/DV deletes are pending — run compaction "

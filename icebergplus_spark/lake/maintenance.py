@@ -25,6 +25,7 @@ import pyarrow.parquet as pq
 
 import pyspark.sql.functions as F
 
+from icebergplus_spark.lake.manifest_list import is_list_file
 from icebergplus_spark.lake.table import LakeTable
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024  # 128 MiB — standard lake target
@@ -281,7 +282,7 @@ def compact(
     # exempt and position deletes reference only now-dead paths. When NO
     # untouched file is still affected, the tombstones are dead weight —
     # drop them (auto-purge).
-    carry = list(snap.get("delete_manifests", [])) if snap else []
+    carry = table._lists(snap).delete_manifests
     if carry:
         untouched = {f["file_path"] for f in big}
         if not (untouched & _delete_affected_paths(table, snap)):
@@ -301,7 +302,7 @@ def compact(
         "files_before": len(files),
         "files_after": len(all_entries),
         "bytes_rewritten": total_small_bytes,
-        "purged_deletes": bool(snap and snap.get("delete_manifests")) and not carry,
+        "purged_deletes": bool(table._lists(snap).delete_manifests) and not carry,
     }
 
 
@@ -350,10 +351,10 @@ def rollback(table: LakeTable, snapshot_id: int) -> dict:
         return {"rolled_back": False, "reason": "already current"}
     table._commit_snapshot(
         "rollback",
-        list(target["manifests"]),
+        table._lists(target).manifests,
         [],
         t0,
-        delete_manifests=target.get("delete_manifests", []),
+        delete_manifests=table._lists(target).delete_manifests,
     )
     return {
         "rolled_back": True,
@@ -389,7 +390,7 @@ def cherry_pick(table: LakeTable, snapshot_id: int) -> dict:
         table.snapshot(parent_id) if parent_id is not None else None
     )
     added = []
-    for m in snap["manifests"]:
+    for m in table._lists(snap).manifests:
         for e in pq.read_table(os.path.join(table._meta_dir, m)).to_pylist():
             if e["file_path"] not in parent_paths:
                 added.append(e)
@@ -406,15 +407,13 @@ def cherry_pick(table: LakeTable, snapshot_id: int) -> dict:
         )
     if not added:
         return {"cherry_picked": False, "reason": "snapshot added no files"}
-    manifests = list(current["manifests"] if current else []) + [
-        table._write_manifest(added)
-    ]
+    manifests = table._lists(current).manifests + [table._write_manifest(added)]
     table._commit_snapshot(
         "append",
         manifests,
         added,
         t0,
-        delete_manifests=list((current or {}).get("delete_manifests") or []),
+        delete_manifests=table._lists(current).delete_manifests,
         extra_summary={"cherry-picked-from": snapshot_id},
     )
     return {
@@ -451,6 +450,30 @@ def _require_gc_enabled(table: LakeTable, op: str) -> None:
         )
 
 
+def _snapshot_refs(table: LakeTable, snapshots) -> tuple[set, set]:
+    """(list files, data + delete manifests) that ``snapshots`` name."""
+    lists: set[str] = set()
+    manifests: set[str] = set()
+    for s in snapshots:
+        if s.get("manifest_list"):
+            lists.add(s["manifest_list"])
+        sl = table._lists(s)
+        manifests.update(sl.manifests)
+        manifests.update(sl.delete_manifests)
+    return lists, manifests
+
+
+def _manifest_file_paths(table: LakeTable, manifests) -> set:
+    """Data/delete file paths the given manifests list: one read per
+    manifest, of its ``file_path`` column only (the stats columns, HLL
+    sketches above all, are most of a manifest's decoded size)."""
+    out: set[str] = set()
+    for m in manifests:
+        t = pq.read_table(os.path.join(table._meta_dir, m), columns=["file_path"])
+        out.update(t.column("file_path").to_pylist())
+    return out
+
+
 def remove_orphan_files(
     table: LakeTable, older_than_s: float = 3 * 24 * 3600, dry_run: bool = False
 ) -> dict:
@@ -464,11 +487,8 @@ def remove_orphan_files(
     what WOULD be deleted without touching anything — run it first on a
     100 TB table."""
     _require_gc_enabled(table, "remove_orphan_files")
-    live: set[str] = set()
-    for s in table.history():
-        for m in list(s["manifests"]) + list(s.get("delete_manifests", [])):
-            t = pq.read_table(os.path.join(table._meta_dir, m))
-            live.update(t.column("file_path").to_pylist())
+    live_lists, live_manifests = _snapshot_refs(table, table.history())
+    live = _manifest_file_paths(table, live_manifests)
     cutoff = time.time() - older_than_s
     orphans: list[str] = []
     scanned = 0
@@ -483,23 +503,22 @@ def remove_orphan_files(
                 orphans.append(p)
                 if not dry_run:
                     os.remove(p)
-    # Orphaned MANIFESTS too (Iceberg's remove_orphan_files sweeps the
-    # whole table location): a writer that died between manifest write
-    # and snapshot publish leaves a manifest no snapshot references.
-    live_manifests = {
-        m
-        for s in table.history()
-        for m in list(s["manifests"]) + list(s.get("delete_manifests", []))
-    }
+    # Orphaned MANIFESTS and snapshot LIST FILES too (Iceberg's
+    # remove_orphan_files sweeps the whole table location): a writer
+    # that died between manifest write and snapshot publish, or lost
+    # its commit, leaves files no snapshot references.
     for fn in os.listdir(table._meta_dir):
-        if not (
-            fn.startswith(("manifest-", "delete-manifest-"))
-            and fn.endswith(".parquet")
+        if fn.startswith(("manifest-", "delete-manifest-")) and fn.endswith(
+            ".parquet"
         ):
+            named = live_manifests
+        elif is_list_file(fn):
+            named = live_lists
+        else:
             continue
         p = os.path.join(table._meta_dir, fn)
         scanned += 1
-        if fn not in live_manifests and os.path.getmtime(p) < cutoff:
+        if fn not in named and os.path.getmtime(p) < cutoff:
             orphans.append(p)
             if not dry_run:
                 os.remove(p)
@@ -514,8 +533,11 @@ def remove_orphan_files(
 def expire_snapshots(
     table: LakeTable, keep_last: int = 1, older_than_ms: int | None = None
 ) -> dict:
-    """Drop expired snapshots and delete data/manifest files no retained
-    snapshot references (SURVEY.md §2.B "Snapshot expiry / vacuum").
+    """Drop expired snapshots and delete data/manifest/list files no
+    retained snapshot references (SURVEY.md §2.B "Snapshot expiry /
+    vacuum"). Files are deleted only after the new metadata version is
+    published, so a lost publish (ConcurrentCommitError) deletes
+    nothing.
 
     Retention (Iceberg ``expireSnapshots`` parity): always the last
     ``keep_last`` snapshots; with ``older_than_ms`` set, snapshots at or
@@ -538,49 +560,16 @@ def expire_snapshots(
     if not expired:
         return {"expired": 0, "deleted_files": 0}
 
-    def live_paths(snapshots) -> tuple[set, set]:
-        manifests, data = set(), set()
-        for s in snapshots:
-            # delete manifests/files are retained and expired exactly
-            # like data manifests/files
-            for m in list(s["manifests"]) + list(s.get("delete_manifests", [])):
-                manifests.add(m)
-                t = pq.read_table(os.path.join(table._meta_dir, m))
-                data.update(t.column("file_path").to_pylist())
-        return manifests, data
+    # delete manifests/files are retained and expired exactly like data
+    # manifests/files; a manifest shared by both sides is read once
+    keep_lists, keep_manifests = _snapshot_refs(table, retained)
+    old_lists, old_manifests = _snapshot_refs(table, expired)
+    keep_data = _manifest_file_paths(table, keep_manifests)
+    old_data = _manifest_file_paths(table, old_manifests - keep_manifests)
 
-    keep_manifests, keep_data = live_paths(retained)
-    old_manifests, old_data = live_paths(expired)
-
-    deleted = 0
-    for p in old_data - keep_data:
-        if os.path.exists(p):
-            os.remove(p)
-            deleted += 1
-    for m in old_manifests - keep_manifests:
-        mp = os.path.join(table._meta_dir, m)
-        if os.path.exists(mp):
-            os.remove(mp)
-
-    # Write new metadata version with only retained snapshots.
-    meta = dict(table._meta)
-    meta.pop("_version")
-    version = meta.pop("_phys_version") + 1
-    meta.pop("pending_txn", None)
-    meta.pop("base_version", None)
+    # New metadata version with only retained snapshots.
+    meta = table._next_meta()
     meta["snapshots"] = retained
-    head_txn = getattr(table, "_head_txn", None)
-    if head_txn is not None:
-        # same lost-update guard as _commit_snapshot/_evolve: never
-        # publish over another transaction's undecided staged head
-        from icebergplus_spark.lake.commitio import ConcurrentCommitError
-        from icebergplus_spark.lake.txn import abort_if_expired
-
-        if abort_if_expired(head_txn) != "aborted":
-            raise ConcurrentCommitError(
-                f"{table.identifier}: head metadata held by transaction "
-                f"{head_txn['id']} — refresh() and retry"
-            )
     # Re-home lineage_files records of EXPIRED rewrite snapshots whose
     # output files are still referenced by retained snapshots: without
     # this, _materialized_lineage_paths forgets those files carry
@@ -604,7 +593,17 @@ def expire_snapshots(
             for p, v in meta["row_id_assignments"].items()
             if p in keep_data
         }
-    table.io.publish(table._meta_dir, version, json.dumps(meta, separators=(",", ":")))
+    table._publish(meta)
+
+    deleted = 0
+    for p in old_data - keep_data:
+        if os.path.exists(p):
+            os.remove(p)
+            deleted += 1
+    for m in (old_manifests - keep_manifests) | (old_lists - keep_lists):
+        mp = os.path.join(table._meta_dir, m)
+        if os.path.exists(mp):
+            os.remove(mp)
     table.refresh()
     return {"expired": len(expired), "deleted_files": deleted}
 
@@ -631,7 +630,7 @@ def rewrite_manifests(
     if snap is None:
         return {"manifests_before": 0, "manifests_after": 0, "entries": 0}
     entries: list[dict] = []
-    for m in snap["manifests"]:
+    for m in table._lists(snap).manifests:
         entries.extend(
             pq.read_table(os.path.join(table._meta_dir, m)).to_pylist()
         )
@@ -646,10 +645,10 @@ def rewrite_manifests(
         names,
         [],
         t0,
-        delete_manifests=snap.get("delete_manifests", []),
+        delete_manifests=table._lists(snap).delete_manifests,
     )
     return {
-        "manifests_before": len(snap["manifests"]),
+        "manifests_before": len(table._lists(snap).manifests),
         "manifests_after": len(names),
         "entries": len(entries),
     }
@@ -697,7 +696,7 @@ def rewrite_deletion_vectors(table: LakeTable) -> dict:
     blobs = {f: b for f, b in blobs.items() if f in live_uris}
 
     new_manifests: list[str] = []
-    for m in snap.get("delete_manifests", []):
+    for m in table._lists(snap).delete_manifests:
         rows = pq.read_table(os.path.join(table._meta_dir, m)).to_pylist()
         non_dv = [r for r in rows if r["content"] != "dv"]
         if len(non_dv) == len(rows):
@@ -745,7 +744,7 @@ def rewrite_deletion_vectors(table: LakeTable) -> dict:
         )
     table._commit_snapshot(
         "rewrite-deletes",
-        list(snap["manifests"]),
+        table._lists(snap).manifests,
         [],
         t0,
         delete_manifests=new_manifests,
@@ -894,7 +893,7 @@ def auto_maintain(
         )
 
     snap = table.snapshot()
-    n_manifests = len(snap["manifests"]) if snap else 0
+    n_manifests = len(table._lists(snap).manifests)
     if n_manifests > max_manifests:
         report["rewrite_manifests"] = (
             f"would rewrite {n_manifests} manifests"

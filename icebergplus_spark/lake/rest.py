@@ -465,7 +465,7 @@ class LakeRestServer:
                 if snap is None and snap_pin is not None:
                     snap = t.snapshot()  # pinned snapshot expired
                     start = 0
-                manifests = snap["manifests"] if snap else []
+                manifests = t._lists(snap).manifests
                 page, pos, more = [], 0, False
                 for mf in manifests:
                     path = os.path.join(t._meta_dir, mf)
@@ -546,7 +546,7 @@ class LakeRestServer:
                 for s_ in sorted(
                     meta["snapshots"], key=lambda x: x["snapshot_id"]
                 ):
-                    for m in s_["manifests"]:
+                    for m in t._lists(s_).manifests:
                         born.setdefault(m, s_["snapshot_id"])
                         pairs.append((s_["snapshot_id"], m))
                 page, pos, more = [], 0, False
@@ -611,7 +611,7 @@ class LakeRestServer:
                     {
                         m
                         for s_ in t._meta["snapshots"]
-                        for m in s_.get(mkey, [])
+                        for m in getattr(t._lists(s_), mkey)
                     }
                 )
                 seen: set[str] = set()

@@ -3,16 +3,18 @@ parquet manifests (SURVEY.md §1.1, §7).
 
 Layout under ``<warehouse>/<namespace>/<table>/``::
 
-    metadata/v{N}.metadata.json    # schema, snapshots, manifest refs
+    metadata/v{N}.metadata.json    # schema, snapshots (each → its list file)
+    metadata/snap-{id}-{uuid}.json    # one snapshot's manifest + added-file lists
     metadata/manifest-{uuid}.parquet  # file inventory + per-column stats
     data/snap-{uuid}/part-*.parquet   # immutable data files
 
-A snapshot references a LIST of manifest files (Iceberg-style): an
-append commit adds one new manifest with just the new files; compaction
-replaces them with a single consolidated manifest. Readers never list
-data directories — the manifest set IS the table contents (snapshot
-isolation: a half-written commit is invisible until the metadata
-pointer lands, cf. SURVEY.md §4 "snapshot isolation").
+A snapshot references a LIST of manifest files (Iceberg-style), kept in
+its own immutable list file (manifest_list.py): an append commit adds
+one new manifest with just the new files; compaction replaces them with
+a single consolidated manifest. Readers never list data directories —
+the manifest set IS the table contents (snapshot isolation: a
+half-written commit is invisible until the metadata pointer lands, cf.
+SURVEY.md §4 "snapshot isolation").
 
 Scale notes (100 TB): manifests are parquet and read via Spark when
 large — file pruning is a DataFrame filter over (path, stats) rows, so
@@ -50,6 +52,11 @@ from icebergplus_spark.localrel import (
 from icebergplus_spark.lake.commitio import (  # noqa: F401 — re-export
     ConcurrentCommitError,
     RenameCommitIO,
+)
+from icebergplus_spark.lake.manifest_list import (
+    SnapshotLists,
+    snapshot_lists,
+    write_manifest_list,
 )
 from icebergplus_spark.lake.metrics import CommitReport, MetricsReporter, ScanReport
 
@@ -1006,28 +1013,66 @@ class LakeTable:
 
     def _evolve(self, mutate) -> "LakeTable":
         """Apply a metadata-only schema change as a new metadata version."""
-        meta = dict(self._meta)
-        meta.pop("_version")
-        version = meta.pop("_phys_version") + 1
-        meta.pop("pending_txn", None)  # seal any resolved txn marker
-        meta.pop("base_version", None)
+        meta = self._next_meta()
         meta.setdefault("column_mapping", self._column_mapping)
         mutate(meta)
-        head_txn = getattr(self, "_head_txn", None)
-        if head_txn is not None:
-            # same lost-update guard as _commit_snapshot: never publish
-            # over another transaction's undecided staged head
-            from icebergplus_spark.lake.txn import abort_if_expired
-
-            if abort_if_expired(head_txn) != "aborted":
-                raise ConcurrentCommitError(
-                    f"{self.identifier}: head metadata held by transaction "
-                    f"{head_txn['id']} — refresh() and retry"
-                )
-        self.io.publish(
-            self._meta_dir, version, json.dumps(meta, separators=(",", ":"))
-        )
+        self._publish(meta)
         return self.refresh()
+
+    def _next_meta(self) -> dict[str, Any]:
+        """Copy of the current metadata to build the next version from:
+        handle bookkeeping dropped, and a resolved transaction marker
+        sealed (stripped from the successor version, so readers stop
+        paying the resolution stat)."""
+        meta = dict(self._meta)
+        for k in ("_version", "_phys_version", "pending_txn", "base_version"):
+            meta.pop(k, None)
+        return meta
+
+    def _publish(self, meta: dict[str, Any]) -> None:
+        """Publish ``meta`` as the version after this handle's physical
+        head — the one step every metadata change (snapshot commit,
+        schema/property evolution, snapshot expiry) goes through.
+
+        Publication targets the PHYSICAL head: an aborted transaction's
+        staged version still occupies its version number, so the next
+        version lands above it while its content builds on the logical
+        (resolved) state. Version check → publish runs under the IO's
+        commit lock; without it, two writers that both read vN could
+        both pass the check and the second publication would silently
+        drop the first change. RenameCommitIO locks with flock
+        (single-host); ObjectStoreCommitIO's publish is itself a CAS
+        (conditional create of vN), so its lock only bounds wasted work
+        — losers surface ConcurrentCommitError either way."""
+        version = self._meta["_phys_version"] + 1
+        with self.io.lock(self._meta_dir):
+            head_txn = getattr(self, "_head_txn", None)
+            if head_txn is not None:
+                # the head is another transaction's in-flight write
+                # intent: block until its lease expires, then abort it
+                # via the same final-file CAS its coordinator races.
+                # (Applies when staging too: stacking one transaction's
+                # staged version on another's unresolved head would drop
+                # the first txn's snapshot from the lineage if both
+                # commit.)
+                from icebergplus_spark.lake.txn import abort_if_expired
+
+                decision = abort_if_expired(head_txn)
+                if decision != "aborted":
+                    raise ConcurrentCommitError(
+                        f"{self.identifier}: head metadata is "
+                        f"{'held by in-flight' if decision is None else 'committed by'} "
+                        f"transaction {head_txn['id']} — refresh() and retry"
+                    )
+            on_disk = self.io.current_version(self._meta_dir)
+            if on_disk != version - 1:
+                raise ConcurrentCommitError(
+                    f"{self.identifier}: expected metadata v{version - 1}, found "
+                    f"v{on_disk} — refresh() and retry"
+                )
+            self.io.publish(
+                self._meta_dir, version, json.dumps(meta, separators=(",", ":"))
+            )
 
     # -- table properties (Iceberg ALTER TABLE SET TBLPROPERTIES parity) ----
     @property
@@ -1529,6 +1574,10 @@ class LakeTable:
                 return s
         return None
 
+    def _lists(self, snap: dict[str, Any] | None) -> SnapshotLists:
+        """``snap``'s manifest, delete-manifest and added-file lists."""
+        return snapshot_lists(self._meta_dir, snap)
+
     # -- commit machinery --------------------------------------------------
     def _write_manifest(self, entries: list[dict[str, Any]]) -> str:
         name = f"manifest-{uuid.uuid4().hex}.parquet"
@@ -1550,12 +1599,14 @@ class LakeTable:
         attempts: int = 1,
         lineage_files: list[str] | None = None,
     ) -> None:
-        """Atomic snapshot commit: write vN+1 metadata, then advance the
-        table's published version via the pluggable commit IO
-        (commitio.py). RenameCommitIO: pointer swap under flock —
-        same-host writers fully serialized. ObjectStoreCommitIO: the
-        conditional create of vN+1 is the CAS, valid across hosts
-        (losers get ConcurrentCommitError and retry). ``attempts`` is
+        """Atomic snapshot commit: write the snapshot's list file and
+        vN+1 metadata, then advance the table's published version via
+        the pluggable commit IO (commitio.py). RenameCommitIO: pointer
+        swap under flock — same-host writers fully serialized.
+        ObjectStoreCommitIO: the conditional create of vN+1 is the CAS,
+        valid across hosts (losers get ConcurrentCommitError and retry;
+        the list file they wrote is left for remove_orphan_files, like
+        their manifests). ``attempts`` is
         surfaced as the commit report's attempts counter — the
         reference's Iceberg retry-loop metric."""
         delete_manifests = delete_manifests or []
@@ -1610,19 +1661,16 @@ class LakeTable:
             return pos, eq, files
 
         ps = parent_snap["summary"] if parent_snap else None
-        if (
-            parent_snap
-            and manifests[: len(parent_snap["manifests"])] == parent_snap["manifests"]
-        ):
-            recs, byts, files = _sum_manifests(
-                manifests[len(parent_snap["manifests"]):]
-            )
+        parent_lists = self._lists(parent_snap)
+        parent_m = parent_lists.manifests
+        if parent_snap and manifests[: len(parent_m)] == parent_m:
+            recs, byts, files = _sum_manifests(manifests[len(parent_m):])
             total_records = ps["total-records"] + recs
             total_bytes = ps["total-files-size"] + byts
             total_files = ps["total-data-files"] + files
         else:
             total_records, total_bytes, total_files = _sum_manifests(manifests)
-        parent_dm = parent_snap.get("delete_manifests", []) if parent_snap else []
+        parent_dm = parent_lists.delete_manifests
         if parent_snap and delete_manifests[: len(parent_dm)] == parent_dm:
             pos_deletes, eq_deletes, delete_files = _sum_delete_manifests(
                 delete_manifests[len(parent_dm):]
@@ -1639,14 +1687,21 @@ class LakeTable:
             "parent_snapshot_id": parent,
             "timestamp_ms": int(time.time() * 1000),
             "operation": operation,
-            "manifests": manifests,
-            "delete_manifests": delete_manifests,
-            # Files genuinely ADDED by this commit. Incremental/streaming
-            # consumers read this, never the manifest birth heuristic: a
-            # consolidated manifest (e.g. overwrite_partitions' survivors+new)
-            # would otherwise re-attribute every carried-over file to this
-            # snapshot and re-emit the untouched table as duplicates.
-            "added_files": sorted(e["file_path"] for e in added_entries),
+            # The snapshot's manifests, delete manifests and the files
+            # genuinely ADDED by this commit, written once to their own
+            # immutable list file. Incremental/streaming consumers read
+            # the added set, never the manifest birth heuristic: a
+            # consolidated manifest (e.g. overwrite_partitions'
+            # survivors+new) would otherwise re-attribute every
+            # carried-over file to this snapshot and re-emit the
+            # untouched table as duplicates.
+            "manifest_list": write_manifest_list(
+                self._meta_dir,
+                snap_id,
+                manifests,
+                delete_manifests,
+                sorted(e["file_path"] for e in added_entries),
+            ),
             "summary": {
                 "added-data-files": len(added_entries),
                 "added-records": sum(e["record_count"] for e in added_entries),
@@ -1665,8 +1720,7 @@ class LakeTable:
             # columns (compaction outputs) — scan_with_lineage reads
             # ids from these files instead of deriving them
             snapshot["lineage_files"] = sorted(lineage_files)
-        meta = dict(self._meta)
-        meta.pop("_version")
+        meta = self._next_meta()
         # Commit-time row-id allocation (Iceberg v3 first-row-id): each
         # added file gets a persisted first-row-id from a monotone
         # counter, so a row's id never depends on any OTHER file's
@@ -1682,21 +1736,12 @@ class LakeTable:
                     nxt += e["record_count"]
             meta["row_id_assignments"] = assignments
             meta["next_row_id"] = nxt
-        # Publish against the PHYSICAL head: an aborted transaction's
-        # staged version still occupies its version number, so the next
-        # commit lands above it while its content builds on the logical
-        # (resolved) state. A marker from a committed transaction is
-        # sealed here — stripped from the successor version, so readers
-        # stop paying the (cached) resolution stat.
-        version = meta.pop("_phys_version") + 1
-        meta.pop("pending_txn", None)
-        meta.pop("base_version", None)
         staging = getattr(self, "_staging_txn", None)
         if staging is not None:
             # multi-table transaction stage: visibility of this version
             # is decided by the transaction's final-file CAS (txn.py)
             meta["pending_txn"] = dict(staging)
-            meta["base_version"] = version - 1
+            meta["base_version"] = self._meta["_phys_version"]
         meta["snapshots"] = meta["snapshots"] + [snapshot]
         if branch is None:
             meta["current_snapshot_id"] = snap_id
@@ -1705,40 +1750,7 @@ class LakeTable:
             refs = dict(meta.get("refs") or {})
             refs[branch] = {"snapshot_id": snap_id, "type": "branch"}
             meta["refs"] = refs
-        # Critical section: version check → publish, under the IO's
-        # commit lock. Without it, two writers that both read vN could
-        # both pass the check and the second publication would silently
-        # drop the first commit. RenameCommitIO locks with flock
-        # (single-host); ObjectStoreCommitIO's publish is itself a CAS
-        # (conditional create of vN), so its lock only bounds wasted
-        # work — losers surface ConcurrentCommitError either way.
-        with self.io.lock(self._meta_dir):
-            # (applies when staging too: stacking one transaction's
-            # staged version on another's unresolved head would drop
-            # the first txn's snapshot from the lineage if both commit)
-            head_txn = getattr(self, "_head_txn", None)
-            if head_txn is not None:
-                # the head is another transaction's in-flight write
-                # intent: block until its lease expires, then abort it
-                # via the same final-file CAS its coordinator races
-                from icebergplus_spark.lake.txn import abort_if_expired
-
-                decision = abort_if_expired(head_txn)
-                if decision is None or decision == "committed":
-                    raise ConcurrentCommitError(
-                        f"{self.identifier}: head metadata is "
-                        f"{'held by in-flight' if decision is None else 'committed by'} "
-                        f"transaction {head_txn['id']} — refresh() and retry"
-                    )
-            on_disk = self.io.current_version(self._meta_dir)
-            if on_disk != version - 1:
-                raise ConcurrentCommitError(
-                    f"{self.identifier}: expected metadata v{version - 1}, found "
-                    f"v{on_disk} — refresh() and retry"
-                )
-            self.io.publish(
-                self._meta_dir, version, json.dumps(meta, separators=(",", ":"))
-            )
+        self._publish(meta)
         self.refresh()
         s = snapshot["summary"]
         self.reporter.report(
@@ -1884,7 +1896,7 @@ class LakeTable:
         if not snap:
             return []
         rows: list[dict[str, Any]] = []
-        for m in snap.get("delete_manifests", []):
+        for m in self._lists(snap).delete_manifests:
             rows.extend(pq.read_table(os.path.join(self._meta_dir, m)).to_pylist())
         return rows
 
@@ -1900,15 +1912,17 @@ class LakeTable:
         """First snapshot id each data file appears in (stand-in for
         Iceberg sequence numbers; drives equality-delete exemption).
         Snapshots record their added-file set at commit time, so this
-        is a walk over in-memory metadata — O(total added files), no
-        manifest I/O. Pre-``added_files`` snapshots (older tables) fall
-        back to reading their manifests once."""
+        is a walk over snapshot lists (cached after their first read) —
+        O(total added files), no manifest I/O. Snapshots that predate
+        the added-file record (older tables) fall back to reading their
+        manifests once."""
         births: dict[str, int] = {}
         for s in self._meta["snapshots"]:
-            added = s.get("added_files")
+            lists = self._lists(s)
+            added = lists.added_files
             if added is None:  # legacy snapshot: recover from manifests
                 added = []
-                for m in s["manifests"]:
+                for m in lists.manifests:
                     added.extend(
                         pq.read_table(
                             os.path.join(self._meta_dir, m),
@@ -2008,7 +2022,7 @@ class LakeTable:
         if cached is not None and cached[0] == key:
             return cached[1]
         out: dict[str, dict] = {}
-        for m in snap.get("manifests", []):
+        for m in self._lists(snap).manifests:
             for fe in pq.read_table(os.path.join(self._meta_dir, m)).to_pylist():
                 out[_as_uri(fe["file_path"])] = fe
         self._stats_by_uri_cache = (key, out)
@@ -2282,7 +2296,7 @@ class LakeTable:
         read, or tombstoned rows would resurrect in the rewrite."""
         if not paths:
             return local_rows_df(self.spark, [], self.physical_schema)
-        if not (snap and snap.get("delete_manifests")):
+        if not self._lists(snap).delete_manifests:
             return self._read_physical(paths)
         df = self._read_physical(paths, with_meta=True)
         return self._apply_deletes(df, snap, paths).drop("__file", "__pos")
@@ -2332,7 +2346,7 @@ class LakeTable:
         if all_paths is None:
             all_paths = list(self._snapshot_paths(snap))
         counts: dict[str, int] = {}
-        for m in snap["manifests"]:
+        for m in self._lists(snap).manifests:
             t = pq.read_table(
                 os.path.join(self._meta_dir, m),
                 columns=["file_path", "record_count"],
@@ -2383,7 +2397,7 @@ class LakeTable:
                 "__lin_file string, __first long, __birth long",
             )
             d = self._read_physical(plain, with_meta=True)
-            if snap.get("delete_manifests"):
+            if self._lists(snap).delete_manifests:
                 d = self._apply_deletes(d, snap, plain)
             d = (
                 d.join(_F.broadcast(lin), d["__file"] == lin["__lin_file"])
@@ -2405,7 +2419,7 @@ class LakeTable:
                 StructField(self.LINEAGE_BIRTH_COL, LongType()),
             ]
             d = self._read_physical(mat_paths, with_meta=True, extra_fields=extra)
-            if snap.get("delete_manifests"):
+            if self._lists(snap).delete_manifests:
                 d = self._apply_deletes(d, snap, mat_paths)
             # Iceberg v3 inheritance rule: a NULL materialized cell means
             # "assign at read from the file's committed first-row-id /
@@ -2498,7 +2512,7 @@ class LakeTable:
             and self._driver_sized(sum(e["record_count"] for e in entries), phys.fields)
             and not self.partition_spec
             and not any("=" in os.path.basename(os.path.dirname(p)) for p in paths)
-            and not snap.get("delete_manifests")
+            and not self._lists(snap).delete_manifests
             and not self._meta.get("column_defaults")
         ):
             return None
@@ -2654,10 +2668,10 @@ class LakeTable:
         dmanifest = self._write_delete_manifest(new_entries)
         self._commit_snapshot(
             "delete",
-            list(snap["manifests"]) if snap else [],
+            self._lists(snap).manifests,
             [],
             t0,
-            delete_manifests=(snap.get("delete_manifests", []) if snap else [])
+            delete_manifests=self._lists(snap).delete_manifests
             + [dmanifest],
         )
         return self
@@ -2754,12 +2768,10 @@ class LakeTable:
             return self  # nothing newly deleted — no snapshot churn
         self._commit_snapshot(
             "delete",
-            list(snap["manifests"]) if snap else [],
+            self._lists(snap).manifests,
             [],
             t0,
-            delete_manifests=(
-                snap.get("delete_manifests", []) if snap else []
-            )
+            delete_manifests=self._lists(snap).delete_manifests
             + [dmanifest],
             extra_summary=extra_summary,
         )
@@ -2780,12 +2792,10 @@ class LakeTable:
         advances (ADVICE r6)."""
         self._commit_snapshot(
             "delete",
-            list(snap["manifests"]) if snap else [],
+            self._lists(snap).manifests,
             [],
             t0,
-            delete_manifests=(
-                list(snap.get("delete_manifests", [])) if snap else []
-            ),
+            delete_manifests=self._lists(snap).delete_manifests,
             extra_summary=extra_summary,
         )
         return self
@@ -2908,10 +2918,10 @@ class LakeTable:
         dmanifest = self._write_delete_manifest(new_entries)
         self._commit_snapshot(
             "delete",
-            list(snap["manifests"]),
+            self._lists(snap).manifests,
             [],
             t0,
-            delete_manifests=snap.get("delete_manifests", []) + [dmanifest],
+            delete_manifests=self._lists(snap).delete_manifests + [dmanifest],
             extra_summary=extra_summary,
         )
         return self
@@ -3374,10 +3384,10 @@ class LakeTable:
         entries, ndv, manifest = self._write_data_files(df, None)
         self._commit_snapshot(
             "upsert",
-            base["manifests"] + [manifest],
+            self._lists(base).manifests + [manifest],
             entries,
             t0,
-            delete_manifests=base.get("delete_manifests", []) + [dmanifest],
+            delete_manifests=self._lists(base).delete_manifests + [dmanifest],
             extra_summary=(
                 {**({"added-ndv": ndv} if ndv else {}), **(extra_summary or {})}
                 or None
@@ -3420,7 +3430,7 @@ class LakeTable:
             base = (
                 self.snapshot(self._resolve_ref(branch)) if branch else self.snapshot()
             )
-            manifests = (base["manifests"] if base else []) + [manifest]
+            manifests = self._lists(base).manifests + [manifest]
             try:
                 self._commit_snapshot(
                     "append",
@@ -3428,7 +3438,7 @@ class LakeTable:
                     entries,
                     t0,
                     branch=branch,
-                    delete_manifests=base.get("delete_manifests", []) if base else [],
+                    delete_manifests=self._lists(base).delete_manifests,
                     extra_summary=(
                         {**({"added-ndv": ndv} if ndv else {}), **(extra_summary or {})}
                         or None
@@ -3541,10 +3551,10 @@ class LakeTable:
         base = self.snapshot()
         self._commit_snapshot(
             "append",
-            (base["manifests"] if base else []) + [manifest],
+            self._lists(base).manifests + [manifest],
             entries,
             t0,
-            delete_manifests=base.get("delete_manifests", []) if base else [],
+            delete_manifests=self._lists(base).delete_manifests,
         )
         return self
 
@@ -3566,15 +3576,16 @@ class LakeTable:
                 s["snapshot_id"] > from_snapshot_id
                 and s["operation"] in ("append", "overwrite", "upsert")
             )
-            if "added_files" in s:
+            lists = self._lists(s)
+            if lists.added_files is not None:
                 # authoritative per-commit added set — immune to carried-
                 # over files sharing a manifest with the additions
                 if is_wanted:
-                    new_files.extend(s["added_files"])
-                seen.update(s["manifests"])
+                    new_files.extend(lists.added_files)
+                seen.update(lists.manifests)
                 continue
             # legacy snapshots: manifest birth = first appearance in the log
-            for m in s["manifests"]:
+            for m in lists.manifests:
                 if m in seen:
                     continue
                 seen.add(m)
@@ -3595,7 +3606,7 @@ class LakeTable:
         if snap is None:
             return set()
         paths: set[str] = set()
-        for m in snap["manifests"]:
+        for m in self._lists(snap).manifests:
             t = pq.read_table(
                 os.path.join(self._meta_dir, m), columns=["file_path"]
             )
@@ -3649,7 +3660,7 @@ class LakeTable:
         if eq_entries:
             births = self._file_births()
             entries: list[dict[str, Any]] = []
-            for m in prev["manifests"]:
+            for m in self._lists(prev).manifests:
                 entries.extend(
                     pq.read_table(os.path.join(self._meta_dir, m)).to_pylist()
                 )
@@ -3778,8 +3789,8 @@ class LakeTable:
                 continue
             p_prev = self._snapshot_paths(prev)
             p_s = self._snapshot_paths(s)
-            dm_prev = set(prev.get("delete_manifests", [])) if prev else set()
-            dm_added = set(s.get("delete_manifests", [])) - dm_prev
+            dm_prev = set(self._lists(prev).delete_manifests)
+            dm_added = set(self._lists(s).delete_manifests) - dm_prev
             if dm_added:
                 # Bounded MoR diff (r3 verdict #9): only files the NEW
                 # tombstones can actually hit are diffed — position
@@ -3819,7 +3830,7 @@ class LakeTable:
 
         def entries_map(snap: dict[str, Any] | None) -> dict[str, dict[str, Any]]:
             merged: dict[str, dict[str, Any]] = {}
-            for m in snap["manifests"] if snap else []:
+            for m in self._lists(snap).manifests:
                 if m not in cache:
                     t = pq.read_table(os.path.join(self._meta_dir, m))
                     cache[m] = {r["file_path"]: r for r in t.to_pylist()}
@@ -3865,7 +3876,7 @@ class LakeTable:
         snap_before = self.current_snapshot_id
         self.append(df)  # writes files + interim append snapshot
         appended = self.snapshot()
-        new_manifest = appended["manifests"][-1]
+        new_manifest = self._lists(appended).manifests[-1]
         # rewrite metadata so the final snapshot is a clean REPLACE over
         # only the newly written manifest
         entries = pq.read_table(os.path.join(self._meta_dir, new_manifest)).to_pylist()
@@ -3957,7 +3968,7 @@ class LakeTable:
             [manifest],
             new_entries,
             t0,
-            delete_manifests=snap.get("delete_manifests", []) if snap else [],
+            delete_manifests=self._lists(snap).delete_manifests,
             lineage_files=(
                 [e["file_path"] for e in new_entries] if carry_lineage else None
             ),
@@ -4457,7 +4468,7 @@ class LakeTable:
             if out_dir is not None:
                 _shutil.rmtree(out_dir, ignore_errors=True)
             return self  # no clause fired on any row
-        manifests = list(snap["manifests"]) if snap else []
+        manifests = self._lists(snap).manifests
         if new_entries:
             manifests.append(self._write_manifest(new_entries))
         self._commit_snapshot(
@@ -4465,7 +4476,7 @@ class LakeTable:
             manifests,
             new_entries,
             t0,
-            delete_manifests=(snap.get("delete_manifests", []) if snap else [])
+            delete_manifests=self._lists(snap).delete_manifests
             + ([dmanifest] if dmanifest else []),
             lineage_files=(
                 [e["file_path"] for e in new_entries]
@@ -4833,7 +4844,7 @@ class LakeTable:
             [manifest],
             new_entries,
             t0,
-            delete_manifests=snap.get("delete_manifests", []) if snap else [],
+            delete_manifests=self._lists(snap).delete_manifests,
             lineage_files=(
                 [e["file_path"] for e in new_entries] if carry_lineage else None
             ),
@@ -4918,7 +4929,7 @@ class LakeTable:
             [manifest],
             new_entries,
             t0,
-            delete_manifests=snap.get("delete_manifests", []) if snap else [],
+            delete_manifests=self._lists(snap).delete_manifests,
             lineage_files=(
                 [e["file_path"] for e in new_entries]
                 if new_entries and "row_id_assignments" in self._meta
@@ -4983,7 +4994,7 @@ class LakeTable:
             [manifest],
             entries,
             t0,
-            delete_manifests=snap.get("delete_manifests", []) if snap else [],
+            delete_manifests=self._lists(snap).delete_manifests,
             extra_summary={"added-ndv": ndv} if ndv else None,
         )
         return self
@@ -5080,7 +5091,7 @@ class LakeTable:
 
             _shutil.rmtree(out_dir, ignore_errors=True)
             return self  # predicates matched no live rows
-        manifests = list(snap["manifests"])
+        manifests = self._lists(snap).manifests
         if new_entries:
             manifests.append(self._write_manifest(new_entries))
         self._commit_snapshot(
@@ -5088,7 +5099,7 @@ class LakeTable:
             manifests,
             new_entries,
             t0,
-            delete_manifests=snap.get("delete_manifests", [])
+            delete_manifests=self._lists(snap).delete_manifests
             + ([dmanifest] if dmanifest else []),
             lineage_files=(
                 [e["file_path"] for e in new_entries]
@@ -5211,7 +5222,7 @@ class LakeTable:
             [manifest],
             new_entries,
             t0,
-            delete_manifests=snap.get("delete_manifests", []) if snap else [],
+            delete_manifests=self._lists(snap).delete_manifests,
             lineage_files=(
                 [e["file_path"] for e in new_entries] if carry_lineage else None
             ),
@@ -5529,13 +5540,13 @@ class LakeTable:
             snap = self.snapshot()
             return [
                 {"path": m, "snapshot_id": snap["snapshot_id"]}
-                for m in (snap["manifests"] if snap else [])
+                for m in self._lists(snap).manifests
             ], "path string, snapshot_id long"
         if kind == "all_manifests":
             return [
                 {"path": m, "snapshot_id": s["snapshot_id"], "content": "data"}
                 for s in self._meta["snapshots"]
-                for m in s["manifests"]
+                for m in self._lists(s).manifests
             ] + [
                 {
                     "path": m,
@@ -5543,7 +5554,7 @@ class LakeTable:
                     "content": "deletes",
                 }
                 for s in self._meta["snapshots"]
-                for m in s.get("delete_manifests", [])
+                for m in self._lists(s).delete_manifests
             ], "path string, snapshot_id long, content string"
         if kind == "metadata_log_entries":
             # Iceberg's db.t.metadata_log_entries: every metadata version
@@ -5668,7 +5679,7 @@ class LakeTable:
         ]
         snap = self.snapshot()
         agg: dict[str, list[int]] = {}
-        for m in (snap["manifests"] if snap else []):
+        for m in self._lists(snap).manifests:
             t = pq.read_table(
                 os.path.join(self._meta_dir, m),
                 columns=["record_count", "column_mins"],
@@ -5725,7 +5736,7 @@ class LakeTable:
                 )
             # distributed read of the manifest parquet files themselves
             return self.spark.read.parquet(
-                *[os.path.join(self._meta_dir, m) for m in snap["manifests"]]
+                *[os.path.join(self._meta_dir, m) for m in self._lists(snap).manifests]
             )
         elif kind == "all_files":
             # Iceberg's db.t.all_data_files: files across EVERY retained
@@ -5735,7 +5746,7 @@ class LakeTable:
                 {
                     m
                     for s in self._meta["snapshots"]
-                    for m in s["manifests"]
+                    for m in self._lists(s).manifests
                 }
             )
             if not all_manifests:
@@ -5754,7 +5765,7 @@ class LakeTable:
                 {
                     m
                     for s in self._meta["snapshots"]
-                    for m in s.get("delete_manifests", [])
+                    for m in self._lists(s).delete_manifests
                 }
             )
             if not all_dm:
@@ -5780,7 +5791,7 @@ class LakeTable:
             for snap in sorted(
                 self._meta["snapshots"], key=lambda x: x["snapshot_id"]
             ):
-                for m in snap["manifests"]:
+                for m in self._lists(snap).manifests:
                     born.setdefault(m, snap["snapshot_id"])
                     refs.append((m, snap["snapshot_id"]))
             distinct_m = sorted(born)
@@ -5957,7 +5968,7 @@ class LakeTable:
         from pyspark.sql import functions as _F
 
         files = self.spark.read.parquet(
-            *[os.path.join(self._meta_dir, m) for m in snap["manifests"]]
+            *[os.path.join(self._meta_dir, m) for m in self._lists(snap).manifests]
         )
         phys_preds = self._physical_predicates(predicates)
         if phys_preds:
@@ -5978,7 +5989,7 @@ class LakeTable:
         from pyspark.sql import functions as _F
 
         df = self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self._meta_dir, m) for m in snap["manifests"]]
+            *[os.path.join(self._meta_dir, m) for m in self._lists(snap).manifests]
         )
         if "column_nan_counts" not in df.columns:
             df = df.withColumn(
@@ -5994,7 +6005,7 @@ class LakeTable:
         twice per call (once for tier selection, once inside
         plan_files — review r9)."""
         return sum(
-            self._manifest_row_count(m) for m in snap["manifests"]
+            self._manifest_row_count(m) for m in self._lists(snap).manifests
         )
 
     def _manifest_row_count(self, manifest: str) -> int:
@@ -6232,14 +6243,14 @@ class LakeTable:
             kept = self.plan_files_distributed(predicates, snapshot_id)
         else:
             rows: list[dict[str, Any]] = []
-            for m in snap["manifests"]:
+            for m in self._lists(snap).manifests:
                 t = pq.read_table(os.path.join(self._meta_dir, m))
                 rows.extend(t.to_pylist())
             phys_preds = self._physical_predicates(predicates)
             kept = [r for r in rows if _file_matches(r, phys_preds)]
         n_delete_files = sum(
             pq.read_metadata(os.path.join(self._meta_dir, m)).num_rows
-            for m in snap.get("delete_manifests", [])
+            for m in self._lists(snap).delete_manifests
         )
         self.reporter.report(
             ScanReport(
@@ -6283,7 +6294,7 @@ class LakeTable:
         if snap is None:
             return 0
         branches = _normalize_branches(predicates) if predicates else None
-        if snap.get("delete_manifests"):
+        if self._lists(snap).delete_manifests:
             # tombstones change live counts in ways stats can't see —
             # but the SCAN is still stats-pruned to matching files
             # (review r7: scan(None) here read the whole table)
@@ -6465,7 +6476,7 @@ class LakeTable:
                 for i, c in enumerate(cols)
             }
 
-        if snap.get("delete_manifests"):
+        if self._lists(snap).delete_manifests:
             # tombstones hide rows from stats — exact filtered aggregate
             # over the (still stats-pruned) scan
             if branches is None:
@@ -6717,7 +6728,7 @@ class LakeTable:
                 _F.count(_F.lit(1)).alias(alias)
             )
 
-        if snap.get("delete_manifests"):
+        if self._lists(snap).delete_manifests:
             base = (
                 self.scan(None, snapshot_id)
                 if branches is None
@@ -7021,7 +7032,7 @@ class LakeTable:
                 )
             return df.groupBy(*columns).agg(*_agg_exprs(exact=exact))
 
-        if snap.get("delete_manifests"):
+        if self._lists(snap).delete_manifests:
             base = (
                 self.scan(None, snapshot_id)
                 if branches is None
@@ -7519,7 +7530,7 @@ class LakeTable:
         t_plan = time.time()
         n_entries = sum(
             pq.read_metadata(os.path.join(self._meta_dir, m)).num_rows
-            for m in snap["manifests"]
+            for m in self._lists(snap).manifests
         )
         threshold = int(
             self.properties.get("planning.distributed-threshold", "100000")
@@ -7528,7 +7539,7 @@ class LakeTable:
             from pyspark.sql import functions as _F
 
             files_df = self.spark.read.parquet(
-                *[os.path.join(self._meta_dir, m) for m in snap["manifests"]]
+                *[os.path.join(self._meta_dir, m) for m in self._lists(snap).manifests]
             )
             keep = _F.lit(False)
             for p in preds:
@@ -7536,7 +7547,7 @@ class LakeTable:
             kept = [r.asDict() for r in files_df.filter(keep).collect()]
         else:
             rows: list[dict[str, Any]] = []
-            for m in snap["manifests"]:
+            for m in self._lists(snap).manifests:
                 rows.extend(
                     pq.read_table(os.path.join(self._meta_dir, m)).to_pylist()
                 )
@@ -7729,7 +7740,7 @@ class LakeTable:
         snap = self.snapshot(snapshot_id)
         if snap is None:
             return 0
-        if snap.get("delete_manifests"):
+        if self._lists(snap).delete_manifests:
             return None
         mapping = self._column_mapping
         phys = mapping.get(col, col)
@@ -7827,7 +7838,7 @@ class LakeTable:
         )
         if snap is None:
             return local_rows_df(self.spark, [], out_schema)
-        if snap.get("delete_manifests"):
+        if self._lists(snap).delete_manifests:
             return None
         if any(
             not _stats_foldable(f.dataType) for f in gfields
@@ -8042,7 +8053,7 @@ class LakeTable:
         snap = self.snapshot(snapshot_id)
         if snap is None:
             return []
-        if snap.get("delete_manifests"):
+        if self._lists(snap).delete_manifests:
             return None  # hidden rows → row accounting unsound
         field = next(
             (f for f in self.schema.fields if f.name == col), None

@@ -1121,7 +1121,7 @@ def q118_compaction_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 5 small appends → 5 small files (the streaming-ingest debris shape)
     for i in range(5):
         t = t.append(orders.filter(F.col("o_orderkey") % 20 == (1 + 4 * i)))
-    before = len(t.snapshot()["manifests"])
+    before = len(t._lists(t.snapshot()).manifests)
     report = compact(t)
     t = t.refresh()
     assert report["files_after"] < report["files_before"], report

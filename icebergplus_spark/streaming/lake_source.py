@@ -36,14 +36,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from icebergplus_spark.lake.manifest_list import snapshot_lists
+
 SOURCE_NAME = "lake_stream"
 
 
 def _make_source():
     """Build the DataSource class. Everything the executors touch is
-    defined inside this closure with stdlib/pyarrow/pyspark imports
-    only, so cloudpickle ships it without needing this package on the
-    Python workers' import path."""
+    defined inside this closure with stdlib/pyarrow/pyspark imports,
+    plus ``snapshot_lists`` from the stdlib-only ``lake.manifest_list``
+    (pickled by reference, so the reader's planning worker imports
+    this package, as the lake's own pandas UDFs do)."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
@@ -150,7 +153,7 @@ def _make_source():
             schema_json = json.dumps(meta["schema"])
             meta_dir = os.path.join(self.table_dir, "metadata")
             # a micro-batch owns the files ADDED by commits in (lo, hi].
-            # Snapshots record their added set directly ("added_files");
+            # Snapshots record their added set directly (added_files);
             # for legacy snapshots fall back to manifest birth = first
             # appearance in the (id-ordered) log. The explicit set matters
             # for consolidated manifests (overwrite_partitions writes
@@ -166,12 +169,13 @@ def _make_source():
                     "overwrite",
                     "upsert",
                 )
-                if "added_files" in s:
+                lists = snapshot_lists(meta_dir, s)
+                if lists.added_files is not None:
                     if wanted:
-                        paths.extend(s["added_files"])
-                    seen.update(s["manifests"])
+                        paths.extend(lists.added_files)
+                    seen.update(lists.manifests)
                     continue
-                for m in s["manifests"]:
+                for m in lists.manifests:
                     if m in seen:
                         continue
                     seen.add(m)
@@ -436,12 +440,10 @@ def _make_cdc_source():
                     continue
                 sid = s["snapshot_id"]
                 prev = parent(s)
-                p_prev = (
-                    self._manifest_paths(meta_dir, prev["manifests"], mcache)
-                    if prev
-                    else set()
-                )
-                p_s = self._manifest_paths(meta_dir, s["manifests"], mcache)
+                prev_lists = snapshot_lists(meta_dir, prev)
+                s_lists = snapshot_lists(meta_dir, s)
+                p_prev = self._manifest_paths(meta_dir, prev_lists.manifests, mcache)
+                p_s = self._manifest_paths(meta_dir, s_lists.manifests, mcache)
                 for p in sorted(p_s - p_prev):
                     parts.append(
                         InputPartition(
@@ -468,8 +470,8 @@ def _make_cdc_source():
                             }
                         )
                     )
-                dm_prev = set(prev.get("delete_manifests", [])) if prev else set()
-                for dm in s.get("delete_manifests", []):
+                dm_prev = set(prev_lists.delete_manifests)
+                for dm in s_lists.delete_manifests:
                     if dm in dm_prev:
                         continue
                     for e in pq.read_table(os.path.join(meta_dir, dm)).to_pylist():
@@ -491,9 +493,7 @@ def _make_cdc_source():
                             # their predecessors) — ship the ordered
                             # prev dv paths for the subtraction
                             prev_dvs = []
-                            for pm in (
-                                prev.get("delete_manifests", []) if prev else []
-                            ):
+                            for pm in prev_lists.delete_manifests:
                                 for pe in pq.read_table(
                                     os.path.join(meta_dir, pm)
                                 ).to_pylist():
@@ -517,7 +517,9 @@ def _make_cdc_source():
                                 births = {}
                                 for t in log:
                                     for p in self._manifest_paths(
-                                        meta_dir, t["manifests"], mcache
+                                        meta_dir,
+                                        snapshot_lists(meta_dir, t).manifests,
+                                        mcache,
                                     ):
                                         births.setdefault(p, t["snapshot_id"])
                             for p in sorted(p_prev):
@@ -845,7 +847,9 @@ def _make_batch_source():
                 )
             if snap is None:  # empty table
                 return []
-            if snap.get("delete_manifests"):
+            meta_dir = os.path.join(self.table_dir, "metadata")
+            lists = snapshot_lists(meta_dir, snap)
+            if lists.delete_manifests:
                 raise ValueError(
                     "lake batch source: snapshot has live merge-on-read "
                     "deletes — read through LakeTable.scan(), which applies "
@@ -855,9 +859,8 @@ def _make_batch_source():
                 f["name"]: f["name"] for f in meta["schema"]["fields"]
             }
             schema_json = json.dumps(meta["schema"])
-            meta_dir = os.path.join(self.table_dir, "metadata")
             paths: list[str] = []
-            for m in snap["manifests"]:
+            for m in lists.manifests:
                 t = pq.read_table(
                     os.path.join(meta_dir, m), columns=["file_path"]
                 )
@@ -1067,10 +1070,10 @@ def _make_batch_writer_source():
             else:
                 t._commit_snapshot(
                     "append",
-                    base["manifests"] + [manifest],
+                    t._lists(base).manifests + [manifest],
                     entries,
                     t0,
-                    delete_manifests=base.get("delete_manifests", []),
+                    delete_manifests=t._lists(base).delete_manifests,
                 )
 
         def abort(self, messages):

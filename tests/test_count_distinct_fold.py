@@ -23,6 +23,7 @@ from pyspark.sql.types import (
 
 from icebergplus_spark.lake import LocalLakeCatalog
 from icebergplus_spark.lake.sql_dml import lake_sql
+from icebergplus_spark.lake.manifest_list import snapshot_lists
 
 T = StructType(
     [
@@ -131,7 +132,7 @@ def test_cd_pre_upgrade_backcompat(spark, tmp_path):
     # simulate a pre-upgrade manifest: strip the column and rewrite
     import pyarrow.parquet as pq
 
-    for m in t.snapshot()["manifests"]:
+    for m in snapshot_lists(t._meta_dir, t.snapshot()).manifests:
         p = os.path.join(t._meta_dir, m)
         tbl = pq.read_table(p)
         tbl = tbl.drop_columns(["column_distincts"])

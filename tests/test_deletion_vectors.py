@@ -17,6 +17,7 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from icebergplus_spark.lake import LocalLakeCatalog, compact, expire_snapshots
 from icebergplus_spark.lake import dv as dvmod
+from icebergplus_spark.lake.manifest_list import snapshot_lists
 
 SCHEMA = StructType(
     [StructField("k", IntegerType(), True), StructField("v", StringType(), True)]
@@ -195,7 +196,7 @@ def test_vacuum_keeps_live_vectors_then_purge_removes(table):
     keep = [4, 5, 6, 7, 8, 9, 10, 11]
     assert sorted(r["k"] for r in table.scan().collect()) == keep
     compact(table, target_file_size=64 * 1024 * 1024, purge_deletes=True)
-    assert table.snapshot()["delete_manifests"] == []
+    assert snapshot_lists(table._meta_dir, table.snapshot()).delete_manifests == []
     expire_snapshots(table, keep_last=1)
     assert all(not os.path.exists(p) for p in dv_files)
     assert sorted(r["k"] for r in table.scan().collect()) == keep

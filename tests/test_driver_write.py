@@ -25,6 +25,7 @@ import pytest
 from icebergplus_spark.lake import LocalLakeCatalog
 from icebergplus_spark.lake.sql_dml import lake_sql
 from icebergplus_spark.localrel import local_rows_df
+from icebergplus_spark.lake.manifest_list import snapshot_lists
 
 
 @pytest.fixture()
@@ -692,7 +693,7 @@ def test_rewrite_input_declines_to_spark_read(spark, cat, tmp_path):
     mor.set_property("write.delete.mode", "merge-on-read")
     mor.delete({"k": ("=", 5)})
     mor.set_property("write.delete.mode", "copy-on-write")
-    assert mor.snapshot().get("delete_manifests")
+    assert snapshot_lists(mor._meta_dir, mor.snapshot()).delete_manifests
     _declines_then_deletes(mor, model[model.k != 5])
 
     dflt = table("d.dflt")

@@ -19,6 +19,7 @@ from pyspark.sql.types import (
 
 from icebergplus_spark.lake import LocalLakeCatalog, rewrite_manifests
 from icebergplus_spark.localrel import local_rows_df
+from icebergplus_spark.lake.manifest_list import snapshot_lists
 
 SCHEMA = StructType(
     [StructField("k", IntegerType(), True), StructField("s", StringType(), True)]
@@ -113,10 +114,10 @@ def test_append_records_ndv_stats(table):
 def test_rewrite_manifests_consolidates(table):
     t = table
     pre_snap = t.current_snapshot_id
-    assert len(t.snapshot()["manifests"]) == 3
+    assert len(snapshot_lists(t._meta_dir, t.snapshot()).manifests) == 3
     res = rewrite_manifests(t)
     assert res == {"manifests_before": 3, "manifests_after": 1, "entries": 3}
-    assert len(t.snapshot()["manifests"]) == 1
+    assert len(snapshot_lists(t._meta_dir, t.snapshot()).manifests) == 1
     # contents identical, counts identical, metadata count still works
     assert t.count_rows() == 35
     assert sorted(r["k"] for r in t.scan().collect()) == list(range(35))
@@ -132,7 +133,7 @@ def test_rewrite_manifests_after_append_keeps_planning_small(table):
     t = table
     rewrite_manifests(t)
     t.append(local_rows_df(t.spark, [(100, "z")], SCHEMA))
-    assert len(t.snapshot()["manifests"]) == 2  # consolidated + new append
+    assert len(snapshot_lists(t._meta_dir, t.snapshot()).manifests) == 2  # consolidated + new append
     assert t.count_rows() == 36
     assert t.count_rows({"k": ("=", 100)}) == 1
 

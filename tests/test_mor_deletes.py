@@ -18,6 +18,7 @@ from icebergplus_spark.lake import (
     remove_orphan_files,
 )
 from icebergplus_spark.localrel import local_rows_df
+from icebergplus_spark.lake.manifest_list import snapshot_lists
 
 SCHEMA = StructType(
     [StructField("k", IntegerType(), True), StructField("v", StringType(), True)]
@@ -138,7 +139,7 @@ def test_compact_applies_and_purges_tombstones(spark, table):
     res = compact(table, target_file_size=64 * 1024 * 1024, purge_deletes=True)
     assert res["purged_deletes"] is True
     snap = table.snapshot()
-    assert snap["delete_manifests"] == []
+    assert snapshot_lists(table._meta_dir, snap).delete_manifests == []
     assert snap["summary"]["total-position-deletes"] == 0
     assert _keys(table) == [4, 5, 6, 7, 8, 9]
     # total records in manifest reflect the physical purge
@@ -148,7 +149,7 @@ def test_compact_applies_and_purges_tombstones(spark, table):
 def test_expire_and_orphans_keep_live_delete_files(table):
     table.delete_where({"k": ("<", 2)})
     snap = table.snapshot()
-    dm = snap["delete_manifests"]
+    dm = snapshot_lists(table._meta_dir, snap).delete_manifests
     assert dm
     # delete files survive vacuum + orphan sweep while referenced
     expire_snapshots(table, keep_last=1)
@@ -246,7 +247,9 @@ def test_update_where_mor_vs_cow(spark, table):
         assert before_paths <= after_paths
         snap = table.snapshot()
         assert snap["operation"] == "update"
-        assert snap.get("delete_manifests"), "no DV manifest committed"
+        assert snapshot_lists(table._meta_dir, snap).delete_manifests, (
+            "no DV manifest committed"
+        )
     else:
         # CoW rewrites affected files out of the plan
         assert not (before_paths <= after_paths)

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 
 from icebergplus_spark.lake import LocalLakeCatalog
 from icebergplus_spark.lake.table import LakeTable
+from icebergplus_spark.lake.manifest_list import snapshot_lists
 
 SCHEMA = StructType(
     [
@@ -179,7 +180,7 @@ def test_executor_tier_engages_at_real_threshold(spark, tmp_path):
     assert "planning.distributed-threshold" not in (t.properties or {})
     total = sum(
         pq.read_metadata(os.path.join(t._meta_dir, m)).num_rows
-        for m in t.snapshot()["manifests"]
+        for m in snapshot_lists(t._meta_dir, t.snapshot()).manifests
     )
     assert total > 100_000  # past the REAL default
 

@@ -15,6 +15,7 @@ from pyspark.sql.types import (
 )
 
 from icebergplus_spark.lake import LocalLakeCatalog, compact
+from icebergplus_spark.lake.manifest_list import snapshot_lists
 
 SCHEMA = StructType(
     [
@@ -210,7 +211,8 @@ def test_changelog_mor_delete_reads_only_affected_files(spark, tmp_path):
     snap = t.snapshot()
     prev = t.snapshot(snap["parent_snapshot_id"])
     affected = t._tombstone_affected_paths(
-        set(snap["delete_manifests"]) - set(prev.get("delete_manifests", [])),
+        set(snapshot_lists(t._meta_dir, snap).delete_manifests)
+        - set(snapshot_lists(t._meta_dir, prev).delete_manifests),
         prev,
     )
     assert len(affected) == 1  # only the victim file, of 4
@@ -239,7 +241,8 @@ def test_changelog_equality_delete_pruned_by_stats(spark, tmp_path):
     snap = t.snapshot()
     prev = t.snapshot(snap["parent_snapshot_id"])
     affected = t._tombstone_affected_paths(
-        set(snap["delete_manifests"]) - set(prev.get("delete_manifests", [])),
+        set(snapshot_lists(t._meta_dir, snap).delete_manifests)
+        - set(snapshot_lists(t._meta_dir, prev).delete_manifests),
         prev,
     )
     assert len(affected) == 1  # stats-pruned to the 100..101 file
@@ -272,7 +275,8 @@ def test_changelog_equality_delete_bloom_prunes_inside_range(spark, tmp_path):
     snap = t.snapshot()
     prev = t.snapshot(snap["parent_snapshot_id"])
     affected = t._tombstone_affected_paths(
-        set(snap["delete_manifests"]) - set(prev.get("delete_manifests", [])),
+        set(snapshot_lists(t._meta_dir, snap).delete_manifests)
+        - set(snapshot_lists(t._meta_dir, prev).delete_manifests),
         prev,
     )
     assert len(affected) == 1  # bloom excluded the odd file

@@ -13,6 +13,7 @@ from pyspark.sql.types import (
 )
 
 from icebergplus_spark.lake import LocalLakeCatalog
+from icebergplus_spark.lake.manifest_list import snapshot_lists
 
 SCHEMA = StructType(
     [
@@ -362,7 +363,7 @@ def test_delete_file_harvest_distributed_equivalence(spark, tmp_path):
         )
         snap = t.snapshot()
         entries = []
-        for m in snap.get("delete_manifests", []):
+        for m in snapshot_lists(t._meta_dir, snap).delete_manifests:
             for e in _pq.read_table(
                 _os.path.join(t._meta_dir, m)
             ).to_pylist():
