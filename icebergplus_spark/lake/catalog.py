@@ -24,6 +24,7 @@ from enum import Enum
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
+from icebergplus_spark.lake import upgrade
 from icebergplus_spark.lake.commitio import RenameCommitIO
 from icebergplus_spark.lake.metrics import MetricsReporter, MetricsSink
 from icebergplus_spark.lake.table import LakeTable
@@ -257,6 +258,8 @@ class LocalLakeCatalog:
             "bloom_cols": list(bloom_cols or []),
             "snapshots": [],
             "current_snapshot_id": None,
+            "format_version": upgrade.FORMAT_VERSION,
+            "next_row_id": 0,
         }
         self.commit_io.publish(meta_dir, 1, json.dumps(meta, separators=(",", ":")))
         with open(self._pointer_file(identifier), "w") as f:
@@ -356,6 +359,14 @@ class LocalLakeCatalog:
                     shutil.copy2(
                         os.path.join(src._meta_dir, m), os.path.join(meta_dir, m)
                     )
+        # an upgraded source's facts file travels like its manifests; a
+        # source lifted in memory only has its facts written here
+        if meta.get("lineage_facts"):
+            shutil.copy2(
+                os.path.join(src._meta_dir, meta["lineage_facts"]),
+                os.path.join(meta_dir, meta["lineage_facts"]),
+            )
+        meta = upgrade.seal(meta_dir, meta)
         self.commit_io.publish(meta_dir, 1, json.dumps(meta, separators=(",", ":")))
         with open(self._pointer_file(dst_identifier), "w") as f:
             json.dump({"table_dir": table_dir}, f)

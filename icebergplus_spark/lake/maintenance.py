@@ -177,17 +177,13 @@ def compact(
     # partition transforms so layout — and pruning — survive compaction.
     # _read_live applies merge-on-read tombstones — the rewrite must not
     # resurrect deleted rows.
-    # Row-lineage inheritance (Iceberg v3 materialized lineage): when
-    # the table allocates row ids at commit time, the rewrite CARRIES
-    # each row's id and birth snapshot into the output files as
-    # materialized __lineage_* columns, so scan_with_lineage is
-    # hash-identical across compaction. Two delta-encoded long columns
-    # of mostly-sequential values — negligible bytes at any scale.
-    small_paths = [f["file_path"] for f in small]
-    carry_lineage = "row_id_assignments" in table._meta or bool(
-        table._materialized_lineage_paths(snap, small_paths)
-    )
-    df = table._rewrite_input(snap, small, carry_lineage)
+    # Row-lineage inheritance (Iceberg v3 materialized lineage): the
+    # rewrite CARRIES each row's id and birth snapshot into the output
+    # files as materialized __lineage_* columns, so scan_with_lineage
+    # is hash-identical across compaction. Two delta-encoded long
+    # columns of mostly-sequential values — negligible bytes at any
+    # scale.
+    df = table._rewrite_input(snap, small, True)
     if zorder_by and sort_by:
         raise ValueError("pass either sort_by or zorder_by, not both")
     if zorder_by:
@@ -273,10 +269,11 @@ def compact(
     df, pcols = table._apply_partition_transforms(df)
     # the driver writer makes one file: only a one-file target has a bound
     bound = sum(f["record_count"] for f in small) if n_out == 1 else None
-    new_entries = table._harvest_rewrite(table._write_frame(df, out_dir, pcols, bound))
+    new_entries = table._harvest_rewrite(
+        table._write_frame(df, out_dir, pcols, bound), True
+    )
     # Consolidated manifest: untouched big files + the new compacted files.
     all_entries = sorted(big + new_entries, key=lambda e: e["file_path"])
-    manifest = table._write_manifest(all_entries)
     # Tombstones still apply to the untouched files; rewritten files were
     # born after every delete's applies_before, so equality deletes are
     # exempt and position deletes reference only now-dead paths. When NO
@@ -288,14 +285,7 @@ def compact(
         if not (untouched & _delete_affected_paths(table, snap)):
             carry = []
     table._commit_snapshot(
-        "replace",
-        [manifest],
-        new_entries,
-        t0,
-        delete_manifests=carry,
-        lineage_files=(
-            [e["file_path"] for e in new_entries] if carry_lineage else None
-        ),
+        "replace", [all_entries], new_entries, t0, delete_manifests=carry
     )
     return {
         "compacted": len(small),
@@ -315,8 +305,8 @@ def _delete_affected_paths(table: LakeTable, snap: dict) -> set:
         return set()
     from icebergplus_spark.lake.table import _as_uri
 
-    births = table._file_births()
-    current = {f["file_path"] for f in table.plan_files()}
+    births = {p: f[1] for p, f in table._file_facts(snap).items()}
+    current = set(births)
     uri_to_path = {_as_uri(p): p for p in current}
     out: set = set()
     for e in entries:
@@ -407,7 +397,7 @@ def cherry_pick(table: LakeTable, snapshot_id: int) -> dict:
         )
     if not added:
         return {"cherry_picked": False, "reason": "snapshot added no files"}
-    manifests = table._lists(current).manifests + [table._write_manifest(added)]
+    manifests = table._lists(current).manifests + [added]
     table._commit_snapshot(
         "append",
         manifests,
@@ -570,29 +560,6 @@ def expire_snapshots(
     # New metadata version with only retained snapshots.
     meta = table._next_meta()
     meta["snapshots"] = retained
-    # Re-home lineage_files records of EXPIRED rewrite snapshots whose
-    # output files are still referenced by retained snapshots: without
-    # this, _materialized_lineage_paths forgets those files carry
-    # materialized __lineage_* columns and scan_with_lineage would fall
-    # back to row_id_assignments (fresh ranges allocated at the rewrite
-    # commit) — silently changing _row_id after routine maintenance.
-    orphan_lineage = set(meta.get("materialized_lineage_files") or [])
-    for s in expired:
-        orphan_lineage.update(s.get("lineage_files") or [])
-    orphan_lineage &= keep_data
-    if orphan_lineage:
-        meta["materialized_lineage_files"] = sorted(orphan_lineage)
-    else:
-        meta.pop("materialized_lineage_files", None)
-    if "row_id_assignments" in meta:
-        # prune first-row-id assignments for files no retained snapshot
-        # references — this is the one place the map shrinks, keeping
-        # metadata O(live files) on long-lived tables
-        meta["row_id_assignments"] = {
-            p: v
-            for p, v in meta["row_id_assignments"].items()
-            if p in keep_data
-        }
     table._publish(meta)
 
     deleted = 0
@@ -639,17 +606,16 @@ def rewrite_manifests(
         entries[i : i + target_entries_per_manifest]
         for i in range(0, len(entries), target_entries_per_manifest)
     ]
-    names = [table._write_manifest(c) for c in chunks]
     table._commit_snapshot(
         "rewrite-manifests",
-        names,
+        chunks,
         [],
         t0,
         delete_manifests=table._lists(snap).delete_manifests,
     )
     return {
         "manifests_before": len(table._lists(snap).manifests),
-        "manifests_after": len(names),
+        "manifests_after": len(chunks),
         "entries": len(entries),
     }
 

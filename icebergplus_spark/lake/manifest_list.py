@@ -7,8 +7,8 @@ writes one immutable ``snap-<id>-<uuid>.json`` into the metadata
 directory holding the snapshot's data-manifest names, delete-manifest
 names and the data files the commit added. The snapshot's entry in
 ``vN.metadata.json`` carries only ``manifest_list`` (plus id, parent,
-timestamp, operation, summary and lineage files), so a version grows
-with the snapshot count, not with snapshots × manifests.
+timestamp, operation and summary), so a version grows with the
+snapshot count, not with snapshots × manifests.
 
 Snapshots written before list files existed carry the three lists
 inline in the version JSON. ``snapshot_lists`` reads both forms, so a
@@ -17,10 +17,17 @@ table can mix them: no migration, no flag, no second writer.
 List files never change once written, so ``snapshot_lists`` keeps a
 process-wide LRU keyed by the list file's path, and the writer seeds it:
 the snapshot a process just committed never costs a file read.
+
+Two walks over snapshots live here too, shared by the table and the
+stream sources: ``lineage`` (a snapshot's parent chain) and
+``added_files`` (what the commits on it added). ``file_facts`` is the
+one accessor for each data file's row-lineage facts, which manifest
+entries carry (upgrade.py lifts tables from before they did).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import threading
@@ -113,3 +120,118 @@ def snapshot_lists(meta_dir: str, snap: dict[str, Any] | None) -> SnapshotLists:
         )
         _remember(path, hit)
     return SnapshotLists(list(hit[0]), list(hit[1]), list(hit[2]))
+
+
+def lineage(snapshots: list[dict[str, Any]], to_id: int | None) -> list[dict[str, Any]]:
+    """Snapshots from the root to ``to_id`` following parent pointers
+    (branch commits interleave in the log, so log order is NOT
+    lineage). Snapshots without a parent field, from older writers,
+    fall back to log order."""
+    by_id = {s["snapshot_id"]: s for s in snapshots}
+    chain: list[dict[str, Any]] = []
+    cur = by_id.get(to_id)
+    while cur is not None:
+        chain.append(cur)
+        if "parent_snapshot_id" in cur:
+            pid = cur["parent_snapshot_id"]
+            cur = by_id.get(pid) if pid is not None else None
+        else:
+            idx = snapshots.index(cur)
+            cur = snapshots[idx - 1] if idx > 0 else None
+    return list(reversed(chain))
+
+
+# operations whose added files are new rows (rewrites re-add old rows)
+ROW_ADDING_OPERATIONS = ("append", "overwrite", "upsert")
+
+
+def added_files(
+    meta_dir: str, snapshots: list[dict[str, Any]], from_id: int, to_id: int | None
+) -> dict[str, int]:
+    """{data file path → the snapshot that added it} for the row-adding
+    commits after ``from_id`` on ``to_id``'s lineage — what an
+    incremental read or one micro-batch of the snapshot stream owns.
+    Commits on other branches are not on the lineage and add nothing.
+    A snapshot's recorded added files are authoritative; for snapshots
+    from before commits recorded them, a manifest is new where no
+    earlier snapshot of the lineage names it."""
+    import pyarrow.parquet as pq
+
+    seen: set[str] = set()
+    out: dict[str, int] = {}
+    for s in lineage(snapshots, to_id):
+        sid = s["snapshot_id"]
+        wanted = sid > from_id and s["operation"] in ROW_ADDING_OPERATIONS
+        lists = snapshot_lists(meta_dir, s)
+        if lists.added_files is not None:
+            if wanted:
+                out.update((p, sid) for p in lists.added_files)
+            seen.update(lists.manifests)
+            continue
+        for m in lists.manifests:
+            if m in seen:
+                continue
+            seen.add(m)
+            if wanted:
+                t = pq.read_table(os.path.join(meta_dir, m), columns=["file_path"])
+                out.update((p, sid) for p in t.column("file_path").to_pylist())
+    return out
+
+
+# -- per-file facts ----------------------------------------------------------
+# manifest entry columns a commit assigns (upgrade.py: format version 2)
+FACT_COLUMNS = ("first_row_id", "added_snapshot_id", "lineage_materialized")
+
+
+# a manifest's facts are O(its entries), unlike a list file: fewer slots
+@functools.lru_cache(maxsize=256)
+def _manifest_facts(path: str) -> dict[str, tuple | None]:
+    """{file path → (first_row_id, added_snapshot_id,
+    lineage_materialized)} of one manifest; None for an entry without
+    them (a manifest from before format version 2). Manifests never
+    change, so the answer is cached by path; callers must not mutate
+    it."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    have = [c for c in FACT_COLUMNS if c in pf.schema_arrow.names]
+    t = pf.read(columns=["file_path", *have])
+    paths = t.column("file_path").to_pylist()
+    if len(have) < len(FACT_COLUMNS):
+        out = dict.fromkeys(paths)
+    else:
+        firsts, births, mats = (t.column(c).to_pylist() for c in FACT_COLUMNS)
+        out = {
+            p: None if first is None else (first, birth, bool(mat))
+            for p, first, birth, mat in zip(paths, firsts, births, mats)
+        }
+    return out
+
+
+def file_facts(
+    meta_dir: str, meta: dict[str, Any], snap: dict[str, Any] | None
+) -> dict[str, tuple]:
+    """{data file path → (first_row_id, added_snapshot_id,
+    lineage_materialized)} for every file ``snap`` holds: the one
+    accessor for per-file facts. Entries of current-format manifests
+    carry them; files of manifests written before the format upgrade
+    take the facts ``upgrade.py`` derived for them, including the
+    first-row-ids a pre-upgrade snapshot's manifest set reads
+    differently."""
+    from icebergplus_spark.lake import upgrade
+
+    out: dict[str, tuple] = {}
+    legacy = None
+    manifests = snapshot_lists(meta_dir, snap).manifests
+    for m in manifests:
+        for p, fact in _manifest_facts(os.path.join(meta_dir, m)).items():
+            if fact is None:
+                if legacy is None:
+                    legacy = upgrade.legacy_facts(meta_dir, meta)
+                fact = legacy.files[p]
+            out[p] = fact
+    if legacy is not None:
+        key = upgrade.manifest_set_key(manifests)
+        for p, first in legacy.overrides.get(key, {}).items():
+            out[p] = (first, *out[p][1:])
+    return out

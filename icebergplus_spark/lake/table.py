@@ -53,8 +53,13 @@ from icebergplus_spark.lake.commitio import (  # noqa: F401 — re-export
     ConcurrentCommitError,
     RenameCommitIO,
 )
+from icebergplus_spark.lake import upgrade
 from icebergplus_spark.lake.manifest_list import (
     SnapshotLists,
+    FACT_COLUMNS,
+    added_files,
+    file_facts,
+    lineage,
     snapshot_lists,
     write_manifest_list,
 )
@@ -126,6 +131,18 @@ MANIFEST_SCHEMA = pa.schema(
         # manifest, write.stats.nan-counts=false) keeps the
         # conservative no-prune behavior — never wrong, only wider.
         ("column_nan_counts", pa.string()),
+        # Row lineage (Iceberg v3), assigned when the entry's commit
+        # publishes and carried unchanged by every rewrite, manifest
+        # rewrite and compaction that keeps the file: the file's rows
+        # have ids first_row_id + position; added_snapshot_id is its
+        # birth (the stand-in for Iceberg sequence numbers that
+        # equality deletes and schema eras compare against);
+        # lineage_materialized marks files whose bytes carry
+        # __lineage_* columns (rewrite outputs), whose non-null cells
+        # win over the derived values.
+        ("first_row_id", pa.int64()),
+        ("added_snapshot_id", pa.int64()),
+        ("lineage_materialized", pa.bool_()),
     ]
 )
 
@@ -311,7 +328,9 @@ def _apply_dv_vectors(df: DataFrame, dv_paths: list[str]) -> DataFrame:
 
 def _ddl_of(arrow_schema: "pa.Schema") -> str:
     """Spark DDL string for a (flat) pyarrow manifest schema."""
-    type_map = {"string": "string", "int64": "long", "double": "double"}
+    type_map = {
+        "string": "string", "int64": "long", "double": "double", "bool": "boolean"
+    }
     return ", ".join(
         f"{f.name} {type_map[str(f.type)]}" for f in arrow_schema
     )
@@ -971,7 +990,7 @@ class LakeTable:
                 head_txn = pending  # in-flight write intent at the head
             version = meta["base_version"]
             meta = self._load_meta_version(version)
-        self._meta = meta
+        self._meta = upgrade.lift(meta)
         self._meta["_version"] = version
         self._meta["_phys_version"] = phys
         self._head_txn = head_txn
@@ -1071,7 +1090,9 @@ class LakeTable:
                     f"v{on_disk} — refresh() and retry"
                 )
             self.io.publish(
-                self._meta_dir, version, json.dumps(meta, separators=(",", ":"))
+                self._meta_dir,
+                version,
+                json.dumps(upgrade.seal(self._meta_dir, meta), separators=(",", ":")),
             )
 
     # -- table properties (Iceberg ALTER TABLE SET TBLPROPERTIES parity) ----
@@ -1590,14 +1611,13 @@ class LakeTable:
     def _commit_snapshot(
         self,
         operation: str,
-        manifests: list[str],
+        manifests: list[str | list[dict[str, Any]]],
         added_entries: list[dict[str, Any]],
         t0: float,
         branch: str | None = None,
         delete_manifests: list[str] | None = None,
         extra_summary: dict[str, Any] | None = None,
         attempts: int = 1,
-        lineage_files: list[str] | None = None,
     ) -> None:
         """Atomic snapshot commit: write the snapshot's list file and
         vN+1 metadata, then advance the table's published version via
@@ -1605,16 +1625,27 @@ class LakeTable:
         swap under flock — same-host writers fully serialized.
         ObjectStoreCommitIO: the conditional create of vN+1 is the CAS,
         valid across hosts (losers get ConcurrentCommitError and retry;
-        the list file they wrote is left for remove_orphan_files, like
-        their manifests). ``attempts`` is
-        surfaced as the commit report's attempts counter — the
-        reference's Iceberg retry-loop metric."""
+        the list file they wrote is left for remove_orphan_files).
+        ``attempts`` is surfaced as the commit report's attempts
+        counter — the reference's Iceberg retry-loop metric.
+
+        Each item of ``manifests`` is a committed manifest's name or the
+        entry list of a manifest this commit writes. Row lineage is
+        assigned here, under the commit (Iceberg v3): an entry without
+        a ``first_row_id`` — a file this commit adds — gets the next
+        ids in sorted path order from ``next_row_id``, and this
+        snapshot as ``added_snapshot_id``; an entry that has one keeps
+        it, so rollback, cherry-pick and rewrites never re-id a file.
+        A lost publish removes the manifests this attempt wrote, and a
+        retry against the newer base writes its manifest with that
+        base's ids."""
         delete_manifests = delete_manifests or []
         # max over ALL snapshot ids (not current+1): branch commits
         # interleave with main commits in the same log
         snap_id = max(
             [s["snapshot_id"] for s in self._meta["snapshots"]], default=0
         ) + 1
+        meta = self._next_meta()
         # Iceberg parent-snapshot-id parity: branch commits interleave in
         # the shared log, so the parent pointer (not log order) defines
         # each lineage — changelog reads walk it.
@@ -1622,20 +1653,59 @@ class LakeTable:
             parent = self._meta["refs"][branch]["snapshot_id"]
         else:
             parent = self._meta.get("current_snapshot_id")
+        parent_snap = next(
+            (s for s in self._meta["snapshots"] if s["snapshot_id"] == parent),
+            None,
+        )
+        # entries carried out of manifests from before the format
+        # upgrade keep the facts the parent snapshot reads
+        legacy = upgrade.legacy_facts(self._meta_dir, meta)
+        carried = (
+            {}
+            if legacy is None
+            else {**legacy.files, **file_facts(self._meta_dir, meta, parent_snap)}
+        )
+        fresh: list[dict[str, Any]] = []
+        to_write: dict[int, list[dict[str, Any]]] = {}
+        for i, item in enumerate(manifests):
+            if isinstance(item, str):
+                continue
+            to_write[i] = [dict(e) for e in item]
+            for e in to_write[i]:
+                if e.get("first_row_id") is not None:
+                    continue
+                known = carried.get(e["file_path"])
+                if known is None:
+                    fresh.append(e)
+                else:
+                    e.update(zip(FACT_COLUMNS, known))
+        nxt = int(meta.get("next_row_id", 0))
+        for e in sorted(fresh, key=lambda x: x["file_path"]):
+            e["first_row_id"] = nxt
+            nxt += e["record_count"]
+            if e.get("added_snapshot_id") is None:
+                e["added_snapshot_id"] = snap_id
+            e["lineage_materialized"] = bool(e.get("lineage_materialized"))
+        meta["next_row_id"] = nxt
+        written = {i: self._write_manifest(es) for i, es in to_write.items()}
+        manifests = [written.get(i, item) for i, item in enumerate(manifests)]
+        in_memory = {written[i]: es for i, es in to_write.items()}
         # Totals: incremental from the parent summary when this commit
         # only EXTENDS the parent's manifest lists (the append/upsert
         # hot path) — O(new manifests) of I/O per commit instead of
         # re-reading the whole inventory, which at 100 TB would put the
         # scan-planning cost on every write. Rewrites (replace/
         # overwrite/compact swap manifests out) recompute from scratch.
-        parent_snap = next(
-            (s for s in self._meta["snapshots"] if s["snapshot_id"] == parent),
-            None,
-        )
 
         def _sum_manifests(ms: list[str]) -> tuple[int, int, int]:
             recs = byts = files = 0
             for m in ms:
+                if m in in_memory:  # written by this commit
+                    es = in_memory[m]
+                    recs += sum(e["record_count"] for e in es)
+                    byts += sum(e["file_size_bytes"] for e in es)
+                    files += len(es)
+                    continue
                 t = pq.read_table(
                     os.path.join(self._meta_dir, m),
                     columns=["record_count", "file_size_bytes"],
@@ -1715,27 +1785,6 @@ class LakeTable:
                 **(extra_summary or {}),
             },
         }
-        if lineage_files:
-            # data files whose bytes carry materialized __lineage_*
-            # columns (compaction outputs) — scan_with_lineage reads
-            # ids from these files instead of deriving them
-            snapshot["lineage_files"] = sorted(lineage_files)
-        meta = self._next_meta()
-        # Commit-time row-id allocation (Iceberg v3 first-row-id): each
-        # added file gets a persisted first-row-id from a monotone
-        # counter, so a row's id never depends on any OTHER file's
-        # lifecycle. Tables from before this scheme (snapshots exist but
-        # no assignment map) stay on the legacy derivation — mixing the
-        # two would collide id ranges.
-        if not self._meta["snapshots"] or "row_id_assignments" in self._meta:
-            assignments = dict(self._meta.get("row_id_assignments") or {})
-            nxt = int(self._meta.get("next_row_id", 0))
-            for e in sorted(added_entries, key=lambda x: x["file_path"]):
-                if e["file_path"] not in assignments:
-                    assignments[e["file_path"]] = nxt
-                    nxt += e["record_count"]
-            meta["row_id_assignments"] = assignments
-            meta["next_row_id"] = nxt
         staging = getattr(self, "_staging_txn", None)
         if staging is not None:
             # multi-table transaction stage: visibility of this version
@@ -1750,7 +1799,13 @@ class LakeTable:
             refs = dict(meta.get("refs") or {})
             refs[branch] = {"snapshot_id": snap_id, "type": "branch"}
             meta["refs"] = refs
-        self._publish(meta)
+        try:
+            self._publish(meta)
+        except ConcurrentCommitError:
+            # the list file is left for remove_orphan_files, as before
+            for name in written.values():
+                os.remove(os.path.join(self._meta_dir, name))
+            raise
         self.refresh()
         s = snapshot["summary"]
         self.reporter.report(
@@ -1778,6 +1833,8 @@ class LakeTable:
         paths: list[str],
         with_meta: bool = False,
         extra_fields: list | None = None,
+        snap: dict[str, Any] | None = None,
+        births: dict[str, int] | None = None,
     ) -> DataFrame:
         """Read data files under the physical schema, applying
         initial-defaults for columns added after a file was written
@@ -1788,7 +1845,9 @@ class LakeTable:
         Era count is bounded by the number of defaulted ADD COLUMNs,
         not file count, so the split costs nothing at scale. Explicit
         NULLs written after the add are untouched (only genuinely
-        absent columns fill)."""
+        absent columns fill). A file's birth is its entry's
+        ``added_snapshot_id`` in ``snap`` (default: the current
+        snapshot), unless ``births`` names it."""
         from pyspark.sql import functions as _F
 
         live = {f.name for f in self.schema.fields}
@@ -1798,7 +1857,9 @@ class LakeTable:
             if c in live  # a dropped defaulted column fills nothing
         }
         if defaults and paths:
-            births = self._file_births()
+            if births is None:
+                facts = self._file_facts(snap or self.snapshot())
+                births = {p: f[1] for p, f in facts.items()}
             mapping = self._column_mapping
             phys_types = {f.name: f.dataType for f in self.physical_schema.fields}
 
@@ -1908,32 +1969,27 @@ class LakeTable:
         )
         return name
 
-    def _file_births(self) -> dict[str, int]:
-        """First snapshot id each data file appears in (stand-in for
-        Iceberg sequence numbers; drives equality-delete exemption).
-        Snapshots record their added-file set at commit time, so this
-        is a walk over snapshot lists (cached after their first read) —
-        O(total added files), no manifest I/O. Snapshots that predate
-        the added-file record (older tables) fall back to reading their
-        manifests once."""
-        births: dict[str, int] = {}
-        for s in self._meta["snapshots"]:
-            lists = self._lists(s)
-            added = lists.added_files
-            if added is None:  # legacy snapshot: recover from manifests
-                added = []
-                for m in lists.manifests:
-                    added.extend(
-                        pq.read_table(
-                            os.path.join(self._meta_dir, m),
-                            columns=["file_path"],
-                        )
-                        .column("file_path")
-                        .to_pylist()
-                    )
-            for p in added:
-                births.setdefault(p, s["snapshot_id"])
-        return births
+    def _file_facts(
+        self,
+        snap: dict[str, Any] | None,
+        entries: list[dict[str, Any]] | None = None,
+    ) -> dict[str, tuple]:
+        """{data file path → (first_row_id, added_snapshot_id,
+        lineage_materialized)} for the files of ``snap``
+        (``manifest_list.file_facts``). ``entries``, manifest entries of
+        ``snap`` that carry their facts, answer without a manifest read."""
+        if entries is not None and all(
+            e.get("first_row_id") is not None for e in entries
+        ):
+            return {
+                e["file_path"]: (
+                    e["first_row_id"],
+                    e["added_snapshot_id"],
+                    bool(e["lineage_materialized"]),
+                )
+                for e in entries
+            }
+        return file_facts(self._meta_dir, self._meta, snap)
 
     def _apply_deletes(
         self, df: DataFrame, snap: dict[str, Any], paths: list[str]
@@ -1974,8 +2030,9 @@ class LakeTable:
             )
         eq_entries = [e for e in entries if e["content"] == "equality"]
         if eq_entries:
-            births = self._file_births()
-            uri_births = {_as_uri(p): b for p, b in births.items()}
+            uri_births = {
+                _as_uri(p): f[1] for p, f in self._file_facts(snap).items()
+            }
             stats_by_uri = self._file_stats_by_uri(snap)
             for e in eq_entries:
                 cols = json.loads(e["equality_cols"])
@@ -2297,73 +2354,14 @@ class LakeTable:
         if not paths:
             return local_rows_df(self.spark, [], self.physical_schema)
         if not self._lists(snap).delete_manifests:
-            return self._read_physical(paths)
-        df = self._read_physical(paths, with_meta=True)
+            return self._read_physical(paths, snap=snap)
+        df = self._read_physical(paths, with_meta=True, snap=snap)
         return self._apply_deletes(df, snap, paths).drop("__file", "__pos")
 
     # physical column names materialized lineage is stored under in
     # rewritten data files (Iceberg v3 materialized row lineage)
     LINEAGE_ID_COL = "__lineage_row_id"
     LINEAGE_BIRTH_COL = "__lineage_birth"
-
-    def _materialized_lineage_paths(
-        self, snap: dict[str, Any], paths: list[str] | None = None
-    ) -> set[str]:
-        """Live data files carrying materialized lineage columns: the
-        union of every snapshot's recorded rewrite outputs, restricted
-        to ``paths`` (files of ``snap``) or else to the snapshot's whole
-        file set (an O(metadata) walk plus its manifests' paths)."""
-        mat: set[str] = set()
-        for s in self._meta["snapshots"]:
-            mat.update(s.get("lineage_files") or [])
-        # files whose recording snapshot was expired but which are still
-        # live — expire_snapshots re-homes their lineage_files records
-        # here so 'ids survive compaction' survives maintenance too
-        mat.update(self._meta.get("materialized_lineage_files") or [])
-        return mat & set(self._snapshot_paths(snap) if paths is None else paths)
-
-    def _lineage_assignments(
-        self,
-        snap: dict[str, Any],
-        subset: list[str],
-        all_paths: list[str] | None = None,
-    ) -> list[tuple[str, int, int]]:
-        """(file URI, first_row_id, birth) for files WITHOUT
-        materialized lineage. Preferred source: the ``row_id_assignments``
-        map committed in metadata at allocation time — each file's first
-        id is then independent of every other file, so CoW removals of
-        OTHER files can never shift it. Legacy tables (created before
-        assignments existed) fall back to the (birth, path)-cumulative
-        derivation over the full snapshot file set (``all_paths``,
-        default: read from the snapshot's manifests)."""
-        births = self._file_births()
-        assignments = self._meta.get("row_id_assignments") or {}
-        if all(p in assignments for p in subset):
-            return [
-                (_as_uri(p), int(assignments[p]), births.get(p, 0))
-                for p in subset
-            ]
-        if all_paths is None:
-            all_paths = list(self._snapshot_paths(snap))
-        counts: dict[str, int] = {}
-        for m in self._lists(snap).manifests:
-            t = pq.read_table(
-                os.path.join(self._meta_dir, m),
-                columns=["file_path", "record_count"],
-            )
-            for p, c in zip(
-                t.column("file_path").to_pylist(),
-                t.column("record_count").to_pylist(),
-            ):
-                counts[p] = c
-        want = set(subset)
-        ordered = sorted(all_paths, key=lambda p: (births.get(p, 0), p))
-        rows, acc = [], 0
-        for p in ordered:
-            if p in want:
-                rows.append((_as_uri(p), acc, births.get(p, 0)))
-            acc += counts.get(p, 0)
-        return rows
 
     def _lineage_frame(
         self,
@@ -2373,79 +2371,59 @@ class LakeTable:
     ) -> DataFrame:
         """PHYSICAL-schema Spark read of ``paths`` (default: the
         snapshot's full file set) with ``__lineage_row_id`` /
-        ``__lineage_birth`` attached. Files with materialized lineage
-        supply the columns from their own bytes; other files derive id =
-        first-row-id + row position from committed metadata. MoR
-        tombstones apply. ``keep_meta`` keeps ``__file``/``__pos`` in the
-        frame — the MoR UPDATE/MERGE paths need positions for DV encoding
-        alongside the lineage columns. ``scan_with_lineage`` reads
-        through it; rewrites read through ``_rewrite_input``, whose
-        driver read of small rewrites applies the same rule."""
+        ``__lineage_birth`` attached: id = the entry's first_row_id +
+        row position, birth = its added_snapshot_id. Files with
+        materialized lineage supply the columns from their own bytes,
+        and a NULL cell there inherits the derived value. MoR
+        tombstones apply. ``keep_meta`` keeps ``__file``/``__pos`` in
+        the frame — the MoR UPDATE/MERGE paths need positions for DV
+        encoding alongside the lineage columns. ``scan_with_lineage``
+        reads through it; rewrites read through ``_rewrite_input``,
+        whose driver read of small rewrites applies the same rule."""
         from pyspark.sql import functions as _F
         from pyspark.sql.types import LongType, StructField
 
-        all_paths = sorted(self._snapshot_paths(snap))
-        paths = all_paths if paths is None else sorted(paths)
-        mat = self._materialized_lineage_paths(snap, paths)
-        plain = [p for p in paths if p not in mat]
-        mat_paths = [p for p in paths if p in mat]
+        facts = self._file_facts(snap)
+        paths = sorted(facts) if paths is None else sorted(paths)
+        inh = local_rows_df(
+            self.spark,
+            [(_as_uri(p), facts[p][0], facts[p][1]) for p in paths],
+            "__inh_file string, __inh_first long, __inh_birth long",
+        )
         pieces: list[DataFrame] = []
-        if plain:
-            lin = local_rows_df(
-                self.spark,
-                self._lineage_assignments(snap, plain, all_paths),
-                "__lin_file string, __first long, __birth long",
+        for materialized in (False, True):
+            group = [p for p in paths if facts[p][2] == materialized]
+            if not group:
+                continue
+            extra = (
+                [
+                    StructField(self.LINEAGE_ID_COL, LongType()),
+                    StructField(self.LINEAGE_BIRTH_COL, LongType()),
+                ]
+                if materialized
+                else None
             )
-            d = self._read_physical(plain, with_meta=True)
-            if self._lists(snap).delete_manifests:
-                d = self._apply_deletes(d, snap, plain)
-            d = (
-                d.join(_F.broadcast(lin), d["__file"] == lin["__lin_file"])
-                .withColumn(
-                    self.LINEAGE_ID_COL, _F.col("__first") + _F.col("__pos")
-                )
-                .withColumn(self.LINEAGE_BIRTH_COL, _F.col("__birth"))
-                .drop(
-                    "__lin_file",
-                    "__first",
-                    "__birth",
-                    *([] if keep_meta else ["__file", "__pos"]),
-                )
+            d = self._read_physical(
+                group, with_meta=True, extra_fields=extra, snap=snap
             )
-            pieces.append(d)
-        if mat_paths:
-            extra = [
-                StructField(self.LINEAGE_ID_COL, LongType()),
-                StructField(self.LINEAGE_BIRTH_COL, LongType()),
-            ]
-            d = self._read_physical(mat_paths, with_meta=True, extra_fields=extra)
             if self._lists(snap).delete_manifests:
-                d = self._apply_deletes(d, snap, mat_paths)
+                d = self._apply_deletes(d, snap, group)
+            derived_id = _F.col("__inh_first") + _F.col("__pos")
+            derived_birth = _F.col("__inh_birth")
             # Iceberg v3 inheritance rule: a NULL materialized cell means
             # "assign at read from the file's committed first-row-id /
             # birth" — how rewrites mint ids for INSERTED rows and stamp
             # last-updated on UPDATED rows without any write-side
             # coordination (carried rows keep their non-null values).
-            inh = local_rows_df(
-                self.spark,
-                self._lineage_assignments(snap, mat_paths, all_paths),
-                "__inh_file string, __inh_first long, __inh_birth long",
-            )
+            if materialized:
+                derived_id = _F.coalesce(_F.col(self.LINEAGE_ID_COL), derived_id)
+                derived_birth = _F.coalesce(
+                    _F.col(self.LINEAGE_BIRTH_COL), derived_birth
+                )
             d = (
                 d.join(_F.broadcast(inh), d["__file"] == inh["__inh_file"])
-                .withColumn(
-                    self.LINEAGE_ID_COL,
-                    _F.coalesce(
-                        _F.col(self.LINEAGE_ID_COL),
-                        _F.col("__inh_first") + _F.col("__pos"),
-                    ),
-                )
-                .withColumn(
-                    self.LINEAGE_BIRTH_COL,
-                    _F.coalesce(
-                        _F.col(self.LINEAGE_BIRTH_COL), _F.col("__inh_birth")
-                    ),
-                )
+                .withColumn(self.LINEAGE_ID_COL, derived_id)
+                .withColumn(self.LINEAGE_BIRTH_COL, derived_birth)
                 .drop("__inh_file", "__inh_first", "__inh_birth")
             )
             pieces.append(d if keep_meta else d.drop("__file", "__pos"))
@@ -2480,7 +2458,7 @@ class LakeTable:
         if lineage:
             return self._lineage_frame(snap, paths, keep_meta)
         if keep_meta:
-            df = self._read_physical(paths, with_meta=True)
+            df = self._read_physical(paths, with_meta=True, snap=snap)
             return self._apply_deletes(df, snap, paths)
         return self._read_live(paths, snap)
 
@@ -2527,19 +2505,14 @@ class LakeTable:
         if lineage:
             for c in lin_cols:
                 schema = schema.add(c, _T.LongType())
-            mat = self._materialized_lineage_paths(snap, paths)
-            first_birth = {
-                u: (first, birth)
-                for group in ([p for p in paths if p not in mat], sorted(mat))
-                for u, first, birth in self._lineage_assignments(snap, group)
-            }
+            facts = self._file_facts(snap, entries)
         out = to_arrow_schema(schema)
         tables = []
         for p in paths:
             with pq.ParquetFile(p) as pf:
                 have = pf.schema_arrow
                 carried = [
-                    c for c in lin_cols if lineage and p in mat and c in have.names
+                    c for c in lin_cols if lineage and facts[p][2] and c in have.names
                 ]
                 if not all(
                     have.get_field_index(f.name) >= 0
@@ -2557,7 +2530,7 @@ class LakeTable:
                 # Iceberg v3 inheritance, as in _lineage_frame: a NULL or
                 # absent materialized cell takes the file's committed
                 # first-row-id + position and birth
-                first, birth = first_birth[uri]
+                first, birth, _ = facts[p]
                 for c, v in zip(
                     lin_cols,
                     (pc.add(pos, first), pa.array(_np.full(n, birth, _np.int64))),
@@ -2573,11 +2546,11 @@ class LakeTable:
         - ``_row_id``: a stable long, unique across the table. For
           files written by ingest, id = file's first-row-id + row
           position, where first-row-ids are ALLOCATED AT COMMIT TIME
-          and persisted in table metadata (``row_id_assignments`` /
-          ``next_row_id`` — Iceberg v3's snapshot ``first-row-id``
-          counter), so no other file's lifecycle can ever shift them.
-          For files written by compaction, the ids are MATERIALIZED
-          into the file bytes themselves.
+          from the table's ``next_row_id`` counter and persisted in
+          the file's manifest entry (Iceberg v3 row lineage), so no
+          other file's lifecycle can ever shift them. For files
+          written by rewrites, the ids are MATERIALIZED into the file
+          bytes themselves.
         - ``_last_updated_snapshot_id``: the snapshot that wrote the
           row (its original birth, carried through rewrites).
 
@@ -2590,8 +2563,9 @@ class LakeTable:
         materialized lineage cell resolves at read to the file's
         committed first-row-id / birth, so inserts mint fresh unique
         ids with zero write-side coordination). Tables created before
-        commit-time allocation existed derive ids with the legacy
-        (birth, path)-cumulative rule, where rewrites re-id."""
+        commit-time allocation existed read the ids their
+        (birth, path)-cumulative rule gave, frozen by the format
+        upgrade (upgrade.py)."""
         from pyspark.sql import functions as _F
 
         snap = self.snapshot(snapshot_id)
@@ -2606,7 +2580,7 @@ class LakeTable:
             )
             return local_rows_df(self.spark, [], schema)
 
-        if snap is None or not self._snapshot_paths(snap):
+        if snap is None or not self._file_facts(snap):
             return _empty()
         df = self._lineage_frame(snap)
         mapping = self._column_mapping
@@ -2641,7 +2615,7 @@ class LakeTable:
         if not affected:
             return self
         paths = sorted(f["file_path"] for f in affected)
-        df = self._read_physical(paths, with_meta=True)
+        df = self._read_physical(paths, with_meta=True, snap=snap)
         # apply existing tombstones so already-deleted rows aren't re-tombstoned
         df = self._apply_deletes(df, snap, paths)
         mapping = self._column_mapping
@@ -2894,7 +2868,7 @@ class LakeTable:
                 if extra_summary:
                     return self._commit_marker_snapshot(t0, snap, extra_summary)
                 return self
-            df = self._read_physical(sorted(paths), with_meta=True)
+            df = self._read_physical(sorted(paths), with_meta=True, snap=snap)
             df = self._apply_deletes(df, snap, sorted(paths))
             matches = df.join(
                 _F.broadcast(keys_phys), on=phys_cols, how="left_semi"
@@ -3063,10 +3037,10 @@ class LakeTable:
 
     def _write_data_files(
         self, df: DataFrame, distribution: str | None
-    ) -> tuple[list[dict[str, Any]], dict[str, int], str]:
+    ) -> tuple[list[dict[str, Any]], dict[str, int]]:
         """Write a logical-schema frame as table data files and return
-        (manifest entries, ndv stats, manifest name). Shared by append
-        and upsert."""
+        (manifest entries, ndv stats); the commit writes the entries'
+        manifest. Shared by append, upsert and dynamic overwrite."""
         # CHECK constraints gate every ingest batch here (append /
         # upsert / overwrite / dynamic partition overwrite all funnel
         # through), BEFORE any file is written.
@@ -3189,8 +3163,7 @@ class LakeTable:
                         if c in m:
                             vals.add(m[c])
                     ndv[inverse.get(c, c)] = len(vals)
-        manifest = self._write_manifest(entries)
-        return entries, ndv, manifest
+        return entries, ndv
 
     def _harvest_data_files(
         self, paths: list[str], ndv: bool = False
@@ -3281,7 +3254,9 @@ class LakeTable:
             entries.append(e)
         return entries
 
-    def _harvest_rewrite(self, paths: list[str]) -> list[dict[str, Any]]:
+    def _harvest_rewrite(
+        self, paths: list[str], lineage: bool
+    ) -> list[dict[str, Any]]:
         """Harvest the parquet files a rewrite wrote (``_write_frame``'s
         paths) as ONE batch through ``_harvest_data_files`` —
         identical per-file stats, but past the distributed threshold
@@ -3291,8 +3266,13 @@ class LakeTable:
         harvest them one-by-one on the driver; the append path already
         fans out, the rewrite paths now share it). Zero-row files are
         left out of the returned entries (they stay on disk, never
-        registered)."""
-        entries = [e for e in self._harvest_data_files(paths) if e["record_count"]]
+        registered). ``lineage``: the files carry materialized
+        ``__lineage_*`` columns (their entries' ``lineage_materialized``)."""
+        entries = [
+            {**e, "lineage_materialized": lineage}
+            for e in self._harvest_data_files(paths)
+            if e["record_count"]
+        ]
         return sorted(entries, key=lambda e: e["file_path"])
 
     def _harvest_delete_files(
@@ -3381,10 +3361,10 @@ class LakeTable:
             base["snapshot_id"],
         )
         dmanifest = self._write_delete_manifest(del_entries)
-        entries, ndv, manifest = self._write_data_files(df, None)
+        entries, ndv = self._write_data_files(df, None)
         self._commit_snapshot(
             "upsert",
-            self._lists(base).manifests + [manifest],
+            self._lists(base).manifests + [entries],
             entries,
             t0,
             delete_manifests=self._lists(base).delete_manifests + [dmanifest],
@@ -3420,7 +3400,7 @@ class LakeTable:
             raise ValueError(
                 f"schema mismatch: table={self.schema.fieldNames()} df={df.columns}"
             )
-        entries, ndv, manifest = self._write_data_files(df, distribution)
+        entries, ndv = self._write_data_files(df, distribution)
         # Iceberg newAppend retry parity: an append's manifest is
         # re-appliable against any newer base, so on a concurrent-commit
         # conflict we refresh and re-anchor instead of failing the write;
@@ -3430,7 +3410,7 @@ class LakeTable:
             base = (
                 self.snapshot(self._resolve_ref(branch)) if branch else self.snapshot()
             )
-            manifests = self._lists(base).manifests + [manifest]
+            manifests = self._lists(base).manifests + [entries]
             try:
                 self._commit_snapshot(
                     "append",
@@ -3547,11 +3527,10 @@ class LakeTable:
             self._harvest_data_files(added_paths),
             key=lambda e: e["file_path"],
         )
-        manifest = self._write_manifest(entries)
         base = self.snapshot()
         self._commit_snapshot(
             "append",
-            self._lists(base).manifests + [manifest],
+            self._lists(base).manifests + [entries],
             entries,
             t0,
             delete_manifests=self._lists(base).delete_manifests,
@@ -3564,40 +3543,19 @@ class LakeTable:
         """Read only rows ADDED after ``from_snapshot_id`` (exclusive) up
         to ``to_snapshot_id`` (inclusive; default current) — CDC-style
         incremental consumption of an append stream without re-reading
-        the table. Replace/compact snapshots rewrite existing rows, so
-        their manifests are skipped (no additions)."""
+        the table. Only commits on ``to_snapshot_id``'s lineage count
+        (a branch's appends are not main's), and replace/compact
+        snapshots rewrite existing rows, so they add none."""
         to_id = to_snapshot_id if to_snapshot_id is not None else self.current_snapshot_id
-        seen: set[str] = set()
-        new_files: list[str] = []
-        for s in self._meta["snapshots"]:
-            if s["snapshot_id"] > to_id:
-                break
-            is_wanted = (
-                s["snapshot_id"] > from_snapshot_id
-                and s["operation"] in ("append", "overwrite", "upsert")
-            )
-            lists = self._lists(s)
-            if lists.added_files is not None:
-                # authoritative per-commit added set — immune to carried-
-                # over files sharing a manifest with the additions
-                if is_wanted:
-                    new_files.extend(lists.added_files)
-                seen.update(lists.manifests)
-                continue
-            # legacy snapshots: manifest birth = first appearance in the log
-            for m in lists.manifests:
-                if m in seen:
-                    continue
-                seen.add(m)
-                if is_wanted:
-                    t = pq.read_table(os.path.join(self._meta_dir, m))
-                    new_files.extend(t.column("file_path").to_pylist())
-        if not new_files:
+        births = added_files(
+            self._meta_dir, self._meta["snapshots"], from_snapshot_id, to_id
+        )
+        if not births:
             return local_rows_df(self.spark, [], self.schema)
         from pyspark.sql import functions as _F
 
         mapping = self._column_mapping
-        df = self._read_physical(new_files)
+        df = self._read_physical(list(births), births=births)
         return df.select(
             *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields]
         )
@@ -3612,25 +3570,6 @@ class LakeTable:
             )
             paths.update(t.column("file_path").to_pylist())
         return paths
-
-    def _lineage(self, to_id: int) -> list[dict[str, Any]]:
-        """Snapshots from the root to ``to_id`` following parent
-        pointers (branch commits interleave in the log, so log order is
-        NOT lineage). Legacy snapshots without a parent field fall back
-        to log order."""
-        by_id = {s["snapshot_id"]: s for s in self._meta["snapshots"]}
-        log = self._meta["snapshots"]
-        chain: list[dict[str, Any]] = []
-        cur = by_id.get(to_id)
-        while cur is not None:
-            chain.append(cur)
-            if "parent_snapshot_id" in cur:
-                pid = cur["parent_snapshot_id"]
-                cur = by_id.get(pid) if pid is not None else None
-            else:
-                idx = log.index(cur)
-                cur = log[idx - 1] if idx > 0 else None
-        return list(reversed(chain))
 
     def _tombstone_affected_paths(
         self, delete_manifests: set[str], prev: dict[str, Any] | None
@@ -3658,7 +3597,7 @@ class LakeTable:
         prev_paths = self._snapshot_paths(prev)
         affected = {p for p in prev_paths if _as_uri(p) in uris}
         if eq_entries:
-            births = self._file_births()
+            births = {p: f[1] for p, f in self._file_facts(prev).items()}
             entries: list[dict[str, Any]] = []
             for m in self._lists(prev).manifests:
                 entries.extend(
@@ -3778,7 +3717,7 @@ class LakeTable:
         pre/post are the file paths the commit removed/added, widened by
         the files new MoR tombstones can reach. Metadata-only."""
         prev: dict[str, Any] | None = None
-        for s in self._lineage(to_id):
+        for s in lineage(self._meta["snapshots"], to_id):
             sid = s["snapshot_id"]
             if sid <= from_snapshot_id or s["operation"] in (
                 "replace",
@@ -3932,7 +3871,7 @@ class LakeTable:
         # row's id with a NULL birth (resolved at read to this merge's
         # snapshot = last-updated); NEW keys get NULL ids minted by the
         # read-side inheritance rule from the file's first-row-id.
-        carry_lineage = bool(affected) and "row_id_assignments" in self._meta
+        carry_lineage = bool(affected)
         if affected:
             existing = self._rewrite_input(self.snapshot(), affected, carry_lineage)
             keep = existing.join(
@@ -3956,22 +3895,18 @@ class LakeTable:
         n = local_relation_rows(df)
         bound = None if n is None else n + sum(f["record_count"] for f in affected)
         new_entries.extend(
-            self._harvest_rewrite(self._write_frame(merged, out_dir, pcols, bound))
+            self._harvest_rewrite(
+                self._write_frame(merged, out_dir, pcols, bound), carry_lineage
+            )
         )
         new_entries.sort(key=lambda e: e["file_path"])
-        manifest = self._write_manifest(
-            sorted(untouched + new_entries, key=lambda e: e["file_path"])
-        )
         snap = self.snapshot()
         self._commit_snapshot(
             "merge",
-            [manifest],
+            [sorted(untouched + new_entries, key=lambda e: e["file_path"])],
             new_entries,
             t0,
             delete_manifests=self._lists(snap).delete_manifests,
-            lineage_files=(
-                [e["file_path"] for e in new_entries] if carry_lineage else None
-            ),
         )
         return self
 
@@ -4277,11 +4212,10 @@ class LakeTable:
             # this is the entire value of manifest pruning: a MERGE
             # whose source range misses the table costs zero data I/O.
             return self
-        carry_lineage = "row_id_assignments" in self._meta
         lin_cols = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
         if affected:
             target = self._rewrite_input(
-                snap, affected, carry_lineage, keep_meta=True
+                snap, affected, True, keep_meta=True
             ).select(
                 *[
                     _F.col(mapping[f.name]).alias(f.name)
@@ -4289,7 +4223,7 @@ class LakeTable:
                 ],
                 "__file",
                 "__pos",
-                *(lin_cols if carry_lineage else []),
+                *lin_cols,
             )
         else:
             from pyspark.sql.types import LongType, StringType, StructField
@@ -4300,15 +4234,9 @@ class LakeTable:
                     + [
                         StructField("__file", StringType()),
                         StructField("__pos", LongType()),
+                        StructField(self.LINEAGE_ID_COL, LongType()),
+                        StructField(self.LINEAGE_BIRTH_COL, LongType()),
                     ]
-                    + (
-                        [
-                            StructField(self.LINEAGE_ID_COL, LongType()),
-                            StructField(self.LINEAGE_BIRTH_COL, LongType()),
-                        ]
-                        if carry_lineage
-                        else []
-                    )
                 ),
             )
         target = target.withColumn("__t", _F.lit(True))
@@ -4428,28 +4356,25 @@ class LakeTable:
         out_dir = None
         new_entries: list[dict[str, Any]] = []
         if can_append:
-            if carry_lineage:
-                # updated rows keep their id, NULL birth (resolves to this
-                # snapshot at read); source-only inserts carry NULL id AND
-                # birth — the inheritance rule mints theirs from the new
-                # file's committed first-row-id, same as the CoW path
-                birth = _F.when(
-                    gate | (bys_gate if when_not_matched_by_source_update else _F.lit(False)),
-                    _F.lit(None).cast("long"),
-                ).otherwise(_F.col(self.LINEAGE_BIRTH_COL))
-                appended = joined.filter(append_gate).select(
-                    *out_cols,
-                    _F.col(self.LINEAGE_ID_COL),
-                    birth.alias(self.LINEAGE_BIRTH_COL),
-                )
-            else:
-                appended = joined.filter(append_gate).select(*out_cols)
+            # updated rows keep their id, NULL birth (resolves to this
+            # snapshot at read); source-only inserts carry NULL id AND
+            # birth — the inheritance rule mints theirs from the new
+            # file's committed first-row-id, same as the CoW path
+            birth = _F.when(
+                gate | (bys_gate if when_not_matched_by_source_update else _F.lit(False)),
+                _F.lit(None).cast("long"),
+            ).otherwise(_F.col(self.LINEAGE_BIRTH_COL))
+            appended = joined.filter(append_gate).select(
+                *out_cols,
+                _F.col(self.LINEAGE_ID_COL),
+                birth.alias(self.LINEAGE_BIRTH_COL),
+            )
             self._enforce_constraints(
                 appended.select(*[f.name for f in self.schema.fields])
             )
             phys = appended.select(
                 *[_F.col(f.name).alias(mapping[f.name]) for f in self.schema.fields],
-                *(lin_cols if carry_lineage else []),
+                *lin_cols,
             )
             phys, pcols = self._apply_partition_transforms(phys)
             out_dir = os.path.join(
@@ -4457,7 +4382,7 @@ class LakeTable:
             )
             bound = self._merge_write_bound(affected, source, key_sample)
             new_entries = self._harvest_rewrite(
-                self._write_frame(phys, out_dir, pcols, bound)
+                self._write_frame(phys, out_dir, pcols, bound), True
             )
         dmanifest = (
             self._build_dv_manifest(snap, matches) if snap else None
@@ -4470,7 +4395,7 @@ class LakeTable:
             return self  # no clause fired on any row
         manifests = self._lists(snap).manifests
         if new_entries:
-            manifests.append(self._write_manifest(new_entries))
+            manifests.append(new_entries)
         self._commit_snapshot(
             "merge",
             manifests,
@@ -4478,11 +4403,6 @@ class LakeTable:
             t0,
             delete_manifests=self._lists(snap).delete_manifests
             + ([dmanifest] if dmanifest else []),
-            lineage_files=(
-                [e["file_path"] for e in new_entries]
-                if carry_lineage and new_entries
-                else None
-            ),
         )
         return self
 
@@ -4713,7 +4633,7 @@ class LakeTable:
         # lineage through the rewrite (Iceberg v3): carried/updated rows
         # keep ids; source-only inserts arrive with NULL lineage from
         # the outer join and the read-side inheritance rule mints theirs
-        carry_lineage = bool(affected) and "row_id_assignments" in self._meta
+        carry_lineage = bool(affected)
         target = (
             self._rewrite_input(self.snapshot(), affected, carry_lineage).select(
                 *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields],
@@ -4833,21 +4753,15 @@ class LakeTable:
         out_dir = os.path.join(self.table_dir, "data", f"merge-{uuid.uuid4().hex}")
         bound = self._merge_write_bound(affected, source, key_sample)
         new_entries = self._harvest_rewrite(
-            self._write_frame(phys, out_dir, pcols, bound)
-        )
-        manifest = self._write_manifest(
-            sorted(untouched + new_entries, key=lambda e: e["file_path"])
+            self._write_frame(phys, out_dir, pcols, bound), carry_lineage
         )
         snap = self.snapshot()
         self._commit_snapshot(
             "merge",
-            [manifest],
+            [sorted(untouched + new_entries, key=lambda e: e["file_path"])],
             new_entries,
             t0,
             delete_manifests=self._lists(snap).delete_manifests,
-            lineage_files=(
-                [e["file_path"] for e in new_entries] if carry_lineage else None
-            ),
         )
         return self
 
@@ -4904,10 +4818,9 @@ class LakeTable:
 
             snap_now = self.snapshot()
             # survivor rows KEEP their row ids through the rewrite
-            # (Iceberg v3): read id-annotated when the table allocates
-            # ids, and the rewritten files carry them materialized
-            carry_lineage = "row_id_assignments" in self._meta
-            df = self._rewrite_input(snap_now, partial_files, carry_lineage)
+            # (Iceberg v3): read id-annotated, and the rewritten files
+            # carry them materialized
+            df = self._rewrite_input(snap_now, partial_files, True)
             # keep rows that do NOT match any branch conjunction; NULL
             # comparisons mean no-match → keep (SQL DELETE semantics)
             matched = _branches_match_cond(
@@ -4918,23 +4831,15 @@ class LakeTable:
             out_dir = os.path.join(self.table_dir, "data", f"delete-{uuid.uuid4().hex}")
             bound = sum(f["record_count"] for f in partial_files)
             new_entries = self._harvest_rewrite(
-                self._write_frame(survivors, out_dir, pcols, bound)
+                self._write_frame(survivors, out_dir, pcols, bound), True
             )
-        manifest = self._write_manifest(
-            sorted(untouched + new_entries, key=lambda e: e["file_path"])
-        )
         snap = self.snapshot()
         self._commit_snapshot(
             "delete",
-            [manifest],
+            [sorted(untouched + new_entries, key=lambda e: e["file_path"])],
             new_entries,
             t0,
             delete_manifests=self._lists(snap).delete_manifests,
-            lineage_files=(
-                [e["file_path"] for e in new_entries]
-                if new_entries and "row_id_assignments" in self._meta
-                else None
-            ),
         )
         return self
 
@@ -4978,20 +4883,11 @@ class LakeTable:
 
         all_files = self.plan_files()
         survivors = [f for f in all_files if file_part(f) not in touched]
-        entries, ndv, stray = self._write_data_files(df, None)
-        # _write_data_files wrote a new-entries-only manifest; this
-        # commit needs the consolidated survivors+new manifest instead
-        try:
-            os.remove(os.path.join(self._meta_dir, stray))
-        except OSError:
-            pass
-        manifest = self._write_manifest(
-            sorted(survivors + entries, key=lambda e: e["file_path"])
-        )
+        entries, ndv = self._write_data_files(df, None)
         snap = self.snapshot()
         self._commit_snapshot(
             "overwrite",
-            [manifest],
+            [sorted(survivors + entries, key=lambda e: e["file_path"])],
             entries,
             t0,
             delete_manifests=self._lists(snap).delete_manifests,
@@ -5025,8 +4921,7 @@ class LakeTable:
         if snap is None or not affected:
             return self
         mapping = self._column_mapping
-        carry_lineage = "row_id_assignments" in self._meta
-        df = self._rewrite_input(snap, affected, carry_lineage, keep_meta=True)
+        df = self._rewrite_input(snap, affected, True, keep_meta=True)
         cond = _F.coalesce(
             _branches_match_cond(branches, lambda col: mapping.get(col, col)),
             _F.lit(False),
@@ -5040,7 +4935,7 @@ class LakeTable:
         lin_cols = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
         logical = matched.select(
             *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields],
-            *(lin_cols if carry_lineage else []),
+            *lin_cols,
         )
         updated = logical.select(
             *[
@@ -5057,25 +4952,17 @@ class LakeTable:
                 )
                 for f in self.schema.fields
             ],
-            *(
-                [
-                    # updated rows KEEP their id; the NULL birth cell
-                    # resolves to THIS snapshot at read (inheritance)
-                    _F.col(self.LINEAGE_ID_COL),
-                    _F.lit(None)
-                    .cast("long")
-                    .alias(self.LINEAGE_BIRTH_COL),
-                ]
-                if carry_lineage
-                else []
-            ),
+            # updated rows KEEP their id; the NULL birth cell resolves
+            # to THIS snapshot at read (inheritance)
+            _F.col(self.LINEAGE_ID_COL),
+            _F.lit(None).cast("long").alias(self.LINEAGE_BIRTH_COL),
         )
         self._enforce_constraints(
             updated.select(*[f.name for f in self.schema.fields])
         )
         phys = updated.select(
             *[_F.col(f.name).alias(mapping[f.name]) for f in self.schema.fields],
-            *(lin_cols if carry_lineage else []),
+            *lin_cols,
         )
         phys, pcols = self._apply_partition_transforms(phys)
         out_dir = os.path.join(
@@ -5083,7 +4970,7 @@ class LakeTable:
         )
         bound = sum(f["record_count"] for f in affected)
         new_entries = self._harvest_rewrite(
-            self._write_frame(phys, out_dir, pcols, bound)
+            self._write_frame(phys, out_dir, pcols, bound), True
         )
         dmanifest = self._build_dv_manifest(snap, matches)
         if dmanifest is None and not new_entries:
@@ -5093,7 +4980,7 @@ class LakeTable:
             return self  # predicates matched no live rows
         manifests = self._lists(snap).manifests
         if new_entries:
-            manifests.append(self._write_manifest(new_entries))
+            manifests.append(new_entries)
         self._commit_snapshot(
             "update",
             manifests,
@@ -5101,11 +4988,6 @@ class LakeTable:
             t0,
             delete_manifests=self._lists(snap).delete_manifests
             + ([dmanifest] if dmanifest else []),
-            lineage_files=(
-                [e["file_path"] for e in new_entries]
-                if carry_lineage and new_entries
-                else None
-            ),
         )
         return self
 
@@ -5161,15 +5043,12 @@ class LakeTable:
         # birth cell, which the read-side inheritance rule resolves to
         # this rewrite's snapshot — _last_updated_snapshot_id semantics
         # with zero write-side coordination.
-        carry_lineage = "row_id_assignments" in self._meta
         lin_cols = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
         # rewrite in LOGICAL space (assignments reference logical names),
         # then map back to physical so renames stay metadata-only
-        logical = self._rewrite_input(
-            self.snapshot(), affected, carry_lineage
-        ).select(
+        logical = self._rewrite_input(self.snapshot(), affected, True).select(
             *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields],
-            *(lin_cols if carry_lineage else []),
+            *lin_cols,
         )
         # OR-of-AND match over logical names; NULL comparison = no match
         cond = _F.coalesce(
@@ -5191,41 +5070,29 @@ class LakeTable:
                 else _F.col(f.name)
                 for f in self.schema.fields
             ],
-            *(
-                [
-                    _F.col(self.LINEAGE_ID_COL),
-                    _F.when(cond, _F.lit(None).cast("long"))
-                    .otherwise(_F.col(self.LINEAGE_BIRTH_COL))
-                    .alias(self.LINEAGE_BIRTH_COL),
-                ]
-                if carry_lineage
-                else []
-            ),
+            _F.col(self.LINEAGE_ID_COL),
+            _F.when(cond, _F.lit(None).cast("long"))
+            .otherwise(_F.col(self.LINEAGE_BIRTH_COL))
+            .alias(self.LINEAGE_BIRTH_COL),
         )
         self._enforce_constraints(updated.select(*[f.name for f in self.schema.fields]))
         phys = updated.select(
             *[_F.col(f.name).alias(mapping[f.name]) for f in self.schema.fields],
-            *(lin_cols if carry_lineage else []),
+            *lin_cols,
         )
         phys, pcols = self._apply_partition_transforms(phys)
         out_dir = os.path.join(self.table_dir, "data", f"update-{uuid.uuid4().hex}")
         bound = sum(f["record_count"] for f in affected)
         new_entries = self._harvest_rewrite(
-            self._write_frame(phys, out_dir, pcols, bound)
-        )
-        manifest = self._write_manifest(
-            sorted(untouched + new_entries, key=lambda e: e["file_path"])
+            self._write_frame(phys, out_dir, pcols, bound), True
         )
         snap = self.snapshot()
         self._commit_snapshot(
             "update",
-            [manifest],
+            [sorted(untouched + new_entries, key=lambda e: e["file_path"])],
             new_entries,
             t0,
             delete_manifests=self._lists(snap).delete_manifests,
-            lineage_files=(
-                [e["file_path"] for e in new_entries] if carry_lineage else None
-            ),
         )
         return self
 
@@ -5967,7 +5834,10 @@ class LakeTable:
             return []
         from pyspark.sql import functions as _F
 
-        files = self.spark.read.parquet(
+        # mergeSchema: an upgraded table mixes manifests with and
+        # without the lineage columns, and a rewrite carries the
+        # entries it planned
+        files = self.spark.read.option("mergeSchema", "true").parquet(
             *[os.path.join(self._meta_dir, m) for m in self._lists(snap).manifests]
         )
         phys_preds = self._physical_predicates(predicates)
@@ -7448,7 +7318,7 @@ class LakeTable:
             # timestamp travel must never surface staged/unpublished
             # branch data (the write-audit-publish isolation contract).
             cur = self.current_snapshot_id
-            main = self._lineage(cur) if cur is not None else []
+            main = lineage(self._meta["snapshots"], cur) if cur is not None else []
             eligible = [s for s in main if s["timestamp_ms"] <= as_of_ms]
             if not eligible:
                 raise ValueError(

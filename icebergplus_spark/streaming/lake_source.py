@@ -36,7 +36,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from icebergplus_spark.lake.manifest_list import snapshot_lists
+from icebergplus_spark.lake.manifest_list import (
+    added_files,
+    file_facts,
+    lineage,
+    snapshot_lists,
+)
+from icebergplus_spark.lake.upgrade import lift
 
 SOURCE_NAME = "lake_stream"
 
@@ -44,9 +50,9 @@ SOURCE_NAME = "lake_stream"
 def _make_source():
     """Build the DataSource class. Everything the executors touch is
     defined inside this closure with stdlib/pyarrow/pyspark imports,
-    plus ``snapshot_lists`` from the stdlib-only ``lake.manifest_list``
-    (pickled by reference, so the reader's planning worker imports
-    this package, as the lake's own pandas UDFs do)."""
+    plus the snapshot walks of ``lake.manifest_list`` (pickled by
+    reference, so the reader's planning worker imports this package,
+    as the lake's own pandas UDFs do)."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
@@ -143,8 +149,6 @@ def _make_source():
 
         def partitions(self, start, end):
             self._planned_end = end["snapshot_id"]
-            import pyarrow.parquet as pq
-
             meta = load_meta(self.table_dir)
             lo, hi = start["snapshot_id"], end["snapshot_id"]
             mapping = meta.get("column_mapping") or {
@@ -152,38 +156,10 @@ def _make_source():
             }
             schema_json = json.dumps(meta["schema"])
             meta_dir = os.path.join(self.table_dir, "metadata")
-            # a micro-batch owns the files ADDED by commits in (lo, hi].
-            # Snapshots record their added set directly (added_files);
-            # for legacy snapshots fall back to manifest birth = first
-            # appearance in the (id-ordered) log. The explicit set matters
-            # for consolidated manifests (overwrite_partitions writes
-            # survivors+new together): birth-attribution would replay
-            # every carried-over file as new.
-            seen: set[str] = set()
-            paths: list[str] = []
-            for s in sorted(meta["snapshots"], key=lambda s: s["snapshot_id"]):
-                if s["snapshot_id"] > hi:
-                    break
-                wanted = s["snapshot_id"] > lo and s["operation"] in (
-                    "append",
-                    "overwrite",
-                    "upsert",
-                )
-                lists = snapshot_lists(meta_dir, s)
-                if lists.added_files is not None:
-                    if wanted:
-                        paths.extend(lists.added_files)
-                    seen.update(lists.manifests)
-                    continue
-                for m in lists.manifests:
-                    if m in seen:
-                        continue
-                    seen.add(m)
-                    if wanted:
-                        t = pq.read_table(
-                            os.path.join(meta_dir, m), columns=["file_path"]
-                        )
-                        paths.extend(t.column("file_path").to_pylist())
+            # a micro-batch owns the files ADDED by main's commits in
+            # (lo, hi] — branch commits interleaved in the log are not
+            # main's changes
+            paths = added_files(meta_dir, meta["snapshots"], lo, hi)
             return [
                 InputPartition(
                     {
@@ -403,7 +379,8 @@ def _make_cdc_source():
             self._planned_end = end["snapshot_id"]
             import pyarrow.parquet as pq
 
-            meta = load_meta(self.table_dir)
+            # lifted once, so an older table derives its facts once
+            meta = lift(load_meta(self.table_dir))
             lo, hi = start["snapshot_id"], end["snapshot_id"]
             meta_dir = os.path.join(self.table_dir, "metadata")
             mapping = meta.get("column_mapping") or {
@@ -425,15 +402,9 @@ def _make_cdc_source():
 
             # main lineage within (lo, hi] via parent pointers — branch
             # commits interleaved in the log are not main's changes
-            chain = []
-            cur = by_id.get(hi)
-            while cur is not None and cur["snapshot_id"] > lo:
-                chain.append(cur)
-                cur = parent(cur)
-            chain.reverse()
+            chain = [s for s in lineage(log, hi) if s["snapshot_id"] > lo]
 
             mcache: dict[str, list[str]] = {}
-            births: dict[str, int] | None = None
             parts: list[InputPartition] = []
             for s in chain:
                 if s["operation"] in ("replace", "rewrite-manifests", "rewrite-deletes"):
@@ -513,17 +484,9 @@ def _make_cdc_source():
                         else:
                             # equality tombstone hits files of the PREV
                             # state born at-or-before its commit
-                            if births is None:
-                                births = {}
-                                for t in log:
-                                    for p in self._manifest_paths(
-                                        meta_dir,
-                                        snapshot_lists(meta_dir, t).manifests,
-                                        mcache,
-                                    ):
-                                        births.setdefault(p, t["snapshot_id"])
+                            facts = file_facts(meta_dir, meta, prev)
                             for p in sorted(p_prev):
-                                if births.get(p, 0) > e["applies_before"]:
+                                if facts[p][1] > e["applies_before"]:
                                     continue
                                 parts.append(
                                     InputPartition(
@@ -1058,19 +1021,18 @@ def _make_batch_writer_source():
                 key=lambda e: e["file_path"],
             )
             t0 = _time.time()
-            manifest = t._write_manifest(entries)
             base = t.snapshot()
             if self.overwrite or base is None:
                 t._commit_snapshot(
                     "overwrite" if self.overwrite and base else "append",
-                    [manifest],
+                    [entries],
                     entries,
                     t0,
                 )
             else:
                 t._commit_snapshot(
                     "append",
-                    t._lists(base).manifests + [manifest],
+                    t._lists(base).manifests + [entries],
                     entries,
                     t0,
                     delete_manifests=t._lists(base).delete_manifests,

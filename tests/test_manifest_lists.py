@@ -74,6 +74,24 @@ def test_version_growth_per_commit_is_flat(catalog, tmp_path):
     assert growth[-1] <= first + 64, growth
     assert t.count_rows() == 60
 
+    # flat in the table's file count too: first-row-ids live in
+    # manifest entries, so a one-file commit onto a 1,200-file table
+    # writes a version the size of the same commit onto a 1-file table
+    sizes = {}
+    for n in (1, 1200):
+        big = catalog.create_table(f"db.files{n}", SCHEMA)
+        d = tmp_path / f"files{n}"
+        d.mkdir()
+        paths = []
+        for i in range(n + 1):
+            p = str(d / f"f{i:05d}.parquet")
+            pq.write_table(pa.table({"k": pa.array([i], pa.int64()), "v": ["x"]}), p)
+            paths.append(p)
+        big.add_files(paths[:n])
+        big.add_files(paths[n:])
+        sizes[n] = _version_bytes(big, big._meta["_phys_version"])
+    assert abs(sizes[1200] - sizes[1]) <= 1024, sizes
+
 
 def test_no_version_holds_manifest_names(spark, catalog):
     t = catalog.create_table("db.names", SCHEMA)

@@ -196,3 +196,184 @@ def test_accessor_reads_inline_snapshot_without_added_files(mixed):
     snap.pop("added_files")
     lists = snapshot_lists(t._meta_dir, snap)
     assert lists.added_files is None and lists.manifests == snap["manifests"]
+
+
+# -- format upgrade: version-1 row lineage (upgrade.py) ----------------------
+# Two fixtures in the shape older trees wrote, made from a table built
+# here: every manifest loses its lineage columns and the head version
+# loses ``format_version``. Fixture 1 keeps the first-row-id map, the
+# per-snapshot ``lineage_files`` and ``materialized_lineage_files``;
+# fixture 2 is a table that never had a map, whose ids are the
+# (birth, path)-cumulative record counts of the snapshot read.
+FACT_COLUMNS = ("first_row_id", "added_snapshot_id", "lineage_materialized")
+
+
+def _ids(t, snapshot_id=None):
+    return sorted(
+        (r["k"], r["_row_id"]) for r in t.scan_with_lineage(snapshot_id).collect()
+    )
+
+
+def _downgrade(t, with_map):
+    """Rewrite ``t``'s head version and manifests in the version-1 shape."""
+    import pyarrow.parquet as pq
+
+    from icebergplus_spark.lake import manifest_list
+
+    entries = {}
+    manifests = set()
+    for s in t.history():
+        for m in snapshot_lists(t._meta_dir, s).manifests:
+            manifests.add(m)
+            path = os.path.join(t._meta_dir, m)
+            table = pq.read_table(path)
+            entries.update((e["file_path"], e) for e in table.to_pylist())
+    for m in manifests:
+        path = os.path.join(t._meta_dir, m)
+        table = pq.read_table(path)
+        pq.write_table(table.drop_columns(list(FACT_COLUMNS)), path)
+    manifest_list._manifest_facts.cache_clear()
+    path = os.path.join(t._meta_dir, f"v{t._meta['_phys_version']}.metadata.json")
+    with open(path) as f:
+        meta = json.load(f)
+    del meta["format_version"]
+    retained = {s["snapshot_id"] for s in meta["snapshots"]}
+    if with_map:
+        meta["row_id_assignments"] = {p: e["first_row_id"] for p, e in entries.items()}
+        mat = {p: e["added_snapshot_id"] for p, e in entries.items() if e["lineage_materialized"]}
+        for s in meta["snapshots"]:
+            files = sorted(p for p, b in mat.items() if b == s["snapshot_id"])
+            if files:
+                s["lineage_files"] = files
+        meta["materialized_lineage_files"] = sorted(
+            p for p, b in mat.items() if b not in retained
+        )
+    else:
+        del meta["next_row_id"]
+    with open(path, "w") as f:
+        json.dump(meta, f)
+    return t.refresh()
+
+
+def _cumulative_ids(t, snapshot_id):
+    """The version-1 derivation, written out: files in (birth, path)
+    order, each row's id the records before its file plus its position."""
+    import pyarrow.parquet as pq
+
+    births = {}
+    for s in t.history():
+        for p in snapshot_lists(t._meta_dir, s).added_files:
+            births.setdefault(p, s["snapshot_id"])
+    out, acc = [], 0
+    for p in sorted(t._snapshot_paths(t.snapshot(snapshot_id)), key=lambda p: (births[p], p)):
+        ks = pq.read_table(p, columns=["k"]).column("k").to_pylist()
+        out.extend((k, acc + i) for i, k in enumerate(ks))
+        acc += len(ks)
+    return sorted(out)
+
+
+@pytest.fixture(params=["map", "no_map"])
+def legacy(request, spark, tmp_path):
+    """(table, {snapshot id: ids it reads before the upgrade}).
+
+    map: s1 append 0..4, s2 append 5..7 (tagged), s3 compaction
+    (materialized lineage), s4 append 8..9, then expiry of s1 and s3, so
+    the compaction output's record moved to materialized_lineage_files.
+    no_map: s1 append 0..4, s2 append 5..7, s3 copy-on-write delete of
+    k=1; the rewritten file's ids are derived, so they differ between s2
+    and s3 reads."""
+    from icebergplus_spark.lake import compact
+
+    cat = LocalLakeCatalog(spark, str(tmp_path / "wh")).start()
+    t = cat.create_table("db.legacy", SCHEMA)
+    t.append(_rows(spark, range(5)))
+    t.append(_rows(spark, range(5, 8)))
+    s2 = t.current_snapshot_id
+    if request.param == "map":
+        t.create_tag("t2", s2)
+        assert compact(t)["compacted"] == 2
+        t.append(_rows(spark, [8, 9]))
+        expire_snapshots(t, keep_last=1)
+        expected = {s["snapshot_id"]: _ids(t, s["snapshot_id"]) for s in t.history()}
+        _downgrade(t, with_map=True)
+        with open(os.path.join(t._meta_dir, f"v{t._meta['_phys_version']}.metadata.json")) as f:
+            raw = json.load(f)
+        assert raw["materialized_lineage_files"] and raw["row_id_assignments"]
+    else:
+        t.delete({"k": ("=", 1)})
+        _downgrade(t, with_map=False)
+        expected = {s["snapshot_id"]: _cumulative_ids(t, s["snapshot_id"]) for s in t.history()}
+        # k=5's file was born before the rewritten one, so it moved first
+        assert dict(expected[s2])[5] == 5
+        assert dict(expected[t.current_snapshot_id])[5] == 0
+    return cat, t, expected
+
+
+def _versions_json(t):
+    out = {}
+    for fn in os.listdir(t._meta_dir):
+        if fn.startswith("v") and fn.endswith(".metadata.json"):
+            with open(os.path.join(t._meta_dir, fn)) as f:
+                out[int(fn[1:].split(".")[0])] = json.load(f)
+    return out
+
+
+def test_upgrade_keeps_lineage_ids(spark, legacy):
+    cat, t, expected = legacy
+    head = t.current_snapshot_id
+    pre = sorted(expected)
+    # lifted in memory: the same ids, nothing persisted yet
+    for sid in pre:
+        assert _ids(t, sid) == expected[sid], sid
+    legacy_version = t._meta["_phys_version"]
+    assert "format_version" not in _versions_json(t)[legacy_version]
+
+    # the first commit persists the lift once; no map is written again
+    t.append(_rows(spark, [20, 21]))
+    after = _ids(t)
+    assert [p for p in after if p[0] < 20] == expected[head]
+    assert len({i for _, i in after}) == len(after)
+    v = _versions_json(t)[t._meta["_phys_version"]]
+    assert v["format_version"] == 2 and v["lineage_facts"]
+    facts_file = v["lineage_facts"]
+    for sid in pre:  # time travel into pre-upgrade snapshots
+        assert _ids(cat.load_table("db.legacy"), sid) == expected[sid], sid
+
+    # copy-on-write DELETE: survivors keep their ids
+    t.delete({"k": ("=", 2)})
+    survivors = [p for p in after if p[0] != 2]
+    assert _ids(t) == survivors
+    from icebergplus_spark.lake import compact
+
+    compact(t)
+    assert _ids(t) == survivors
+    mark = t.current_snapshot_id
+    t.append(_rows(spark, [30]))
+    expire_snapshots(t, keep_last=2)
+    assert [p for p in _ids(t) if p[0] != 30] == survivors
+    rollback(t, mark)
+    assert _ids(t) == survivors
+    for n, version in _versions_json(t).items():
+        if n > legacy_version:
+            text = json.dumps(version)
+            assert "row_id_assignments" not in text
+            assert "materialized_lineage_files" not in text
+            assert version["lineage_facts"] == facts_file
+            assert not any("lineage_files" in s for s in version["snapshots"])
+
+
+def test_rollback_into_pre_upgrade_snapshot(spark, legacy):
+    """A rollback re-commits a pre-upgrade snapshot's manifests: it reads
+    that snapshot's ids, and a rewrite on top of it keeps them for the
+    files it carries as well as for the rows it rewrites."""
+    cat, t, expected = legacy
+    head = t.current_snapshot_id
+    t.append(_rows(spark, [20]))  # persists the upgrade
+    target = max((s for s in expected if s != head), key=lambda s: len(expected[s]))
+    rollback(t, target)
+    assert _ids(t) == expected[target]
+    t.delete({"k": ("=", 0)})  # rewrites one file, carries the others
+    assert _ids(t) == [p for p in expected[target] if p[0] != 0]
+    t.append(_rows(spark, [30]))
+    ids = [i for _, i in _ids(t)]
+    assert len(set(ids)) == len(ids)
