@@ -25,6 +25,7 @@ import pyarrow.parquet as pq
 
 import pyspark.sql.functions as F
 
+from icebergplus_spark.lake import upgrade
 from icebergplus_spark.lake.manifest_list import is_list_file
 from icebergplus_spark.lake.table import LakeTable
 
@@ -183,7 +184,7 @@ def compact(
     # is hash-identical across compaction. Two delta-encoded long
     # columns of mostly-sequential values — negligible bytes at any
     # scale.
-    df = table._rewrite_input(snap, small, True)
+    df = table._rewrite_input(snap, small)
     if zorder_by and sort_by:
         raise ValueError("pass either sort_by or zorder_by, not both")
     if zorder_by:
@@ -345,6 +346,7 @@ def rollback(table: LakeTable, snapshot_id: int) -> dict:
         [],
         t0,
         delete_manifests=table._lists(target).delete_manifests,
+        base=target,
     )
     return {
         "rolled_back": True,
@@ -493,10 +495,12 @@ def remove_orphan_files(
                 orphans.append(p)
                 if not dry_run:
                     os.remove(p)
-    # Orphaned MANIFESTS and snapshot LIST FILES too (Iceberg's
-    # remove_orphan_files sweeps the whole table location): a writer
-    # that died between manifest write and snapshot publish, or lost
-    # its commit, leaves files no snapshot references.
+    # Orphaned MANIFESTS, snapshot LIST FILES and lineage FACTS files
+    # too (Iceberg's remove_orphan_files sweeps the whole table
+    # location): a writer that died between manifest write and
+    # snapshot publish, or lost its commit, leaves files no snapshot
+    # references. Every version since a table's format upgrade names
+    # the one facts file its first commit wrote (upgrade.py).
     for fn in os.listdir(table._meta_dir):
         if fn.startswith(("manifest-", "delete-manifest-")) and fn.endswith(
             ".parquet"
@@ -504,6 +508,8 @@ def remove_orphan_files(
             named = live_manifests
         elif is_list_file(fn):
             named = live_lists
+        elif fn.startswith(upgrade.FACTS_PREFIX):
+            named = {table._meta.get("lineage_facts")}
         else:
             continue
         p = os.path.join(table._meta_dir, fn)

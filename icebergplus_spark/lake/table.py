@@ -1618,6 +1618,7 @@ class LakeTable:
         delete_manifests: list[str] | None = None,
         extra_summary: dict[str, Any] | None = None,
         attempts: int = 1,
+        base: dict[str, Any] | None = None,
     ) -> None:
         """Atomic snapshot commit: write the snapshot's list file and
         vN+1 metadata, then advance the table's published version via
@@ -1638,7 +1639,9 @@ class LakeTable:
         it, so rollback, cherry-pick and rewrites never re-id a file.
         A lost publish removes the manifests this attempt wrote, and a
         retry against the newer base writes its manifest with that
-        base's ids."""
+        base's ids. Files carried out of manifests from before the
+        format upgrade keep the facts ``base`` reads (default: the
+        parent; a rollback passes its target)."""
         delete_manifests = delete_manifests or []
         # max over ALL snapshot ids (not current+1): branch commits
         # interleave with main commits in the same log
@@ -1658,13 +1661,23 @@ class LakeTable:
             None,
         )
         # entries carried out of manifests from before the format
-        # upgrade keep the facts the parent snapshot reads
+        # upgrade keep the facts the base snapshot reads; a manifest
+        # named into a set that would read them differently is
+        # written out as entries
         legacy = upgrade.legacy_facts(self._meta_dir, meta)
-        carried = (
-            {}
-            if legacy is None
-            else {**legacy.files, **file_facts(self._meta_dir, meta, parent_snap)}
-        )
+        carried: dict[str, tuple] = {}
+        if legacy is not None:
+            reads = file_facts(
+                self._meta_dir, meta, parent_snap if base is None else base
+            )
+            carried = {**legacy.files, **reads}
+            stale = upgrade.drifting(self._meta_dir, legacy, manifests, reads)
+            manifests = [
+                pq.read_table(os.path.join(self._meta_dir, m)).to_pylist()
+                if isinstance(m, str) and m in stale
+                else m
+                for m in manifests
+            ]
         fresh: list[dict[str, Any]] = []
         to_write: dict[int, list[dict[str, Any]]] = {}
         for i, item in enumerate(manifests):
@@ -2436,37 +2449,30 @@ class LakeTable:
         self,
         snap: dict[str, Any],
         entries: list[dict[str, Any]],
-        lineage: bool,
         keep_meta: bool = False,
     ) -> DataFrame:
         """The physical-schema frame of the live rows of ``entries``, the
         manifest entries of ``snap`` a rewrite replaces: the one input
         of copy-on-write DELETE/UPDATE/MERGE, merge-on-read UPDATE/MERGE
-        and compaction. ``lineage`` adds ``__lineage_row_id`` /
-        ``__lineage_birth`` (``_lineage_frame``'s rule); ``keep_meta``
-        adds ``__file`` / ``__pos`` (``_metadata`` file URI and row
-        index).
+        and compaction, with ``__lineage_row_id`` / ``__lineage_birth``
+        (``_lineage_frame``'s rule) so the rewrite carries every row's
+        lineage. ``keep_meta`` adds ``__file`` / ``__pos``
+        (``_metadata`` file URI and row index).
 
         A small rewrite is read on the driver (``_read_small``) and
         reaches Spark as a local relation, so the caller's filters and
         projections fold into one and ``_write_frame`` pulls it without
         a job. Any other input is read by Spark, tombstones applied."""
-        df = self._read_small(snap, entries, lineage, keep_meta)
+        df = self._read_small(snap, entries, keep_meta)
         if df is not None:
             return df
         paths = sorted(e["file_path"] for e in entries)
-        if lineage:
-            return self._lineage_frame(snap, paths, keep_meta)
-        if keep_meta:
-            df = self._read_physical(paths, with_meta=True, snap=snap)
-            return self._apply_deletes(df, snap, paths)
-        return self._read_live(paths, snap)
+        return self._lineage_frame(snap, paths, keep_meta)
 
     def _read_small(
         self,
         snap: dict[str, Any],
         entries: list[dict[str, Any]],
-        lineage: bool,
         keep_meta: bool,
     ) -> DataFrame | None:
         """``_rewrite_input`` read with pyarrow on the driver, or None
@@ -2502,18 +2508,15 @@ class LakeTable:
             schema = schema.add("__file", _T.StringType(), nullable=False)
             schema = schema.add("__pos", _T.LongType(), nullable=False)
         lin_cols = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
-        if lineage:
-            for c in lin_cols:
-                schema = schema.add(c, _T.LongType())
-            facts = self._file_facts(snap, entries)
+        for c in lin_cols:
+            schema = schema.add(c, _T.LongType())
+        facts = self._file_facts(snap, entries)
         out = to_arrow_schema(schema)
         tables = []
         for p in paths:
             with pq.ParquetFile(p) as pf:
                 have = pf.schema_arrow
-                carried = [
-                    c for c in lin_cols if lineage and facts[p][2] and c in have.names
-                ]
+                carried = [c for c in lin_cols if facts[p][2] and c in have.names]
                 if not all(
                     have.get_field_index(f.name) >= 0
                     and have.field(f.name).type == f.type
@@ -2526,16 +2529,15 @@ class LakeTable:
             pos = pa.array(_np.arange(n, dtype=_np.int64))
             if keep_meta:
                 cols += [pa.array([uri] * n, pa.string()), pos]
-            if lineage:
-                # Iceberg v3 inheritance, as in _lineage_frame: a NULL or
-                # absent materialized cell takes the file's committed
-                # first-row-id + position and birth
-                first, birth, _ = facts[p]
-                for c, v in zip(
-                    lin_cols,
-                    (pc.add(pos, first), pa.array(_np.full(n, birth, _np.int64))),
-                ):
-                    cols.append(pc.coalesce(t.column(c), v) if c in carried else v)
+            # Iceberg v3 inheritance, as in _lineage_frame: a NULL or
+            # absent materialized cell takes the file's committed
+            # first-row-id + position and birth
+            first, birth, _ = facts[p]
+            for c, v in zip(
+                lin_cols,
+                (pc.add(pos, first), pa.array(_np.full(n, birth, _np.int64))),
+            ):
+                cols.append(pc.coalesce(t.column(c), v) if c in carried else v)
             tables.append(pa.Table.from_arrays(cols, schema=out))
         return self.spark.createDataFrame(pa.concat_tables(tables), schema)
 
@@ -3871,21 +3873,18 @@ class LakeTable:
         # row's id with a NULL birth (resolved at read to this merge's
         # snapshot = last-updated); NEW keys get NULL ids minted by the
         # read-side inheritance rule from the file's first-row-id.
-        carry_lineage = bool(affected)
         if affected:
-            existing = self._rewrite_input(self.snapshot(), affected, carry_lineage)
+            existing = self._rewrite_input(self.snapshot(), affected)
             keep = existing.join(
                 incoming.select(pkey), on=pkey, how="left_anti"
             )
-            inc = incoming
-            if carry_lineage:
-                old_ids = (
-                    existing.groupBy(pkey)
-                    .agg(_F.min(self.LINEAGE_ID_COL).alias(self.LINEAGE_ID_COL))
-                )
-                inc = incoming.join(old_ids, on=pkey, how="left").withColumn(
-                    self.LINEAGE_BIRTH_COL, _F.lit(None).cast("long")
-                )
+            old_ids = (
+                existing.groupBy(pkey)
+                .agg(_F.min(self.LINEAGE_ID_COL).alias(self.LINEAGE_ID_COL))
+            )
+            inc = incoming.join(old_ids, on=pkey, how="left").withColumn(
+                self.LINEAGE_BIRTH_COL, _F.lit(None).cast("long")
+            )
             merged = keep.unionByName(inc)
         else:
             merged = incoming
@@ -3896,7 +3895,7 @@ class LakeTable:
         bound = None if n is None else n + sum(f["record_count"] for f in affected)
         new_entries.extend(
             self._harvest_rewrite(
-                self._write_frame(merged, out_dir, pcols, bound), carry_lineage
+                self._write_frame(merged, out_dir, pcols, bound), bool(affected)
             )
         )
         new_entries.sort(key=lambda e: e["file_path"])
@@ -4214,9 +4213,7 @@ class LakeTable:
             return self
         lin_cols = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
         if affected:
-            target = self._rewrite_input(
-                snap, affected, True, keep_meta=True
-            ).select(
+            target = self._rewrite_input(snap, affected, keep_meta=True).select(
                 *[
                     _F.col(mapping[f.name]).alias(f.name)
                     for f in self.schema.fields
@@ -4633,15 +4630,11 @@ class LakeTable:
         # lineage through the rewrite (Iceberg v3): carried/updated rows
         # keep ids; source-only inserts arrive with NULL lineage from
         # the outer join and the read-side inheritance rule mints theirs
-        carry_lineage = bool(affected)
         target = (
-            self._rewrite_input(self.snapshot(), affected, carry_lineage).select(
+            self._rewrite_input(self.snapshot(), affected).select(
                 *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields],
-                *(
-                    [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
-                    if carry_lineage
-                    else []
-                ),
+                self.LINEAGE_ID_COL,
+                self.LINEAGE_BIRTH_COL,
             )
             if affected
             else local_rows_df(self.spark, [], self.schema)
@@ -4720,7 +4713,7 @@ class LakeTable:
             result = result.filter(~bys_gate)
         # unmatched-source rows with insert disabled are gone; matched &
         # target-only rows keep/compute target columns
-        if carry_lineage:
+        if affected:
             # updated rows: keep id, NULL the birth cell so the read
             # resolves _last_updated to THIS merge's snapshot
             birth = _F.col(self.LINEAGE_BIRTH_COL)
@@ -4743,17 +4736,13 @@ class LakeTable:
 
         phys = result.select(
             *[_F.col(f.name).alias(mapping[f.name]) for f in self.schema.fields],
-            *(
-                [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
-                if carry_lineage
-                else []
-            ),
+            *([self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL] if affected else []),
         )
         phys, pcols = self._apply_partition_transforms(phys)
         out_dir = os.path.join(self.table_dir, "data", f"merge-{uuid.uuid4().hex}")
         bound = self._merge_write_bound(affected, source, key_sample)
         new_entries = self._harvest_rewrite(
-            self._write_frame(phys, out_dir, pcols, bound), carry_lineage
+            self._write_frame(phys, out_dir, pcols, bound), bool(affected)
         )
         snap = self.snapshot()
         self._commit_snapshot(
@@ -4820,7 +4809,7 @@ class LakeTable:
             # survivor rows KEEP their row ids through the rewrite
             # (Iceberg v3): read id-annotated, and the rewritten files
             # carry them materialized
-            df = self._rewrite_input(snap_now, partial_files, True)
+            df = self._rewrite_input(snap_now, partial_files)
             # keep rows that do NOT match any branch conjunction; NULL
             # comparisons mean no-match → keep (SQL DELETE semantics)
             matched = _branches_match_cond(
@@ -4921,7 +4910,7 @@ class LakeTable:
         if snap is None or not affected:
             return self
         mapping = self._column_mapping
-        df = self._rewrite_input(snap, affected, True, keep_meta=True)
+        df = self._rewrite_input(snap, affected, keep_meta=True)
         cond = _F.coalesce(
             _branches_match_cond(branches, lambda col: mapping.get(col, col)),
             _F.lit(False),
@@ -5046,7 +5035,7 @@ class LakeTable:
         lin_cols = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
         # rewrite in LOGICAL space (assignments reference logical names),
         # then map back to physical so renames stay metadata-only
-        logical = self._rewrite_input(self.snapshot(), affected, True).select(
+        logical = self._rewrite_input(self.snapshot(), affected).select(
             *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields],
             *lin_cols,
         )

@@ -29,7 +29,10 @@ snapshot read for tables without an assignment map — on its file set,
 that is, on its manifests — so the facts file also records, per
 manifest set of a pre-upgrade snapshot, each first-row-id that differs
 from the file's frozen value: time travel into that snapshot, or a
-rollback to it, reads the ids it always read.
+rollback to it, reads the ids it always read. A commit that carries
+such a snapshot's manifests into a new set (an append after that
+rollback, or onto a branch at that snapshot) writes their entries out
+with the ids the snapshot read (``drifting``), so no file is re-id'd.
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ from typing import Any, NamedTuple
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from icebergplus_spark.lake.manifest_list import snapshot_lists
+from icebergplus_spark.lake.manifest_list import _manifest_facts, snapshot_lists
 
 FORMAT_VERSION = 2
 FACTS_PREFIX = "lineage-facts-"
@@ -143,6 +146,38 @@ def seal(meta_dir: str, meta: dict[str, Any]) -> dict[str, Any]:
     if facts.files:
         meta["lineage_facts"] = _write(meta_dir, facts)
     return meta
+
+
+def drifting(
+    meta_dir: str, facts: LegacyFacts, manifests: list, reads: dict[str, Fact]
+) -> set[str]:
+    """The pre-upgrade manifests among ``manifests`` (a commit's names
+    and entry lists) whose files a snapshot holding exactly them would
+    read with other facts than ``reads``, what the commit's base
+    snapshot reads. An override holds only for its exact manifest set,
+    so a commit carrying such a manifest into a new set writes its
+    entries out with the base's facts instead of naming it."""
+    names = [m for m in manifests if isinstance(m, str)]
+    exact = facts.overrides.get(manifest_set_key(names), {})
+
+    def stale(override: dict[str, int]) -> set[str]:
+        out = set()
+        for m in names:
+            for p, fact in _manifest_facts(os.path.join(meta_dir, m)).items():
+                if fact is None and p in reads:
+                    first, *rest = facts.files[p]
+                    if (override.get(p, first), *rest) != reads[p]:
+                        out.add(m)
+                        break
+        return out
+
+    out = stale({})
+    if len(names) == len(manifests) and exact:
+        # the set keeps its override unless a manifest is written out,
+        # which changes the set and drops the override for the rest
+        hit = stale(exact)
+        out = out | hit if hit else set()
+    return out
 
 
 # -- the version-1 derivation ----------------------------------------------

@@ -560,7 +560,7 @@ def _entries_by_content(t):
 @pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
 def test_rewrite_input_local_read_equals_spark_read(spark, cat, tz):
     """``_rewrite_input``'s driver read of small files equals Spark's read
-    of the same entries, frame for frame (with and without lineage and
+    of the same entries, frame for frame (with and without
     ``__file``/``__pos``), and rewrites fed by either read commit the same
     entries and the same ``scan_with_lineage`` rows: every accepted
     type, nulls, NaN, ±0.0, empty string and bytes, ``timestamp`` under
@@ -585,20 +585,16 @@ def test_rewrite_input_local_read_equals_spark_read(spark, cat, tz):
         def same_reads():
             snap, entries = fast.snapshot(), fast.plan_files()
             paths = sorted(e["file_path"] for e in entries)
-            for lineage in (False, True):
-                for keep_meta in (False, True):
-                    local = fast._rewrite_input(snap, entries, lineage, keep_meta)
-                    assert local_relation_rows(local) == sum(
-                        e["record_count"] for e in entries
-                    )
-                    if lineage:
-                        ref = fast._lineage_frame(snap, paths, keep_meta)
-                    else:
-                        ref = fast._read_physical(paths, with_meta=keep_meta)
-                    # _lineage_frame's column order depends on its file mix
-                    ref = ref.select(*local.columns)
-                    assert local.schema == ref.schema, (lineage, keep_meta)
-                    assert _rows(local) == _rows(ref), (lineage, keep_meta)
+            for keep_meta in (False, True):
+                local = fast._rewrite_input(snap, entries, keep_meta)
+                assert local_relation_rows(local) == sum(
+                    e["record_count"] for e in entries
+                )
+                ref = fast._lineage_frame(snap, paths, keep_meta)
+                # _lineage_frame's column order depends on its file mix
+                ref = ref.select(*local.columns)
+                assert local.schema == ref.schema, keep_meta
+                assert _rows(local) == _rows(ref), keep_meta
 
         def same_tables():
             assert _entries_by_content(fast) == _entries_by_content(slow)
@@ -650,8 +646,8 @@ def _declines_then_deletes(t, model, key=2):
     """``t``'s rewrite input is read by Spark; a DELETE of ``key`` leaves
     the table equal to ``model`` without that key."""
     snap = t.snapshot()
-    assert t._read_small(snap, t.plan_files(), True, False) is None
-    assert t._read_small(snap, t.plan_files(), False, True) is None
+    assert t._read_small(snap, t.plan_files(), False) is None
+    assert t._read_small(snap, t.plan_files(), True) is None
     t.delete({"k": ("=", key)})
     want = model[model.k != key]
     cols = list(want.columns)
@@ -680,7 +676,7 @@ def test_rewrite_input_declines_to_spark_read(spark, cat, tmp_path):
         return t
 
     control = table("d.control")
-    assert control._read_small(control.snapshot(), control.plan_files(), True, True)
+    assert control._read_small(control.snapshot(), control.plan_files(), True)
 
     big_rows = [(k, "b") for k in range(control.DRIVER_WRITE_MAX_ROWS + 1)]
     big = cat.create_table("d.big", schema)

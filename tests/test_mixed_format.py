@@ -362,18 +362,97 @@ def test_upgrade_keeps_lineage_ids(spark, legacy):
             assert not any("lineage_files" in s for s in version["snapshots"])
 
 
+def _carried_ids_after_append(spark, t, expected, target, branch=None):
+    """Append k=30 (to ``branch`` if given): the rows it carries keep
+    the ids ``target`` read, and every id stays unique."""
+    t.append(_rows(spark, [30]), branch=branch)
+    got = _ids(t, t.refs[branch]["snapshot_id"] if branch else None)
+    assert [p for p in got if p[0] != 30] == expected[target]
+    ids = [i for _, i in got]
+    assert len(set(ids)) == len(ids)
+    return got
+
+
 def test_rollback_into_pre_upgrade_snapshot(spark, legacy):
     """A rollback re-commits a pre-upgrade snapshot's manifests: it reads
-    that snapshot's ids, and a rewrite on top of it keeps them for the
-    files it carries as well as for the rows it rewrites."""
+    that snapshot's ids. An append on top of it carries those manifests
+    into a new manifest set, and keeps the ids; so does a rewrite on
+    top of that, for the files it carries as well as for the rows it
+    rewrites, and the first append to a branch left at that snapshot."""
     cat, t, expected = legacy
     head = t.current_snapshot_id
-    t.append(_rows(spark, [20]))  # persists the upgrade
     target = max((s for s in expected if s != head), key=lambda s: len(expected[s]))
+    t.create_branch("audit", target)  # its version persists the upgrade
+    t.append(_rows(spark, [20]))
     rollback(t, target)
     assert _ids(t) == expected[target]
+    appended = _carried_ids_after_append(spark, t, expected, target)
     t.delete({"k": ("=", 0)})  # rewrites one file, carries the others
-    assert _ids(t) == [p for p in expected[target] if p[0] != 0]
-    t.append(_rows(spark, [30]))
-    ids = [i for _, i in _ids(t)]
-    assert len(set(ids)) == len(ids)
+    assert _ids(t) == [p for p in appended if p[0] != 0]
+    assert _ids(cat.load_table("db.legacy")) == _ids(t)
+    _carried_ids_after_append(spark, t, expected, target, branch="audit")
+
+
+def test_lost_upgrade_commit_facts_file_is_swept(spark, legacy, monkeypatch):
+    """The first commit after the lift writes the facts file before the
+    publish; a publish that loses leaves that file behind, and
+    remove_orphan_files sweeps it once past the grace period, keeping
+    the one the published versions name."""
+    from icebergplus_spark.lake.upgrade import FACTS_PREFIX
+    from icebergplus_spark.lake.table import ConcurrentCommitError
+
+    cat, t, expected = legacy
+    head = t.current_snapshot_id
+    publish = t.io.publish
+    lost = []
+
+    def lose_once(meta_dir, version, payload):
+        if not lost:
+            lost.append(version)
+            raise ConcurrentCommitError("lost the conditional create")
+        publish(meta_dir, version, payload)
+
+    monkeypatch.setattr(t.io, "publish", lose_once)
+    t.append(_rows(spark, [20]))  # loses once, then retries and wins
+    monkeypatch.undo()
+    assert lost
+
+    def facts_files():
+        return {fn for fn in os.listdir(t._meta_dir) if fn.startswith(FACTS_PREFIX)}
+
+    live = t._meta["lineage_facts"]
+    assert facts_files() - {live}
+    assert remove_orphan_files(t, older_than_s=3600)["deleted"] == 0
+    remove_orphan_files(t, older_than_s=0)
+    assert facts_files() == {live}
+    assert [p for p in _ids(cat.load_table("db.legacy")) if p[0] != 20] == expected[head]
+
+
+def test_drifting_writes_out_manifests_whose_ids_would_move(tmp_path):
+    """``drifting`` names the pre-upgrade manifests a commit must write
+    out: those whose files the commit's manifest set would read with
+    other ids than its base snapshot, whether the set loses an override
+    the base read or gains one the base did not."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from icebergplus_spark.lake.upgrade import LegacyFacts, drifting, manifest_set_key
+
+    for name, path in (("mA", "a"), ("mB", "b")):
+        pq.write_table(
+            pa.table({"file_path": [path], "record_count": [5]}),
+            str(tmp_path / name),
+        )
+    facts = LegacyFacts(
+        files={"a": (0, 1, False), "b": (0, 2, False)},
+        overrides={manifest_set_key(["mA", "mB"]): {"b": 5}},
+    )
+    override = {"a": (0, 1, False), "b": (5, 2, False)}
+    frozen = {"a": (0, 1, False), "b": (0, 2, False)}
+    new = [{"file_path": "c", "record_count": 1}]
+    meta_dir = str(tmp_path)
+    assert drifting(meta_dir, facts, ["mA", "mB"], override) == set()
+    assert drifting(meta_dir, facts, ["mA", "mB", new], override) == {"mB"}
+    assert drifting(meta_dir, facts, ["mB", "mA"], frozen) == {"mB"}
+    assert drifting(meta_dir, facts, ["mA", "mB", new], frozen) == set()
+    assert drifting(meta_dir, facts, ["mA"], frozen) == set()

@@ -376,5 +376,5 @@ def test_dml_under_escaped_warehouse_path_keeps_rows_and_ids(
     model.update({2: "mrg", new: "ins"})
     check()
     # the first rewrite read its file on the driver only when small
-    small = t._read_small(snap, first, True, False)
+    small = t._read_small(snap, first, False)
     assert (small is not None) == (per_file < t.DRIVER_WRITE_MAX_ROWS)
