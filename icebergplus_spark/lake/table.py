@@ -164,6 +164,24 @@ _DRIVER_WRITE_TYPES = (
 )
 
 
+# key types whose Python values are hashable and compare as Spark's
+# grouping and equality do (``_merge_source_probe``'s raw tier)
+_MERGE_RAW_KEY_TYPES = (
+    _T.IntegralType, _T.StringType, _T.BooleanType, _T.DateType,
+    _T.TimestampType, _T.TimestampNTZType, _T.DecimalType,
+)
+
+
+def _collect_keeps_instants(fields: list) -> bool:
+    """Whether ``collect()`` rows of ``fields`` convert back to the values
+    Spark holds. It hands TIMESTAMP values back as naive local datetimes,
+    which a DST-observing process cannot always map back to one
+    instant: only a UTC process pulls such rows by ``collect()``."""
+    return (time.timezone == 0 and not time.daylight) or not any(
+        isinstance(f.dataType, _T.TimestampType) for f in fields
+    )
+
+
 def _bloom_key(v: Any) -> bytes:
     """Canonical bytes for bloom hashing — build and probe must agree
     for values arriving as parquet-decoded Python objects OR as user
@@ -2474,9 +2492,12 @@ class LakeTable:
         snap: dict[str, Any],
         entries: list[dict[str, Any]],
         keep_meta: bool,
-    ) -> DataFrame | None:
+        arrow: bool = False,
+    ) -> DataFrame | pa.Table | None:
         """``_rewrite_input`` read with pyarrow on the driver, or None
-        when Spark must read. Taken when the entries hold at most
+        when Spark must read; ``arrow`` returns the ``pyarrow.Table``
+        the frame would be built from (nullable physical columns, then
+        the lineage columns). Taken when the entries hold at most
         ``DRIVER_WRITE_MAX_ROWS`` rows in all and their types are
         written on the driver (``_driver_sized``, as for the
         rewrite's output), the table is unpartitioned with no file in a
@@ -2539,7 +2560,8 @@ class LakeTable:
             ):
                 cols.append(pc.coalesce(t.column(c), v) if c in carried else v)
             tables.append(pa.Table.from_arrays(cols, schema=out))
-        return self.spark.createDataFrame(pa.concat_tables(tables), schema)
+        table = pa.concat_tables(tables)
+        return table if arrow else self.spark.createDataFrame(table, schema)
 
     def scan_with_lineage(self, snapshot_id: int | None = None) -> DataFrame:
         """Row-lineage read (Iceberg v3 ``_row_id`` /
@@ -2979,10 +3001,10 @@ class LakeTable:
         relation: SQL ``VALUES``, other driver-built sources, and the
         filters and projections of a small rewrite over
         ``_rewrite_input``'s driver read. Any other frame is pulled
-        with one ``toArrow()`` job. A bounded frame that takes Spark's
+        with one ``toArrow()`` job, and so is a local relation of
+        TIMESTAMP values outside a UTC process
+        (``_collect_keeps_instants``). A bounded frame that takes Spark's
         writer is written by one task."""
-        import time as _time
-
         import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -2992,13 +3014,8 @@ class LakeTable:
             and not pcols
             and not (self.properties or {}).get("write.sort-order", "").strip()
         ):
-            # collect() hands TIMESTAMP values back as naive local
-            # datetimes, which a DST-observing process cannot always
-            # map back to one instant: there, such frames use toArrow()
-            utc_process = _time.timezone == 0 and not _time.daylight
-            if local_relation_rows(df) is not None and (
-                utc_process
-                or not any(isinstance(f.dataType, _T.TimestampType) for f in fields)
+            if local_relation_rows(df) is not None and _collect_keeps_instants(
+                fields
             ):
                 table = rows_to_arrow(df.collect(), df.schema)
             else:
@@ -3811,24 +3828,22 @@ class LakeTable:
         return name
 
     def overwrite(self, df: DataFrame) -> "LakeTable":
-        """Truncate-and-replace commit: new snapshot references ONLY the
-        new files; history keeps the old data readable (time travel)."""
+        """Truncate-and-replace commit: one new snapshot references ONLY
+        the new files, and no version in between holds old and new rows
+        together; history keeps the old data readable (time travel)."""
         t0 = time.time()
-        snap_before = self.current_snapshot_id
-        self.append(df)  # writes files + interim append snapshot
-        appended = self.snapshot()
-        new_manifest = self._lists(appended).manifests[-1]
-        # rewrite metadata so the final snapshot is a clean REPLACE over
-        # only the newly written manifest
-        entries = pq.read_table(os.path.join(self._meta_dir, new_manifest)).to_pylist()
-        meta = dict(self._meta)
-        meta["_version"] = meta["_version"]
-        # drop the interim append snapshot
-        self._meta["snapshots"] = [
-            s for s in self._meta["snapshots"] if s["snapshot_id"] != appended["snapshot_id"]
-        ]
-        self._meta["current_snapshot_id"] = snap_before
-        self._commit_snapshot("overwrite", [new_manifest], entries, t0)
+        if [f.name for f in df.schema.fields] != [f.name for f in self.schema.fields]:
+            raise ValueError(
+                f"schema mismatch: table={self.schema.fieldNames()} df={df.columns}"
+            )
+        entries, ndv = self._write_data_files(df, None)
+        self._commit_snapshot(
+            "overwrite",
+            [entries],
+            entries,
+            t0,
+            extra_summary={"added-ndv": ndv} if ndv else None,
+        )
         return self
 
     def merge(self, df: DataFrame, key: str) -> "LakeTable":
@@ -3911,21 +3926,30 @@ class LakeTable:
 
     def _merge_source_probe(
         self, source: DataFrame, keys: list[str]
-    ) -> tuple[dict[str, Any], list | None, DataFrame | None]:
+    ) -> tuple[dict[str, Any], list | None, DataFrame | None, list | None]:
         """ONE Spark action on the MERGE hot path instead of two (r12,
         guide §1.2 — fewer passes): ``_merge_unhit_exempt``'s distinct
         key sample doubles as the bounds probe. When the sample fits
         under ``EQ_SKIP_KEYS_CAP`` it IS the complete distinct key set,
         so the first-key [lo, hi] derive driver-side and the separate
         min/max aggregate never runs. Returns ``(bounds, sample,
-        keys_phys)``: ``bounds`` maps 'lo'/'hi'; ``sample`` is the
+        keys_phys, rows)``: ``bounds`` maps 'lo'/'hi'; ``sample`` is the
         collected distinct key tuples (None when over cap or when the
         probe declines); ``keys_phys`` the deduped physical key frame
-        (None iff the probe's type gate declined). Declines — running
-        the plain aggregate — on source/target key-type mismatch (the
-        exempt tier's own gate) and on float/double first keys, where a
-        NaN would break the Python-side min/max (Spark orders NaN
-        largest; mirroring the sums family's float exclusion)."""
+        when the dedup tier built it, else None; ``rows`` the source's
+        rows when the probe pulled the whole source (below), else None.
+        Declines — running the plain aggregate — on source/target
+        key-type mismatch (the exempt tier's own gate) and on
+        float/double first keys, where a NaN would break the Python-side
+        min/max (Spark orders NaN largest; mirroring the sums family's
+        float exclusion).
+
+        A source that is a local relation of at most
+        ``DRIVER_WRITE_MAX_ROWS`` rows, whose ``collect()`` keeps its
+        values (``_collect_keeps_instants``), is pulled whole, with no
+        job: the sample, the bounds, the row count and the distinctness
+        of its keys all come from that one pull, and ``merge_into``
+        pairs its join from the same rows."""
         from pyspark.sql import functions as _F
         from pyspark.sql.types import DoubleType, FloatType
 
@@ -3944,7 +3968,6 @@ class LakeTable:
             keys_sel = source.select(
                 *[_F.col(c).alias(p) for c, p in zip(keys, phys_cols)]
             )
-            keys_phys = keys_sel.dropDuplicates()
             # Raw-first tier (r13, guide §2.4 — remove the shuffle
             # outright): a capped CollectLimit on the UN-deduped key
             # projection needs no exchange, where dropDuplicates pays a
@@ -3961,36 +3984,23 @@ class LakeTable:
             # hashed rows driver-side). Over-cap sources pay one
             # bounded (cap+1)-row partial scan before the unchanged
             # dedup tier.
-            from pyspark.sql.types import (
-                BooleanType,
-                DateType,
-                DecimalType,
-                IntegralType,
-                StringType,
-                TimestampNTZType,
-                TimestampType,
-            )
-
-            _RAW_TYPES = (
-                IntegralType,
-                StringType,
-                BooleanType,
-                DateType,
-                TimestampType,
-                TimestampNTZType,
-                DecimalType,
-            )
-            raw_ok = all(isinstance(types[c], _RAW_TYPES) for c in keys)
-            if raw_ok:
-                raw = keys_sel.limit(self.EQ_SKIP_KEYS_CAP + 1).collect()
+            if all(isinstance(types[c], _MERGE_RAW_KEY_TYPES) for c in keys):
+                n = local_relation_rows(source)
+                rows = None
+                if (
+                    n is not None
+                    and n <= self.DRIVER_WRITE_MAX_ROWS
+                    and len({c.lower() for c in source.columns})
+                    == len(source.columns)
+                    and _collect_keeps_instants(source.schema.fields)
+                ):
+                    rows = source.collect()
+                    at = [source.columns.index(c) for c in keys]
+                    raw = [tuple(r[i] for i in at) for r in rows]
+                else:
+                    raw = keys_sel.limit(self.EQ_SKIP_KEYS_CAP + 1).collect()
                 if len(raw) <= self.EQ_SKIP_KEYS_CAP:
-                    seen: set = set()
-                    sample = []
-                    for r in raw:
-                        t = tuple(r)
-                        if t not in seen:
-                            seen.add(t)
-                            sample.append(r)
+                    sample = list(dict.fromkeys(map(tuple, raw)))
                     k0_vals = [r[0] for r in sample if r[0] is not None]
                     return (
                         {
@@ -3998,8 +4008,10 @@ class LakeTable:
                             "hi": max(k0_vals, default=None),
                         },
                         sample,
-                        keys_phys,
+                        None,
+                        rows,
                     )
+            keys_phys = keys_sel.dropDuplicates()
             sample = keys_phys.limit(self.EQ_SKIP_KEYS_CAP + 1).collect()
             if len(sample) <= self.EQ_SKIP_KEYS_CAP:
                 k0_vals = [r[0] for r in sample if r[0] is not None]
@@ -4010,27 +4022,107 @@ class LakeTable:
                     },
                     sample,
                     keys_phys,
+                    None,
                 )
         bounds = source.agg(
             _F.min(k0).alias("lo"), _F.max(k0).alias("hi")
         ).first()
-        return bounds, None, keys_phys
+        return bounds, None, keys_phys, None
 
     def _merge_write_bound(
         self,
         affected: list[dict[str, Any]],
         source: DataFrame,
         key_sample: list | None,
+        rows: list | None,
     ) -> int | None:
         """Bound on the rows a MERGE rewrite writes: the affected files'
         rows plus the source's, known when the source is a local
         relation whose key tuples are all distinct (``key_sample`` from
-        ``_merge_source_probe``), so no target row joins two source
-        rows. None otherwise."""
-        n = local_relation_rows(source)
+        ``_merge_source_probe``, and its pulled ``rows`` when it pulled
+        the source), so no target row joins two source rows. None
+        otherwise."""
+        n = len(rows) if rows is not None else local_relation_rows(source)
         if n is None or key_sample is None or len(key_sample) != n:
             return None
         return n + sum(f["record_count"] for f in affected)
+
+    def _merge_pairs(
+        self,
+        affected: list[dict[str, Any]],
+        source: DataFrame,
+        keys: list[str],
+        rows: list,
+    ) -> DataFrame | None:
+        """``merge_into``'s full outer join of the affected files' rows
+        with the source's pulled ``rows``, paired on the driver with
+        ``pyarrow.Table.join``, as one local relation with the columns
+        the Spark join yields: the target columns, the lineage columns,
+        ``__t``, ``src_<c>`` and ``__s``. Rows come in a fixed order:
+        target rows in file order, then source-only rows in source
+        order. As under Spark's ``=``, a NULL key matches nothing.
+
+        None, and the Spark join runs, unless the affected rows plus the
+        source rows are ``_driver_sized``, ``_read_small`` reads the
+        affected files, every string key compares by its bytes and no
+        two output columns share a name."""
+        import numpy as _np
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        lin = [self.LINEAGE_ID_COL, self.LINEAGE_BIRTH_COL]
+        tgt_names = self.schema.fieldNames() + lin
+        src_names = [f"src_{c}" for c in source.columns]
+        names = tgt_names + ["__t"] + src_names + ["__s"]
+        if not (
+            self._driver_sized(
+                len(rows) + sum(f["record_count"] for f in affected),
+                self.physical_schema.fields + source.schema.fields,
+            )
+            and len({n.lower() for n in names + ["__tpos", "__spos"]})
+            == len(names) + 2
+            and all(
+                getattr(self.schema[c].dataType, "collation", "UTF8_BINARY")
+                == "UTF8_BINARY"
+                for c in keys
+            )
+        ):
+            return None
+        tgt = self._read_small(self.snapshot(), affected, False, arrow=True)
+        if tgt is None:
+            return None
+        mapping = self._column_mapping
+        tgt = tgt.select([mapping[c] for c in self.schema.fieldNames()] + lin)
+
+        def marked(t: pa.Table, flag: str) -> pa.Table:
+            # the side's presence flag, and its row order as ``<flag>pos``
+            n = t.num_rows
+            t = t.append_column(flag, pa.array(_np.ones(n, bool)))
+            return t.append_column(f"{flag}pos", pa.array(_np.arange(n)))
+
+        paired = marked(tgt.rename_columns(tgt_names), "__t").join(
+            marked(rows_to_arrow(rows, source.schema).rename_columns(src_names), "__s"),
+            keys=keys,
+            right_keys=[f"src_{c}" for c in keys],
+            join_type="full outer",
+            coalesce_keys=False,
+            use_threads=False,
+        ).sort_by(
+            [("__tpos", "ascending"), ("__spos", "ascending")],
+            null_placement="at_end",
+        )
+        schema = StructType(
+            [_T.StructField(f.name, f.dataType) for f in self.schema.fields]
+            + [_T.StructField(c, _T.LongType()) for c in lin]
+            + [_T.StructField("__t", _T.BooleanType())]
+            + [
+                _T.StructField(n, f.dataType)
+                for n, f in zip(src_names, source.schema.fields)
+            ]
+            + [_T.StructField("__s", _T.BooleanType())]
+        )
+        return self.spark.createDataFrame(
+            paired.select(names).cast(to_arrow_schema(schema)), schema
+        )
 
     def _merge_unhit_exempt(
         self,
@@ -4069,7 +4161,9 @@ class LakeTable:
         }
         if any(src_types.get(c) != types[c] for c in keys):
             return affected
-        if keys_phys is None:
+        if keys_phys is None and (
+            sample is None or len(sample) > self.EQ_SKIP_KEYS_CAP
+        ):
             keys_phys = source.select(
                 *[_F.col(c).alias(p) for c, p in zip(keys, phys_cols)]
             ).dropDuplicates()
@@ -4159,8 +4253,8 @@ class LakeTable:
         # BY SOURCE clauses scan every target file regardless of the
         # source key range — bounds are never consulted there, so the
         # probe action is skipped outright (r12).
-        bounds, key_sample, keys_phys = (
-            ({"lo": None, "hi": None}, None, None)
+        bounds, key_sample, keys_phys, src_rows = (
+            ({"lo": None, "hi": None}, None, None, None)
             if by_source
             else self._merge_source_probe(source, keys)
         )
@@ -4377,7 +4471,9 @@ class LakeTable:
             out_dir = os.path.join(
                 self.table_dir, "data", f"merge-{uuid.uuid4().hex}"
             )
-            bound = self._merge_write_bound(affected, source, key_sample)
+            bound = self._merge_write_bound(
+                affected, source, key_sample, src_rows
+            )
             new_entries = self._harvest_rewrite(
                 self._write_frame(phys, out_dir, pcols, bound), True
             )
@@ -4560,8 +4656,8 @@ class LakeTable:
         # BY SOURCE clauses scan every target file regardless of the
         # source key range — bounds are never consulted there, so the
         # probe action is skipped outright (r12).
-        bounds, key_sample, keys_phys = (
-            ({"lo": None, "hi": None}, None, None)
+        bounds, key_sample, keys_phys, src_rows = (
+            ({"lo": None, "hi": None}, None, None, None)
             if by_source
             else self._merge_source_probe(source, keys)
         )
@@ -4621,29 +4717,43 @@ class LakeTable:
             return self
         affected_paths = {f["file_path"] for f in affected}
         untouched = [f for f in all_files if f["file_path"] not in affected_paths]
+        bound = self._merge_write_bound(affected, source, key_sample, src_rows)
 
-        # presence markers, not key-nullness: a legitimately-NULL key in
-        # either side must not be misclassified after the full outer join
-        src = source.select(
-            *[_F.col(c).alias(f"src_{c}") for c in source.columns]
-        ).withColumn("__s", _F.lit(True))
-        # lineage through the rewrite (Iceberg v3): carried/updated rows
-        # keep ids; source-only inserts arrive with NULL lineage from
-        # the outer join and the read-side inheritance rule mints theirs
-        target = (
-            self._rewrite_input(self.snapshot(), affected).select(
-                *[_F.col(mapping[f.name]).alias(f.name) for f in self.schema.fields],
-                self.LINEAGE_ID_COL,
-                self.LINEAGE_BIRTH_COL,
-            )
-            if affected
-            else local_rows_df(self.spark, [], self.schema)
+        # a small MERGE pairs its rows on the driver; the clauses below
+        # run in Spark over either join
+        joined = (
+            self._merge_pairs(affected, source, keys, src_rows)
+            if affected and src_rows is not None and bound is not None
+            else None
         )
-        target = target.withColumn("__t", _F.lit(True))
-        join_cond = _F.lit(True)
-        for c in keys:
-            join_cond = join_cond & (_F.col(c) == _F.col(f"src_{c}"))
-        joined = target.join(src, join_cond, "full_outer")
+        if joined is None:
+            # presence markers, not key-nullness: a legitimately-NULL
+            # key in either side must not be misclassified after the
+            # full outer join
+            src = source.select(
+                *[_F.col(c).alias(f"src_{c}") for c in source.columns]
+            ).withColumn("__s", _F.lit(True))
+            # lineage through the rewrite (Iceberg v3): carried/updated
+            # rows keep ids; source-only inserts arrive with NULL
+            # lineage from the outer join and the read-side inheritance
+            # rule mints theirs
+            target = (
+                self._rewrite_input(self.snapshot(), affected).select(
+                    *[
+                        _F.col(mapping[f.name]).alias(f.name)
+                        for f in self.schema.fields
+                    ],
+                    self.LINEAGE_ID_COL,
+                    self.LINEAGE_BIRTH_COL,
+                )
+                if affected
+                else local_rows_df(self.spark, [], self.schema)
+            )
+            target = target.withColumn("__t", _F.lit(True))
+            join_cond = _F.lit(True)
+            for c in keys:
+                join_cond = join_cond & (_F.col(c) == _F.col(f"src_{c}"))
+            joined = target.join(src, join_cond, "full_outer")
         is_matched = _F.col("__t").isNotNull() & _F.col("__s").isNotNull()
         # SQL WHEN-clause semantics: a NULL condition means the clause does
         # NOT fire (row retained). Coalesce to false so filter(~gate) keeps
@@ -4740,7 +4850,6 @@ class LakeTable:
         )
         phys, pcols = self._apply_partition_transforms(phys)
         out_dir = os.path.join(self.table_dir, "data", f"merge-{uuid.uuid4().hex}")
-        bound = self._merge_write_bound(affected, source, key_sample)
         new_entries = self._harvest_rewrite(
             self._write_frame(phys, out_dir, pcols, bound), bool(affected)
         )
@@ -5587,13 +5696,9 @@ class LakeTable:
         elif kind == "files":
             snap = self.snapshot()
             if not snap:
-                return local_rows_df(self.spark, [], "file_path string, record_count long, file_size_bytes long, "
-                    "column_mins string, column_maxs string"
-                )
+                return local_rows_df(self.spark, [], _ddl_of(MANIFEST_SCHEMA))
             # distributed read of the manifest parquet files themselves
-            return self.spark.read.parquet(
-                *[os.path.join(self._meta_dir, m) for m in self._lists(snap).manifests]
-            )
+            return self._manifest_df(snap)
         elif kind == "all_files":
             # Iceberg's db.t.all_data_files: files across EVERY retained
             # snapshot (not just current) — what expiry/orphan audits
@@ -5610,12 +5715,7 @@ class LakeTable:
                 # schema) so consumers can select stats columns on a
                 # never-written table too
                 return local_rows_df(self.spark, [], _ddl_of(MANIFEST_SCHEMA))
-            return (
-                self.spark.read.parquet(
-                    *[os.path.join(self._meta_dir, m) for m in all_manifests]
-                )
-                .dropDuplicates(["file_path"])
-            )
+            return self._read_manifests(all_manifests).dropDuplicates(["file_path"])
         elif kind == "all_delete_files":
             all_dm = sorted(
                 {
@@ -5836,19 +5936,23 @@ class LakeTable:
 
     def _manifest_df(self, snap: dict[str, Any]) -> DataFrame:
         """The snapshot's manifest entries as a Spark DataFrame — the
-        substrate every executor-tier planning/fold path filters.
-        mergeSchema: a snapshot can mix pre-upgrade manifests (no
-        column_sums) with current ones — the union schema makes the
-        missing stat NULL (→ that file takes the scan leg) instead of
-        depending on which file Spark samples for the schema (r10).
-        column_nan_counts (r12) is guaranteed present — a NULL column
-        when every manifest predates it — so the Catalyst keep/full
-        conditions can always reference it (NULL → unknown → the
-        conservative float path)."""
+        substrate every executor-tier planning/fold path filters."""
+        return self._read_manifests(self._lists(snap).manifests)
+
+    def _read_manifests(self, manifests: list[str]) -> DataFrame:
+        """The entries of the named manifests as a Spark DataFrame.
+        mergeSchema: a table can mix pre-upgrade manifests (no
+        column_sums, no row-lineage columns) with current ones — the
+        union schema makes the missing column NULL (→ that file takes
+        the scan leg) instead of depending on which file Spark samples
+        for the schema (r10). column_nan_counts (r12) is guaranteed
+        present — a NULL column when every manifest predates it — so
+        the Catalyst keep/full conditions can always reference it
+        (NULL → unknown → the conservative float path)."""
         from pyspark.sql import functions as _F
 
         df = self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self._meta_dir, m) for m in self._lists(snap).manifests]
+            *[os.path.join(self._meta_dir, m) for m in manifests]
         )
         if "column_nan_counts" not in df.columns:
             df = df.withColumn(

@@ -723,3 +723,234 @@ def test_rewrite_input_declines_to_spark_read(spark, cat, tmp_path):
         pq.write_table(arrow, path)
         t.add_files([path])
         _declines_then_deletes(t, model)
+
+
+def test_cow_merge_of_small_file_runs_no_spark_job(spark, cat):
+    """A copy-on-write MERGE upsert of one small file pairs its rows on
+    the driver and writes on the driver: no Spark job at all."""
+    name = "db.nojobmerge"
+    model = _fact(spark, cat, name)
+    src = [(4, 1, 999, "n4"), (5, 2, 55, "n5")]
+    model = model.assign(q=[999 if k == 4 else q for k, q in zip(model.k, model.q)])
+    model = pd.concat(
+        [model, pd.DataFrame([src[1]], columns=["k", "g", "q", "note"])]
+    )
+    jobs = _run_one_driver_file(
+        cat,
+        name,
+        f"MERGE INTO {name} t USING (SELECT {CASTS} FROM VALUES {_values(src)} "
+        f"AS v(k, g, q, note)) s ON t.k = s.k "
+        f"WHEN MATCHED THEN UPDATE SET q = s.q WHEN NOT MATCHED THEN INSERT *",
+        model,
+    )
+    assert jobs == 0
+
+
+# -- MERGE paired on the driver vs the Spark join ---------------------------
+
+
+def _lineage_by_row(t):
+    """{row content → (_row_id, _last_updated_snapshot_id)}: two tables
+    with equal maps hold equal rows, as the test data keeps every row's
+    content unique."""
+    rows = t.scan_with_lineage().collect()
+    out = {
+        _row_key(tuple(r)[:-2]): (r["_row_id"], r["_last_updated_snapshot_id"])
+        for r in rows
+    }
+    assert len(out) == len(rows)
+    return out
+
+
+def _merge_both_ways(spark, cat, name, ddl, files, rounds, on, clauses,
+                     src_ddl=None, prep=None):
+    """Create twin tables holding ``files`` (one data file each, after
+    ``prep``), then run each round's MERGE on both: on one with the
+    round's rows as a local relation, which may pair on the driver, and
+    on the other with the same rows as a non-local source, which takes
+    the Spark join. After each round the tables must be equal, and each
+    output row must carry the row id of the same pre-MERGE row on both
+    (or be an insert on both) and the same ``_last_updated_snapshot_id``.
+    Inserted rows take their ids from their position in the written
+    file, which the Spark join leaves in shuffle order, so only their
+    freshness is compared. Returns, per round, whether the local side
+    paired on the driver."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from icebergplus_spark.localrel import local_relation_rows
+
+    schema = _parse_datatype_string(ddl)
+    src_schema = _parse_datatype_string(src_ddl or ddl)
+    local, remote = (cat.create_table(f"{name}.{s}", schema) for s in ("l", "r"))
+    paired: dict = {"l": [], "r": []}
+    for side, t in (("l", local), ("r", remote)):
+        for rows in files:
+            t.append(local_rows_df(spark, rows, schema))
+        if prep:
+            prep(t)
+        orig = t._merge_pairs
+
+        def spy(*a, _orig=orig, _log=paired[side], **kw):
+            out = _orig(*a, **kw)
+            _log.append(out is not None)
+            return out
+
+        t._merge_pairs = spy
+    lineage = [_lineage_by_row(t) for t in (local, remote)]
+    assert lineage[0] == lineage[1]
+    fired = []
+    for rows in rounds:
+        before = [{v[0]: k for k, v in m.items()} for m in lineage]
+        src = local_rows_df(spark, rows, src_schema)
+        far = local_rows_df(spark, rows, src_schema).repartition(2)
+        assert local_relation_rows(far) is None
+        n_pairs = len(paired["l"])
+        local.merge_into(src, on=on, **clauses())
+        remote.merge_into(far, on=on, **clauses())
+        fired.append(any(paired["l"][n_pairs:]))
+        lineage = [_lineage_by_row(t) for t in (local, remote)]
+        assert lineage[0].keys() == lineage[1].keys()
+        for row, (id_l, upd_l) in lineage[0].items():
+            id_r, upd_r = lineage[1][row]
+            assert upd_l == upd_r, row
+            assert before[0].get(id_l) == before[1].get(id_r), row
+    assert not any(paired["r"])
+    return fired
+
+
+KV_DDL = "k bigint, v bigint, note string"
+KV_FILES = [
+    [(k, 10 * k, f"n{k}") for k in range(0, 16, 2)] + [(None, 999, "null")],
+    [(k, 10 * k, f"n{k}") for k in range(100, 108, 2)],
+]
+# matches 2 and 6; 3, 9 and the NULL key insert (a NULL key matches
+# nothing, on either side); then 3 (inserted above) and 4 match
+KV_ROUNDS = [
+    [(2, 1, "s2"), (3, 2, "s3"), (6, 300, "s6"), (None, 4, "snull"), (9, 5, "s9")],
+    [(3, 70, "r3"), (4, 8, "r4"), (5, 90, "r5")],
+]
+
+
+def _clauses(kind):
+    from pyspark.sql import functions as F
+
+    upd = {"v": F.col("v") + F.col("src_v"), "note": F.col("src_note")}
+    return {
+        "update_reads_source": lambda: dict(when_matched_update=upd),
+        "matched_delete": lambda: dict(when_matched_delete=True),
+        "matched_and": lambda: dict(
+            when_matched_update=upd, matched_condition=F.col("src_v") > 50
+        ),
+        "not_matched_and": lambda: dict(
+            when_matched_update=upd,
+            not_matched_insert_condition=F.col("src_v") % 2 == 0,
+        ),
+        "insert_off": lambda: dict(
+            when_matched_update=upd, when_not_matched_insert=False
+        ),
+        "by_source": lambda: dict(
+            when_matched_update=upd, when_not_matched_by_source_delete=True
+        ),
+    }[kind]
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["update_reads_source", "matched_delete", "matched_and", "not_matched_and",
+     "insert_off"],
+)
+def test_merge_pairs_on_driver_equal_spark_join(spark, cat, kind):
+    """Each clause shape gives the same table and the same row lineage
+    whether the MERGE pairs its rows on the driver or in a Spark join;
+    the target and the source both hold a NULL key. The second round of
+    the first shape merges into files with materialized lineage."""
+    rounds = KV_ROUNDS if kind == "update_reads_source" else KV_ROUNDS[:1]
+    fired = _merge_both_ways(
+        spark, cat, f"pair_{kind}", KV_DDL, KV_FILES, rounds, "k", _clauses(kind)
+    )
+    assert fired == [True] * len(rounds)
+
+
+def _keyed(convert, ddl):
+    """``KV_FILES``/``KV_ROUNDS`` with their keys mapped by ``convert``."""
+    def conv(rows):
+        return [(None if k is None else convert(k), v, n) for k, v, n in rows]
+    return ddl, [conv(f) for f in KV_FILES], [conv(r) for r in KV_ROUNDS]
+
+
+@pytest.mark.parametrize(
+    "key,paired",
+    [
+        ("string", True),
+        ("date", True),
+        # a decimal column is read and written by Spark (_driver_sized),
+        # so its MERGE takes the Spark join on both sides
+        ("decimal", False),
+        ("two_columns", True),
+    ],
+)
+def test_merge_pairs_on_driver_per_key_type(spark, cat, key, paired):
+    """String, date, decimal and two-column keys give the same table and
+    lineage on both paths."""
+    on = "k"
+    if key == "string":
+        ddl, files, rounds = _keyed(lambda k: f"s{k:03d}", "k string, v bigint, note string")
+    elif key == "date":
+        ddl, files, rounds = _keyed(
+            lambda k: datetime.date(2020, 1, 1) + datetime.timedelta(days=k),
+            "k date, v bigint, note string",
+        )
+    elif key == "decimal":
+        ddl, files, rounds = _keyed(
+            lambda k: decimal.Decimal(k) / 4, "k decimal(10,2), v bigint, note string"
+        )
+    else:
+        on = ["k", "note"]
+        ddl, files = KV_DDL, KV_FILES
+        # (2, "n2") matches; (6, "x") and (None, "null") do not
+        rounds = [[(2, 1, "n2"), (6, 2, "x"), (None, 3, "null"), (3, 4, "n3")]]
+    fired = _merge_both_ways(
+        spark, cat, f"keytype_{key}", ddl, files, rounds[:1], on,
+        _clauses("update_reads_source"),
+    )
+    assert fired == [paired]
+
+
+def _mor_delete(t):
+    t.set_property("write.delete.mode", "merge-on-read")
+    t.delete({"k": ("=", 0)})
+    t.set_property("write.delete.mode", "copy-on-write")
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["duplicate_source_key", "double_key", "key_type_mismatch",
+     "over_4096_rows", "delete_manifests", "by_source"],
+)
+def test_merge_declines_to_spark_join(spark, cat, case):
+    """Each input the driver pairing does not take runs the Spark join,
+    with the same result as a non-local source: a duplicate source key,
+    a double key, a source key type unequal to the target's, more than
+    4,096 affected plus source rows, merge-on-read deletes and a BY
+    SOURCE clause."""
+    ddl, files, rounds = KV_DDL, KV_FILES, KV_ROUNDS[:1]
+    src_ddl, prep, kind = None, None, "update_reads_source"
+    if case == "duplicate_source_key":
+        rounds = [[(2, 1, "a"), (2, 3, "b"), (5, 7, "c")]]
+    elif case == "double_key":
+        ddl, files, rounds = _keyed(float, "k double, v bigint, note string")
+    elif case == "key_type_mismatch":
+        src_ddl = "k int, v bigint, note string"
+    elif case == "over_4096_rows":
+        # 4,091 keyed rows, the NULL-key row and 5 source rows
+        n = 4097 - 1 - len(rounds[0])
+        files = [[(k, k, "n") for k in range(0, 2 * n, 2)] + [(None, -1, "null")]]
+    elif case == "delete_manifests":
+        prep = _mor_delete
+    else:
+        kind = "by_source"
+    fired = _merge_both_ways(
+        spark, cat, f"decline_{case}", ddl, files, rounds[:1], "k", _clauses(kind),
+        src_ddl=src_ddl, prep=prep,
+    )
+    assert fired == [False]

@@ -456,3 +456,27 @@ def test_drifting_writes_out_manifests_whose_ids_would_move(tmp_path):
     assert drifting(meta_dir, facts, ["mB", "mA"], frozen) == {"mB"}
     assert drifting(meta_dir, facts, ["mA", "mB", new], frozen) == set()
     assert drifting(meta_dir, facts, ["mA"], frozen) == set()
+
+
+def test_files_metadata_tables_merge_manifest_schemas(spark, legacy):
+    """``metadata_df("files")`` and ``("all_files")`` read manifests with
+    mergeSchema: on an upgraded table whose snapshot lists a pre-upgrade
+    manifest first, both show the row-lineage columns, filled for the
+    entries of the current manifest. A table with no snapshot shows the
+    whole manifest schema in ``files`` too."""
+    import pyarrow.parquet as pq
+
+    from icebergplus_spark.lake.table import MANIFEST_SCHEMA
+
+    cat, t, _ = legacy
+    t.append(_rows(spark, [20, 21]))
+    manifests = snapshot_lists(t._meta_dir, t.snapshot()).manifests
+    assert not set(FACT_COLUMNS) & set(
+        pq.read_schema(os.path.join(t._meta_dir, manifests[0])).names
+    )
+    for kind in ("files", "all_files"):
+        df = t.metadata_df(kind)
+        assert set(FACT_COLUMNS) <= set(df.columns), kind
+        assert any(r["first_row_id"] is not None for r in df.collect()), kind
+    empty = cat.create_table("db.none", SCHEMA).metadata_df("files")
+    assert empty.columns == MANIFEST_SCHEMA.names

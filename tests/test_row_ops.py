@@ -62,6 +62,34 @@ def test_overwrite_replaces_current_but_keeps_history(spark, table):
     assert t.scan(snapshot_id=2).count() == 20  # pre-overwrite view intact
 
 
+def test_overwrite_publishes_one_version(spark, table):
+    """An overwrite commits once: it adds exactly one
+    ``vN.metadata.json``, no published version's head holds old and new
+    rows together, and the pre-overwrite snapshot still reads the old
+    rows."""
+    import json
+    import os
+
+    def versions():
+        return {
+            fn for fn in os.listdir(table._meta_dir)
+            if fn.startswith("v") and fn.endswith(".metadata.json")
+        }
+
+    before, pre = versions(), table.current_snapshot_id
+    table.overwrite(spark.createDataFrame([(42, "new")], SCHEMA))
+    added = versions() - before
+    assert len(added) == 1
+    (name,) = added
+    with open(os.path.join(table._meta_dir, name)) as f:
+        head = json.load(f)["current_snapshot_id"]
+    assert head == table.current_snapshot_id
+    assert [tuple(r) for r in table.scan(snapshot_id=head).collect()] == [(42, "new")]
+    assert sorted(r["k"] for r in table.scan(snapshot_id=pre).collect()) == list(
+        range(10)
+    ) + list(range(100, 110))
+
+
 def test_merge_upserts(spark, table):
     updates = spark.createDataFrame([(5, "UPDATED"), (999, "NEW")], SCHEMA)
     t = table.merge(updates, key="k")
