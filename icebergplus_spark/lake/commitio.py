@@ -81,13 +81,12 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import time
 import uuid
 from contextlib import contextmanager
 
-_META_RE = re.compile(r"^v(\d+)\.metadata\.json$")
+from icebergplus_spark.lake import versions
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -230,13 +229,12 @@ class RenameCommitIO:
             return int(f.read().strip())
 
     def publish(self, meta_dir: str, version: int, payload: str) -> None:
-        """Write vN metadata, then atomically swap the pointer. A crash
-        after the metadata write leaves an orphan vN file with the
-        pointer still on vN-1 — invisible, safe."""
-        with open(
-            os.path.join(meta_dir, f"v{version}.metadata.json"), "w"
-        ) as f:
-            f.write(payload)
+        """Write vN metadata (``payload`` is its JSON text, written
+        through the ``versions`` codec), then atomically swap the
+        pointer. A crash after the metadata write leaves an orphan vN
+        file with the pointer still on vN-1 — invisible, safe."""
+        with open(versions.path(meta_dir, version), "wb") as f:
+            f.write(versions.encode(payload))
         ptr = self.pointer_path(meta_dir)
         tmp = ptr + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -261,45 +259,23 @@ class ObjectStoreCommitIO:
     def hint_path(self, meta_dir: str) -> str:
         return os.path.join(meta_dir, "version-hint.text")
 
-    def _list_max_version(self, meta_dir: str) -> int:
-        best = 0
-        for fn in os.listdir(meta_dir):  # LIST — strongly consistent on S3
-            m = _META_RE.match(fn)
-            if m:
-                best = max(best, int(m.group(1)))
-        return best
-
     def current_version(self, meta_dir: str) -> int:
-        start = 0
-        try:
-            with open(self.hint_path(meta_dir)) as f:
-                start = int(f.read().strip())
-        except (OSError, ValueError):
-            pass  # hint absent/corrupt — LIST recovers below
-        if start <= 0 or not os.path.exists(
-            os.path.join(meta_dir, f"v{start}.metadata.json")
-        ):
-            start = self._list_max_version(meta_dir)
-            if start == 0:
-                raise FileNotFoundError(
-                    f"no metadata versions under {meta_dir}"
-                )
-        # Probe forward: the hint is advisory and may trail committed
-        # versions (it is written after the CAS, best-effort).
-        v = start
-        while os.path.exists(
-            os.path.join(meta_dir, f"v{v + 1}.metadata.json")
-        ):
-            v += 1
+        # The hint is advisory: absent or corrupt, a LIST recovers; it
+        # may trail committed versions (it is written after the CAS,
+        # best-effort), so the probe walks forward from it.
+        v = versions.probe(meta_dir, versions.read_int(self.hint_path(meta_dir)))
+        if v == 0:
+            raise FileNotFoundError(f"no metadata versions under {meta_dir}")
         return v
 
     def publish(self, meta_dir: str, version: int, payload: str) -> None:
-        path = os.path.join(meta_dir, f"v{version}.metadata.json")
+        path = versions.path(meta_dir, version)
+        data = versions.encode(payload)
         try:
             # Create-if-absent IS the commit CAS (conditional PUT,
             # If-None-Match: * on real S3). Exactly one writer wins vN.
-            with open(path, "x") as f:
-                f.write(payload)
+            with open(path, "xb") as f:
+                f.write(data)
         except FileExistsError:
             raise ConcurrentCommitError(
                 f"metadata v{version} already committed by another writer "
@@ -391,10 +367,10 @@ class CatalogServiceCommitIO:
         (identical bytes); an already-present file is left untouched.
         The bytes go to a temp file that is then hard-linked into place,
         so a reader that finds vN never opens it half-written."""
-        path = os.path.join(meta_dir, f"v{version}.metadata.json")
+        path = versions.path(meta_dir, version)
         tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(payload)
+        with open(tmp, "wb") as f:
+            f.write(versions.encode(payload))
         try:
             os.link(tmp, path)
         except FileExistsError:
@@ -405,14 +381,10 @@ class CatalogServiceCommitIO:
     def _seed_version(self, con, meta_dir: str) -> int:
         """Adopt a table with no service row: seed from a directory
         LIST (idempotent — INSERT OR IGNORE settles races)."""
-        best = 0
         try:
-            for fn in os.listdir(meta_dir):
-                m = _META_RE.match(fn)
-                if m:
-                    best = max(best, int(m.group(1)))
+            best = max(versions.list_versions(meta_dir), default=0)
         except OSError:
-            pass
+            best = 0
         if best:
             con.execute(
                 "INSERT OR IGNORE INTO tables (meta_dir, version) VALUES (?, ?)",
@@ -437,9 +409,7 @@ class CatalogServiceCommitIO:
             version = int(row[0])
             # self-heal: a committer that died between its row commit
             # and the file write left no vN file — re-materialize it
-            if not os.path.exists(
-                os.path.join(meta_dir, f"v{version}.metadata.json")
-            ):
+            if not versions.exists(meta_dir, version):
                 p = con.execute(
                     "SELECT payload FROM payloads WHERE meta_dir = ? "
                     "AND version = ?",

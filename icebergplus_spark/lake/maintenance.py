@@ -25,7 +25,7 @@ import pyarrow.parquet as pq
 
 import pyspark.sql.functions as F
 
-from icebergplus_spark.lake import upgrade
+from icebergplus_spark.lake import upgrade, versions
 from icebergplus_spark.lake.manifest_list import is_list_file
 from icebergplus_spark.lake.table import LakeTable
 
@@ -740,30 +740,11 @@ def expire_metadata_versions(table: LakeTable, keep_last: int = 10) -> dict:
     # a transaction-marked head resolves through its base_version chain
     # (lake/txn.py): those base metadata files must survive any cutoff,
     # or vacuuming under an unresolved/aborted head would break refresh
-    protected: set[int] = set()
-    v = current
-    while True:
-        try:
-            with open(
-                os.path.join(table._meta_dir, f"v{v}.metadata.json")
-            ) as f:
-                m = json.load(f)
-        except OSError:
-            break
-        if not m.get("pending_txn"):
-            break
-        v = m["base_version"]
-        protected.add(v)
+    protected = versions.pending_bases(table._meta_dir, current)
     removed = 0
-    for fn in os.listdir(table._meta_dir):
-        if not (fn.startswith("v") and fn.endswith(".metadata.json")):
-            continue
-        try:
-            v = int(fn[1:].split(".")[0])
-        except ValueError:
-            continue
+    for v in versions.list_versions(table._meta_dir):
         if v < cutoff and v not in protected:
-            os.remove(os.path.join(table._meta_dir, fn))
+            os.remove(versions.path(table._meta_dir, v))
             removed += 1
     return {"removed_versions": removed, "current_version": current}
 

@@ -51,6 +51,7 @@ import urllib.parse
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from icebergplus_spark.lake import versions
 from icebergplus_spark.lake.catalog import LocalLakeCatalog, Status
 from icebergplus_spark.lake.commitio import (
     CatalogServiceCommitIO,
@@ -533,12 +534,8 @@ class LakeRestServer:
                 meta, ver = t._meta, t._meta["_version"]
                 if ver_pin is not None and ver_pin != ver:
                     try:
-                        with open(
-                            os.path.join(
-                                t._meta_dir, f"v{ver_pin}.metadata.json"
-                            )
-                        ) as fh:
-                            meta, ver = json.load(fh), ver_pin
+                        meta = versions.read(t._meta_dir, ver_pin)
+                        ver = ver_pin
                     except OSError:
                         start = 0  # pinned version expired → restart
                 born: dict[str, int] = {}
@@ -713,9 +710,7 @@ class LakeRestServer:
     def _load_payload(self, t: LakeTable) -> dict:
         version = t._meta["_phys_version"]
         return {
-            "metadata-location": os.path.join(
-                t._meta_dir, f"v{version}.metadata.json"
-            ),
+            "metadata-location": versions.path(t._meta_dir, version),
             "metadata": {
                 k: v for k, v in t._meta.items() if not k.startswith("_")
             },
@@ -881,8 +876,9 @@ class RestCommitIO:
             )
         if status != 200:
             raise RuntimeError(f"loadTable failed ({status}): {payload}")
-        loc = os.path.basename(payload["metadata-location"])
-        return int(loc[1:].split(".")[0])  # v{N}.metadata.json
+        return versions.version_of(
+            os.path.basename(payload["metadata-location"])
+        )
 
     def publish(self, meta_dir: str, version: int, payload: str) -> None:
         status, resp = _http(

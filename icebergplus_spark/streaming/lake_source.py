@@ -43,6 +43,7 @@ from icebergplus_spark.lake.manifest_list import (
     snapshot_lists,
 )
 from icebergplus_spark.lake.upgrade import lift
+from icebergplus_spark.lake.versions import load_current
 
 SOURCE_NAME = "lake_stream"
 
@@ -50,77 +51,15 @@ SOURCE_NAME = "lake_stream"
 def _make_source():
     """Build the DataSource class. Everything the executors touch is
     defined inside this closure with stdlib/pyarrow/pyspark imports,
-    plus the snapshot walks of ``lake.manifest_list`` (pickled by
-    reference, so the reader's planning worker imports this package,
-    as the lake's own pandas UDFs do)."""
+    plus the version reads of ``lake.versions`` and the snapshot walks
+    of ``lake.manifest_list`` (pickled by reference, so the reader's
+    planning worker imports this package, as the lake's own pandas
+    UDFs do)."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
         InputPartition,
     )
-
-    def load_meta(table_dir: str) -> dict:
-        # Self-contained (cloudpickle ships it to workers without this
-        # package): understands both commit-IO layouts — the POSIX
-        # pointer file and the object-store advisory hint + probe with
-        # a LIST fallback (commitio.py protocol).
-        meta_dir = os.path.join(table_dir, "metadata")
-        try:
-            # POSIX layout: the pointer is AUTHORITATIVE — never probe
-            # past it (a crashed commit can leave an orphan vN+1 file
-            # that was never published).
-            with open(os.path.join(meta_dir, "version-pointer.txt")) as f:
-                version = int(f.read().strip())
-        except (OSError, ValueError):
-            # Object-store layout: every vN file IS committed (created
-            # by the CAS), so advisory hint + probe forward, with a
-            # LIST fallback when the hint is absent/corrupt.
-            version = 0
-            try:
-                with open(os.path.join(meta_dir, "version-hint.text")) as f:
-                    version = int(f.read().strip())
-            except (OSError, ValueError):
-                pass
-            if version <= 0 or not os.path.exists(
-                os.path.join(meta_dir, f"v{version}.metadata.json")
-            ):
-                import re as _re
-
-                version = max(
-                    (
-                        int(m.group(1))
-                        for fn in os.listdir(meta_dir)
-                        if (m := _re.match(r"^v(\d+)\.metadata\.json$", fn))
-                    ),
-                    default=0,
-                )
-            while os.path.exists(
-                os.path.join(meta_dir, f"v{version + 1}.metadata.json")
-            ):
-                version += 1
-        with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as f:
-            meta = json.load(f)
-        # transaction resolution (lake/txn.py protocol, replicated
-        # stdlib-only for cloudpickle): a pending head is visible ONLY
-        # when its final decision file says committed; otherwise fall
-        # back along base_version — the stream must never emit staged
-        # rows of an in-flight or aborted multi-table transaction.
-        while meta.get("pending_txn"):
-            state = None
-            try:
-                with open(meta["pending_txn"]["final_path"]) as fh:
-                    state = fh.read().strip()
-            except OSError:
-                state = None
-            if state == "committed":
-                break
-            with open(
-                os.path.join(
-                    meta_dir, f"v{meta['base_version']}.metadata.json"
-                )
-            ) as fh:
-                meta = json.load(fh)
-        return meta
 
     class LakeStreamReader(DataSourceStreamReader):
         def __init__(self, options):
@@ -141,7 +80,7 @@ def _make_source():
             return {"snapshot_id": self.start_id}
 
         def latestOffset(self):
-            meta = load_meta(self.table_dir)
+            meta = load_current(self.table_dir)
             head = meta.get("current_snapshot_id") or 0
             if self.max_per_trigger > 0 and self._planned_end is not None:
                 head = min(head, self._planned_end + self.max_per_trigger)
@@ -149,7 +88,7 @@ def _make_source():
 
         def partitions(self, start, end):
             self._planned_end = end["snapshot_id"]
-            meta = load_meta(self.table_dir)
+            meta = load_current(self.table_dir)
             lo, hi = start["snapshot_id"], end["snapshot_id"]
             mapping = meta.get("column_mapping") or {
                 f["name"]: f["name"] for f in meta["schema"]["fields"]
@@ -228,7 +167,7 @@ def _make_source():
         def schema(self):
             from pyspark.sql.types import StructType
 
-            return StructType.fromJson(load_meta(self.options["table_dir"])["schema"])
+            return StructType.fromJson(load_current(self.options["table_dir"])["schema"])
 
         def streamReader(self, schema):
             return LakeStreamReader(self.options)
@@ -263,69 +202,6 @@ def _make_cdc_source():
         InputPartition,
     )
 
-    def load_meta(table_dir: str) -> dict:
-        # Self-contained (cloudpickle ships it to workers without this
-        # package): understands both commit-IO layouts — the POSIX
-        # pointer file and the object-store advisory hint + probe with
-        # a LIST fallback (commitio.py protocol).
-        meta_dir = os.path.join(table_dir, "metadata")
-        try:
-            # POSIX layout: the pointer is AUTHORITATIVE — never probe
-            # past it (a crashed commit can leave an orphan vN+1 file
-            # that was never published).
-            with open(os.path.join(meta_dir, "version-pointer.txt")) as f:
-                version = int(f.read().strip())
-        except (OSError, ValueError):
-            # Object-store layout: every vN file IS committed (created
-            # by the CAS), so advisory hint + probe forward, with a
-            # LIST fallback when the hint is absent/corrupt.
-            version = 0
-            try:
-                with open(os.path.join(meta_dir, "version-hint.text")) as f:
-                    version = int(f.read().strip())
-            except (OSError, ValueError):
-                pass
-            if version <= 0 or not os.path.exists(
-                os.path.join(meta_dir, f"v{version}.metadata.json")
-            ):
-                import re as _re
-
-                version = max(
-                    (
-                        int(m.group(1))
-                        for fn in os.listdir(meta_dir)
-                        if (m := _re.match(r"^v(\d+)\.metadata\.json$", fn))
-                    ),
-                    default=0,
-                )
-            while os.path.exists(
-                os.path.join(meta_dir, f"v{version + 1}.metadata.json")
-            ):
-                version += 1
-        with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as f:
-            meta = json.load(f)
-        # transaction resolution (lake/txn.py protocol, replicated
-        # stdlib-only for cloudpickle): a pending head is visible ONLY
-        # when its final decision file says committed; otherwise fall
-        # back along base_version — the stream must never emit staged
-        # rows of an in-flight or aborted multi-table transaction.
-        while meta.get("pending_txn"):
-            state = None
-            try:
-                with open(meta["pending_txn"]["final_path"]) as fh:
-                    state = fh.read().strip()
-            except OSError:
-                state = None
-            if state == "committed":
-                break
-            with open(
-                os.path.join(
-                    meta_dir, f"v{meta['base_version']}.metadata.json"
-                )
-            ) as fh:
-                meta = json.load(fh)
-        return meta
-
     def parse_path_values(path: str) -> dict:
         from urllib.parse import unquote
 
@@ -357,7 +233,7 @@ def _make_cdc_source():
             return {"snapshot_id": self.start_id}
 
         def latestOffset(self):
-            meta = load_meta(self.table_dir)
+            meta = load_current(self.table_dir)
             head = meta.get("current_snapshot_id") or 0
             if self.max_per_trigger > 0 and self._planned_end is not None:
                 head = min(head, self._planned_end + self.max_per_trigger)
@@ -380,7 +256,7 @@ def _make_cdc_source():
             import pyarrow.parquet as pq
 
             # lifted once, so an older table derives its facts once
-            meta = lift(load_meta(self.table_dir))
+            meta = lift(load_current(self.table_dir))
             lo, hi = start["snapshot_id"], end["snapshot_id"]
             meta_dir = os.path.join(self.table_dir, "metadata")
             mapping = meta.get("column_mapping") or {
@@ -629,7 +505,7 @@ def _make_cdc_source():
             )
 
             base = StructType.fromJson(
-                load_meta(self.options["table_dir"])["schema"]
+                load_current(self.options["table_dir"])["schema"]
             )
             return StructType(
                 base.fields
@@ -721,59 +597,6 @@ def _make_batch_source():
         InputPartition,
     )
 
-    def load_meta(table_dir: str) -> dict:
-        meta_dir = os.path.join(table_dir, "metadata")
-        try:
-            with open(os.path.join(meta_dir, "version-pointer.txt")) as f:
-                version = int(f.read().strip())
-        except (OSError, ValueError):
-            version = 0
-            try:
-                with open(os.path.join(meta_dir, "version-hint.text")) as f:
-                    version = int(f.read().strip())
-            except (OSError, ValueError):
-                pass
-            if version <= 0 or not os.path.exists(
-                os.path.join(meta_dir, f"v{version}.metadata.json")
-            ):
-                import re as _re
-
-                version = max(
-                    (
-                        int(m.group(1))
-                        for fn in os.listdir(meta_dir)
-                        if (m := _re.match(r"^v(\d+)\.metadata\.json$", fn))
-                    ),
-                    default=0,
-                )
-            while os.path.exists(
-                os.path.join(meta_dir, f"v{version + 1}.metadata.json")
-            ):
-                version += 1
-        with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as f:
-            meta = json.load(f)
-        # transaction resolution (lake/txn.py protocol, replicated
-        # stdlib-only for cloudpickle): a pending head is visible ONLY
-        # when its final decision file says committed; otherwise fall
-        # back along base_version — the stream must never emit staged
-        # rows of an in-flight or aborted multi-table transaction.
-        while meta.get("pending_txn"):
-            state = None
-            try:
-                with open(meta["pending_txn"]["final_path"]) as fh:
-                    state = fh.read().strip()
-            except OSError:
-                state = None
-            if state == "committed":
-                break
-            with open(
-                os.path.join(
-                    meta_dir, f"v{meta['base_version']}.metadata.json"
-                )
-            ) as fh:
-                meta = json.load(fh)
-        return meta
-
     def _parse_path_values(path: str) -> dict:
         from urllib.parse import unquote
 
@@ -794,7 +617,7 @@ def _make_batch_source():
         def partitions(self):
             import pyarrow.parquet as pq
 
-            meta = load_meta(self.table_dir)
+            meta = load_current(self.table_dir)
             snaps = meta["snapshots"]
             if self.snapshot_id is not None:
                 snap = next(
@@ -877,7 +700,7 @@ def _make_batch_source():
             from pyspark.sql.types import StructType
 
             return StructType.fromJson(
-                load_meta(self.options["table_dir"])["schema"]
+                load_current(self.options["table_dir"])["schema"]
             )
 
         def reader(self, schema):
@@ -1054,13 +877,10 @@ def _make_batch_writer_source():
         def schema(self):
             from pyspark.sql.types import StructType
 
-            meta_dir = os.path.join(self.options["table_dir"], "metadata")
             # best-effort (writer validates on commit)
-            for fn in sorted(os.listdir(meta_dir), reverse=True):
-                if fn.startswith("v") and fn.endswith(".metadata.json"):
-                    with open(os.path.join(meta_dir, fn)) as f:
-                        return StructType.fromJson(json.load(f)["schema"])
-            raise FileNotFoundError(meta_dir)
+            return StructType.fromJson(
+                load_current(self.options["table_dir"])["schema"]
+            )
 
         def writer(self, schema, overwrite):
             # fail at plan time, not after executors wrote files

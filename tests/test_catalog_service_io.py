@@ -20,6 +20,7 @@ from icebergplus_spark.lake import (
     MetricsReporter,
     MetricsSink,
 )
+from icebergplus_spark.lake import versions
 from icebergplus_spark.lake.commitio import ConcurrentCommitError
 
 SCHEMA = StructType(
@@ -200,10 +201,10 @@ def test_stale_loser_never_clobbers_committed_file(spark, tmp_path):
     t1.append(spark.createDataFrame([(2, "b")], SCHEMA))
     committed = t1._meta["_phys_version"]
     path = os.path.join(t1._meta_dir, f"v{committed}.metadata.json")
-    before = open(path).read()
+    before = open(path, "rb").read()
     with pytest.raises(ConcurrentCommitError):
         t2.io.publish(t2._meta_dir, t2._meta["_phys_version"] + 1, "{}")
-    assert open(path).read() == before  # untouched
+    assert open(path, "rb").read() == before  # untouched
 
 
 def test_busy_database_surfaces_as_concurrent_commit_error(spark, tmp_path):
@@ -261,14 +262,15 @@ def test_readers_never_open_a_half_written_metadata_file(tmp_path):
     io = CatalogServiceCommitIO()
     payload = json.dumps({"pad": "x" * (1 << 20)})
     io.publish(meta_dir, 1, payload)
+    whole = versions.encode(payload)  # the bytes every version must read as
     stop, torn = threading.Event(), []
 
     def reader():
         while not stop.is_set():
             v = io.current_version(meta_dir)
-            with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as f:
+            with open(versions.path(meta_dir, v), "rb") as f:
                 text = f.read()
-            if text != payload:
+            if text != whole:
                 torn.append((v, len(text)))
 
     threads = [threading.Thread(target=reader) for _ in range(4)]

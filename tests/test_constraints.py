@@ -167,3 +167,38 @@ def test_validate_reports_without_writing(spark, sf_dir, tmp_path):
     assert t.current_snapshot_id is None  # nothing written
     # a clean batch reports empty
     assert t.validate(nation.filter(F.col("n_nationkey") < 5)) == {}
+
+
+def test_small_merge_into_constrained_table_runs_no_job(spark, tmp_path):
+    """The constraint probe over a small MERGE's local rows is one
+    filter + limit(1), which Spark answers from the local relation: a
+    2-row upsert into a 2,500-row table with ``q >= 0`` runs no Spark
+    job (an aggregate pass ran two), and a violating upsert is still
+    refused."""
+    from icebergplus_spark.lake.sql_dml import lake_sql
+    from icebergplus_spark.localrel import local_rows_df
+
+    cat = LocalLakeCatalog(spark, str(tmp_path / "wh")).start()
+    ddl = "k long, q long"
+    t = cat.create_table("db.m", local_rows_df(spark, [], ddl).schema)
+    t.append(local_rows_df(spark, [(k, k % 7) for k in range(2500)], ddl))
+    t.add_constraint("q_nonneg", "q >= 0")
+
+    def upsert(q):
+        lake_sql(cat, (
+            "MERGE INTO db.m t USING (SELECT CAST(k AS BIGINT) AS k, "
+            f"CAST(q AS BIGINT) AS q FROM VALUES (10, {q}), (5000, 1) AS v(k, q)) s "
+            "ON t.k = s.k WHEN MATCHED THEN UPDATE SET q = s.q "
+            "WHEN NOT MATCHED THEN INSERT *"
+        ))
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    upsert(3)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    t = cat.load_table("db.m")
+    assert sorted(tuple(r) for r in t.scan().filter("k IN (10, 5000)").collect()) == [
+        (10, 3), (5000, 1)]
+    with pytest.raises(ConstraintViolation, match="q_nonneg"):
+        upsert(-1)
+    assert cat.load_table("db.m").scan().count() == 2501

@@ -267,3 +267,56 @@ def test_mixed_hash_domain_declines_fold(spark, tmp_path, monkeypatch):
     t2.append(spark.createDataFrame(rows[:500], T).coalesce(1))
     t2.append(spark.createDataFrame(rows[500:], T).coalesce(1))
     assert t2.hll_count_distinct("u") is not None
+
+
+def _loop_merge(sketches):
+    """The register-by-register merge the numpy one replaced."""
+    out = bytearray(sketches[0])
+    for s in sketches[1:]:
+        for i, r in enumerate(s):
+            if r > out[i]:
+                out[i] = r
+    return bytes(out)
+
+
+def _loop_estimate(regs, p):
+    """The register-by-register estimator the numpy one replaced."""
+    import math
+
+    m = 1 << p
+    alpha = 0.7213 / (1 + 1.079 / m)
+    s = 0.0
+    zeros = 0
+    for r in regs:
+        s += 2.0 ** -r
+        if r == 0:
+            zeros += 1
+    e = alpha * m * m / s
+    if e <= 2.5 * m and zeros:
+        e = m * math.log(m / zeros)
+    return int(round(e))
+
+
+@pytest.mark.parametrize("p", [11, 14])
+def test_numpy_merge_and_estimate_equal_the_loops(p):
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    m = 1 << p
+    empty = bytes(m)
+    # geometric register values as real sketches hold, plus extremes
+    rand = [
+        np.minimum(rng.geometric(0.5, m) - 1, 64 - p + 1).astype(np.uint8).tobytes()
+        for _ in range(20)
+    ]
+    sparse = [
+        np.where(rng.random(m) < 0.01, rng.integers(1, 60, m), 0).astype(np.uint8).tobytes()
+        for _ in range(5)
+    ]
+    top = bytes([64 - p + 1]) * m
+    for group in ([empty], [rand[0]], [top], rand, sparse, [empty] + sparse, sparse + rand):
+        merged = _hll_merge(group)
+        assert merged == _loop_merge(group)
+        assert _hll_estimate(merged, p) == _loop_estimate(merged, p)
+    for regs in [empty, top, *rand, *sparse]:
+        assert _hll_estimate(regs, p) == _loop_estimate(regs, p)

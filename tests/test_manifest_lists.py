@@ -18,7 +18,7 @@ from icebergplus_spark.lake import (
     remove_orphan_files,
     rewrite_manifests,
 )
-from icebergplus_spark.lake import manifest_list
+from icebergplus_spark.lake import manifest_list, versions
 from icebergplus_spark.lake.manifest_list import (
     is_list_file,
     snapshot_lists,
@@ -46,7 +46,8 @@ def _keys(t):
 
 
 def _version_bytes(t, v):
-    return os.path.getsize(os.path.join(t._meta_dir, f"v{v}.metadata.json"))
+    """Bytes of version ``v``'s JSON text (the file holds it gzipped)."""
+    return len(json.dumps(versions.read(t._meta_dir, v), separators=(",", ":")))
 
 
 def _list_files(t):
@@ -103,11 +104,11 @@ def test_no_version_holds_manifest_names(spark, catalog):
     t.set_property("x", "y")
     expire_snapshots(t, keep_last=2)
     assert _keys(t) == [0, 1, 3, 4, 6, 7]
-    versions = glob.glob(os.path.join(t._meta_dir, "v*.metadata.json"))
-    assert len(versions) >= 8
-    for path in versions:
-        with open(path) as f:
-            text = f.read()
+    paths = glob.glob(os.path.join(t._meta_dir, "v*.metadata.json"))
+    assert len(paths) >= 8
+    for path in paths:
+        with open(path, "rb") as f:
+            text = json.dumps(versions.decode(f.read()))
         assert "manifest-" not in text, path
         for s in json.loads(text)["snapshots"]:
             assert not {"manifests", "delete_manifests", "added_files"} & set(s)

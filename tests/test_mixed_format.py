@@ -15,6 +15,7 @@ import os
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from icebergplus_spark.lake import versions
 from icebergplus_spark.lake import (
     LocalLakeCatalog,
     cherry_pick,
@@ -46,9 +47,8 @@ def _keys(df):
 def _inline(t, snapshot_ids):
     """Rewrite the head version so ``snapshot_ids`` carry inline lists,
     and delete their list files."""
-    path = os.path.join(t._meta_dir, f"v{t._meta['_phys_version']}.metadata.json")
-    with open(path) as f:
-        meta = json.load(f)
+    path = versions.path(t._meta_dir, t._meta["_phys_version"])
+    meta = versions.read(t._meta_dir, t._meta["_phys_version"])
     for s in meta["snapshots"]:
         if s["snapshot_id"] in snapshot_ids:
             name = s.pop("manifest_list")
@@ -233,9 +233,8 @@ def _downgrade(t, with_map):
         table = pq.read_table(path)
         pq.write_table(table.drop_columns(list(FACT_COLUMNS)), path)
     manifest_list._manifest_facts.cache_clear()
-    path = os.path.join(t._meta_dir, f"v{t._meta['_phys_version']}.metadata.json")
-    with open(path) as f:
-        meta = json.load(f)
+    path = versions.path(t._meta_dir, t._meta["_phys_version"])
+    meta = versions.read(t._meta_dir, t._meta["_phys_version"])
     del meta["format_version"]
     retained = {s["snapshot_id"] for s in meta["snapshots"]}
     if with_map:
@@ -296,8 +295,7 @@ def legacy(request, spark, tmp_path):
         expire_snapshots(t, keep_last=1)
         expected = {s["snapshot_id"]: _ids(t, s["snapshot_id"]) for s in t.history()}
         _downgrade(t, with_map=True)
-        with open(os.path.join(t._meta_dir, f"v{t._meta['_phys_version']}.metadata.json")) as f:
-            raw = json.load(f)
+        raw = versions.read(t._meta_dir, t._meta["_phys_version"])
         assert raw["materialized_lineage_files"] and raw["row_id_assignments"]
     else:
         t.delete({"k": ("=", 1)})
@@ -310,12 +308,7 @@ def legacy(request, spark, tmp_path):
 
 
 def _versions_json(t):
-    out = {}
-    for fn in os.listdir(t._meta_dir):
-        if fn.startswith("v") and fn.endswith(".metadata.json"):
-            with open(os.path.join(t._meta_dir, fn)) as f:
-                out[int(fn[1:].split(".")[0])] = json.load(f)
-    return out
+    return {v: versions.read(t._meta_dir, v) for v in versions.list_versions(t._meta_dir)}
 
 
 def test_upgrade_keeps_lineage_ids(spark, legacy):

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from icebergplus_spark.lake import LocalLakeCatalog
+from icebergplus_spark.lake.versions import decode
 
 SCHEMA = StructType(
     [StructField("k", IntegerType(), True), StructField("v", StringType(), True)]
@@ -67,7 +68,6 @@ def test_overwrite_publishes_one_version(spark, table):
     ``vN.metadata.json``, no published version's head holds old and new
     rows together, and the pre-overwrite snapshot still reads the old
     rows."""
-    import json
     import os
 
     def versions():
@@ -81,8 +81,8 @@ def test_overwrite_publishes_one_version(spark, table):
     added = versions() - before
     assert len(added) == 1
     (name,) = added
-    with open(os.path.join(table._meta_dir, name)) as f:
-        head = json.load(f)["current_snapshot_id"]
+    with open(os.path.join(table._meta_dir, name), "rb") as f:
+        head = decode(f.read())["current_snapshot_id"]
     assert head == table.current_snapshot_id
     assert [tuple(r) for r in table.scan(snapshot_id=head).collect()] == [(42, "new")]
     assert sorted(r["k"] for r in table.scan(snapshot_id=pre).collect()) == list(
