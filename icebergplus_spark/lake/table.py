@@ -987,13 +987,11 @@ class LakeTable:
         state. ``_version`` is the LOGICAL (resolved) version readers
         and snapshot state come from; ``_phys_version`` is the physical
         head on disk that the next publish must CAS against."""
-        from icebergplus_spark.lake.txn import final_state
-
         phys = self.io.current_version(self._meta_dir)
         # our own staged state stays visible to us; an in-flight write
         # intent at the head comes back as head_txn
         version, meta, head_txn = versions.resolve(
-            self._meta_dir, phys, final_state, getattr(self, "_own_txn", None)
+            self._meta_dir, phys, getattr(self, "_own_txn", None)
         )
         self._meta = upgrade.lift(meta)
         self._meta["_version"] = version
@@ -7114,19 +7112,10 @@ class LakeTable:
                 meta_pairs.append(tuple(vals))
         rows = self._fold_on_driver(columns, plan_aggs, branches, meta_pairs, boundary)
         if rows is not None:
-            at = {a: i for i, (_fn, _c, a) in enumerate(plan_aggs, len(columns))}
-            out = []
-            for r in rows:
-                vals = list(r[: len(columns)])
-                for fn, _c, a in aggs:
-                    if fn.upper() == "AVG":
-                        # divided once, after the merge, as ``finals``
-                        s_, c_ = r[at[f"__{a}_s"]], r[at[f"__{a}_c"]]
-                        vals.append(None if s_ is None or not c_ else float(s_) / float(c_))
-                    else:
-                        vals.append(r[at[a]])
-                out.append(tuple(vals))
-            return local_rows_df(self.spark, out, final_schema)
+            # a projection over a local relation runs no job
+            return local_rows_df(self.spark, rows, out_schema).select(
+                *columns, *finals
+            )
         meta_df = local_rows_df(self.spark, meta_pairs, out_schema)
         if boundary:
             bdf = self._read_live(
@@ -7203,6 +7192,12 @@ class LakeTable:
         want = list(to_arrow_schema(StructType(
             [_T.StructField(mapping[c], types[c]) for c in needed]
         )))
+        # one schema for every file: positional names (no group key can
+        # collide with an output) and nullable fields, since writers
+        # differ in the nullability they record
+        pos_schema = pa.schema(
+            [pa.field(f"c{i}", f.type) for i, f in enumerate(want)]
+        )
         tables = []
         for r in boundary:
             p = r["file_path"]
@@ -7212,8 +7207,9 @@ class LakeTable:
                 if not _has_fields(pf.schema_arrow, want):
                     return None
                 t = pf.read(columns=[f.name for f in want])
-            # positional names: no group key can collide with an output
-            tables.append(t.rename_columns([f"c{i}" for i in range(len(needed))]))
+            tables.append(pa.Table.from_arrays(
+                [t.column(f.name) for f in want], schema=pos_schema
+            ))
         pos = {c: f"c{i}" for i, c in enumerate(needed)}
         partials: list[tuple] = list(meta_pairs)
         if tables:

@@ -69,30 +69,12 @@ import uuid
 from typing import Any
 
 from icebergplus_spark.lake.commitio import ConcurrentCommitError
-
-# Terminal transaction states are immutable once written, so caching is
-# sound: one filesystem stat per (process, transaction), ever.
-_FINAL_CACHE: dict[str, str] = {}
+from icebergplus_spark.lake.versions import _FINAL_CACHE, final_state
 
 
 class TransactionAborted(RuntimeError):
     """The transaction lost its publish CAS (recovery or a lease
     takeover aborted it) — none of its writes are visible."""
-
-
-def final_state(final_path: str) -> str | None:
-    """'committed' | 'aborted' | None (in-flight). Cached when terminal."""
-    hit = _FINAL_CACHE.get(final_path)
-    if hit is not None:
-        return hit
-    try:
-        with open(final_path) as f:
-            state = f.read().strip()
-    except OSError:
-        return None
-    if state in ("committed", "aborted"):
-        _FINAL_CACHE[final_path] = state
-    return state
 
 
 def _decide(final_path: str, verdict: str) -> str:

@@ -15,7 +15,7 @@ Every writer and reader of a table version goes through this module:
   the POSIX pointer if there is one, else the object-store hint, a probe
   forward, and a LIST fallback (``commitio.py`` protocol).
 - ``resolve`` walks a head's ``pending_txn`` chain (``txn.py`` protocol)
-  to the version readers see.
+  to the version readers see, deciding each marker by ``final_state``.
 
 Stdlib only: the stream sources import it on Spark's Python workers.
 """
@@ -26,7 +26,7 @@ import gzip
 import json
 import os
 import re
-from typing import Any, Callable
+from typing import Any
 
 _NAME_RE = re.compile(r"^v(\d+)\.metadata\.json$")
 _GZIP_MAGIC = b"\x1f\x8b"
@@ -114,24 +114,34 @@ def current(meta_dir: str) -> int:
     return v
 
 
-def _file_state(final_path: str) -> str | None:
+# Terminal transaction states are immutable once written, so caching is
+# sound: one filesystem stat per (process, transaction), ever.
+_FINAL_CACHE: dict[str, str] = {}
+
+
+def final_state(final_path: str) -> str | None:
+    """A transaction's decision: 'committed' | 'aborted' | None
+    (in-flight). Cached when terminal."""
+    hit = _FINAL_CACHE.get(final_path)
+    if hit is not None:
+        return hit
     try:
         with open(final_path) as f:
-            return f.read().strip()
+            state = f.read().strip()
     except OSError:
         return None
+    if state in ("committed", "aborted"):
+        _FINAL_CACHE[final_path] = state
+    return state
 
 
 def resolve(
-    meta_dir: str,
-    version: int,
-    state_of: Callable[[str], "str | None"] = _file_state,
-    own_txn: str | None = None,
+    meta_dir: str, version: int, own_txn: str | None = None
 ) -> tuple[int, dict[str, Any], dict[str, Any] | None]:
     """``(version, meta, head_txn)`` that readers of head ``version``
     see. A version carrying a ``pending_txn`` marker was staged by a
     multi-table transaction: it is visible when the transaction's final
-    file (``state_of``) says committed, or when it is ``own_txn``'s;
+    file (``final_state``) says committed, or when it is ``own_txn``'s;
     otherwise the walk falls back along ``base_version``. ``head_txn``
     is the head's marker when its transaction is still in flight (no
     final file), else None."""
@@ -142,7 +152,7 @@ def resolve(
         pending = meta.get("pending_txn")
         if not pending or pending["id"] == own_txn:
             break
-        state = state_of(pending["final_path"])
+        state = final_state(pending["final_path"])
         if state == "committed":
             break
         if state is None and head_txn is None and version == phys:

@@ -288,3 +288,27 @@ def test_sum_outside_int64_declines(spark, cat, finishes):
     t = cat.load_table("db.big")
     t.agg_by([], [("SUM", "x", "s")], [{"k": (">", 0)}]).collect()
     assert finishes == [False]
+
+
+def test_boundary_files_of_mixed_nullability(spark, cat, finishes):
+    """INSERT VALUES without NULLs writes REQUIRED columns, with a NULL
+    OPTIONAL ones; one boundary may hold both kinds of file."""
+    import pyarrow.parquet as pq
+
+    _create(spark, cat, "db.nn", "k int, v string")
+    lake_sql(cat, "INSERT INTO db.nn VALUES (1, 'a'), (2, 'b'), (3, 'a')")
+    lake_sql(cat, "INSERT INTO db.nn VALUES (4, 'c'), (5, NULL), (6, 'a')")
+    t = cat.load_table("db.nn")
+    files = [r["file_path"] for r in t.plan_files()]
+    kinds = {tuple(f.nullable for f in pq.read_schema(p)) for p in files}
+    assert len(kinds) == 2
+    for columns in (["v"], []):
+        got = sorted(map(tuple, t.agg_by(
+            columns, [("COUNT", None, "n"), ("MAX", "k", "hi")], [{"k": (">", 1)}]
+        ).collect()), key=repr)
+        assert got == _spark_ref(
+            t, columns, [("COUNT", None, "n"), ("MAX", "k", "hi")], [{"k": (">", 1)}]
+        )
+        got = sorted(map(tuple, t.count_rows_by(columns or ["v"]).collect()), key=repr)
+        assert got == _spark_ref(t, columns or ["v"], [("COUNT", None, "cnt")], None)
+    assert finishes and all(finishes)
