@@ -25,7 +25,7 @@ import pyarrow.parquet as pq
 
 import pyspark.sql.functions as F
 
-from icebergplus_spark.lake import upgrade, versions
+from icebergplus_spark.lake import manifests as mfiles, upgrade, versions
 from icebergplus_spark.lake.manifest_list import is_list_file
 from icebergplus_spark.lake.table import LakeTable
 
@@ -381,11 +381,11 @@ def cherry_pick(table: LakeTable, snapshot_id: int) -> dict:
     parent_paths = table._snapshot_paths(
         table.snapshot(parent_id) if parent_id is not None else None
     )
-    added = []
-    for m in table._lists(snap).manifests:
-        for e in pq.read_table(os.path.join(table._meta_dir, m)).to_pylist():
-            if e["file_path"] not in parent_paths:
-                added.append(e)
+    added = mfiles.entries(
+        table._meta_dir,
+        table._lists(snap).manifests,
+        lambda e: e["file_path"] not in parent_paths,
+    )
     current = table.snapshot()
     current_paths = table._snapshot_paths(current)
     dup = sorted(
@@ -456,14 +456,10 @@ def _snapshot_refs(table: LakeTable, snapshots) -> tuple[set, set]:
 
 
 def _manifest_file_paths(table: LakeTable, manifests) -> set:
-    """Data/delete file paths the given manifests list: one read per
-    manifest, of its ``file_path`` column only (the stats columns, HLL
-    sketches above all, are most of a manifest's decoded size)."""
-    out: set[str] = set()
-    for m in manifests:
-        t = pq.read_table(os.path.join(table._meta_dir, m), columns=["file_path"])
-        out.update(t.column("file_path").to_pylist())
-    return out
+    """Data/delete file paths the given manifests list: an uncached
+    manifest has its ``file_path`` column read only (the stats columns,
+    HLL sketches above all, are most of a manifest's decoded size)."""
+    return set(mfiles.file_paths(table._meta_dir, manifests))
 
 
 def remove_orphan_files(
@@ -602,11 +598,7 @@ def rewrite_manifests(
     snap = table.snapshot()
     if snap is None:
         return {"manifests_before": 0, "manifests_after": 0, "entries": 0}
-    entries: list[dict] = []
-    for m in table._lists(snap).manifests:
-        entries.extend(
-            pq.read_table(os.path.join(table._meta_dir, m)).to_pylist()
-        )
+    entries = mfiles.entries(table._meta_dir, table._lists(snap).manifests)
     entries.sort(key=lambda e: e["file_path"])
     chunks = [
         entries[i : i + target_entries_per_manifest]
@@ -669,7 +661,7 @@ def rewrite_deletion_vectors(table: LakeTable) -> dict:
 
     new_manifests: list[str] = []
     for m in table._lists(snap).delete_manifests:
-        rows = pq.read_table(os.path.join(table._meta_dir, m)).to_pylist()
+        rows = mfiles.entries(table._meta_dir, [m])
         non_dv = [r for r in rows if r["content"] != "dv"]
         if len(non_dv) == len(rows):
             new_manifests.append(m)  # untouched manifest carries over

@@ -22,18 +22,20 @@ Two walks over snapshots live here too, shared by the table and the
 stream sources: ``lineage`` (a snapshot's parent chain) and
 ``added_files`` (what the commits on it added). ``file_facts`` is the
 one accessor for each data file's row-lineage facts, which manifest
-entries carry (upgrade.py lifts tables from before they did).
+entries carry (upgrade.py lifts tables from before they did), read
+through ``manifests.py``.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import threading
 import uuid
 from collections import OrderedDict
 from typing import Any, NamedTuple
+
+from icebergplus_spark.lake import manifests as mfiles
 
 LIST_PREFIX = "snap-"
 LIST_SUFFIX = ".json"
@@ -155,8 +157,6 @@ def added_files(
     A snapshot's recorded added files are authoritative; for snapshots
     from before commits recorded them, a manifest is new where no
     earlier snapshot of the lineage names it."""
-    import pyarrow.parquet as pq
-
     seen: set[str] = set()
     out: dict[str, int] = {}
     for s in lineage(snapshots, to_id):
@@ -173,40 +173,11 @@ def added_files(
                 continue
             seen.add(m)
             if wanted:
-                t = pq.read_table(os.path.join(meta_dir, m), columns=["file_path"])
-                out.update((p, sid) for p in t.column("file_path").to_pylist())
+                out.update((p, sid) for p in mfiles.file_paths(meta_dir, [m]))
     return out
 
 
 # -- per-file facts ----------------------------------------------------------
-# manifest entry columns a commit assigns (upgrade.py: format version 2)
-FACT_COLUMNS = ("first_row_id", "added_snapshot_id", "lineage_materialized")
-
-
-# a manifest's facts are O(its entries), unlike a list file: fewer slots
-@functools.lru_cache(maxsize=256)
-def _manifest_facts(path: str) -> dict[str, tuple | None]:
-    """{file path → (first_row_id, added_snapshot_id,
-    lineage_materialized)} of one manifest; None for an entry without
-    them (a manifest from before format version 2). Manifests never
-    change, so the answer is cached by path; callers must not mutate
-    it."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    have = [c for c in FACT_COLUMNS if c in pf.schema_arrow.names]
-    t = pf.read(columns=["file_path", *have])
-    paths = t.column("file_path").to_pylist()
-    if len(have) < len(FACT_COLUMNS):
-        out = dict.fromkeys(paths)
-    else:
-        firsts, births, mats = (t.column(c).to_pylist() for c in FACT_COLUMNS)
-        out = {
-            p: None if first is None else (first, birth, bool(mat))
-            for p, first, birth, mat in zip(paths, firsts, births, mats)
-        }
-    return out
-
 
 def file_facts(
     meta_dir: str, meta: dict[str, Any], snap: dict[str, Any] | None
@@ -224,7 +195,7 @@ def file_facts(
     legacy = None
     manifests = snapshot_lists(meta_dir, snap).manifests
     for m in manifests:
-        for p, fact in _manifest_facts(os.path.join(meta_dir, m)).items():
+        for p, fact in mfiles.facts(os.path.join(meta_dir, m)).items():
             if fact is None:
                 if legacy is None:
                     legacy = upgrade.legacy_facts(meta_dir, meta)

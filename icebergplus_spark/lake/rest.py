@@ -51,7 +51,7 @@ import urllib.parse
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from icebergplus_spark.lake import versions
+from icebergplus_spark.lake import manifests as mfiles, versions
 from icebergplus_spark.lake.catalog import LocalLakeCatalog, Status
 from icebergplus_spark.lake.commitio import (
     CatalogServiceCommitIO,
@@ -436,8 +436,6 @@ class LakeRestServer:
                 # the current one (weak consistency, stated).
                 import base64
 
-                import pyarrow.parquet as _pq
-
                 size_raw = query.get("pageSize", [None])[0]
                 token_raw = query.get("pageToken", [None])[0]
                 paged = size_raw is not None or token_raw is not None
@@ -469,8 +467,7 @@ class LakeRestServer:
                 manifests = t._lists(snap).manifests
                 page, pos, more = [], 0, False
                 for mf in manifests:
-                    path = os.path.join(t._meta_dir, mf)
-                    n = _pq.read_metadata(path).num_rows
+                    n = mfiles.count(t._meta_dir, [mf])
                     if len(page) >= size:
                         if n > 0:  # an empty manifest isn't "more"
                             more = True
@@ -479,7 +476,7 @@ class LakeRestServer:
                     if pos + n <= start:
                         pos += n
                         continue
-                    chunk = _pq.read_table(path).to_pylist()
+                    chunk = mfiles.entries(t._meta_dir, [mf])
                     skip = max(0, start - pos)
                     take = chunk[skip:skip + (size - len(page))]
                     page.extend(take)
@@ -504,8 +501,6 @@ class LakeRestServer:
                 # pinned version restarts from current (weak
                 # consistency, same stance as `files`).
                 import base64
-
-                import pyarrow.parquet as _pq
 
                 size_raw = query.get("pageSize", [None])[0]
                 token_raw = query.get("pageToken", [None])[0]
@@ -548,8 +543,7 @@ class LakeRestServer:
                         pairs.append((s_["snapshot_id"], m))
                 page, pos, more = [], 0, False
                 for sid, mf in pairs:
-                    path = os.path.join(t._meta_dir, mf)
-                    n = _pq.read_metadata(path).num_rows
+                    n = mfiles.count(t._meta_dir, [mf])
                     if len(page) >= size:
                         if n > 0:
                             more = True
@@ -558,21 +552,16 @@ class LakeRestServer:
                     if pos + n <= start:
                         pos += n
                         continue
-                    chunk = _pq.read_table(
-                        path,
-                        columns=[
-                            "file_path",
-                            "record_count",
-                            "file_size_bytes",
-                        ],
-                    ).to_pylist()
+                    chunk = mfiles.entries(t._meta_dir, [mf])
                     skip = max(0, start - pos)
                     take = chunk[skip:skip + (size - len(page))]
                     page.extend(
                         {
                             "status": 1 if born[mf] == sid else 0,
                             "snapshot_id": sid,
-                            **e,
+                            "file_path": e["file_path"],
+                            "record_count": e["record_count"],
+                            "file_size_bytes": e["file_size_bytes"],
                         }
                         for e in take
                     )
@@ -599,8 +588,6 @@ class LakeRestServer:
                 # deduped by path in (sorted distinct manifest, entry)
                 # order — positional pages over the computed list
                 # (weak consistency under concurrent commits, stated)
-                import pyarrow.parquet as _pq
-
                 mkey = (
                     "manifests" if kind == "all_files" else "delete_manifests"
                 )
@@ -614,9 +601,7 @@ class LakeRestServer:
                 seen: set[str] = set()
                 rows = []
                 for mf in all_m:
-                    for e in _pq.read_table(
-                        os.path.join(t._meta_dir, mf)
-                    ).to_pylist():
+                    for e in mfiles.entries(t._meta_dir, [mf]):
                         if e["file_path"] in seen:
                             continue
                         seen.add(e["file_path"])

@@ -53,10 +53,9 @@ from icebergplus_spark.lake.commitio import (  # noqa: F401 — re-export
     ConcurrentCommitError,
     RenameCommitIO,
 )
-from icebergplus_spark.lake import upgrade, versions
+from icebergplus_spark.lake import manifests as mfiles, upgrade, versions
 from icebergplus_spark.lake.manifest_list import (
     SnapshotLists,
-    FACT_COLUMNS,
     added_files,
     file_facts,
     lineage,
@@ -1161,8 +1160,8 @@ class LakeTable:
         puts NULL in a required (nullable=False) column — Iceberg
         enforces required fields on write, and the schema declares them,
         so the write path honors them as implicit constraints. One
-        filter + limit(1) over the batch for all of them — O(batch),
-        early-exit, never O(table)."""
+        probe over the batch for all of them — O(batch), never
+        O(table)."""
         import functools
 
         from pyspark.sql import functions as _F
@@ -1175,16 +1174,23 @@ class LakeTable:
                 )
         if not checks:
             return
-        # ONE probe over the batch for ALL checks: any violating row,
-        # limit 1. Over a local relation (small MERGE/INSERT sources)
-        # Spark folds filter + limit into the relation and runs no job;
-        # an aggregate pass would run one. The per-check probes that
-        # name the violation only run on the (rare) failure path.
+        # ONE probe over the batch for ALL checks. Over a local relation
+        # (small MERGE/INSERT sources) it is filter + limit(1), which
+        # Spark folds into the relation: no job. Over anything else it
+        # is one aggregate pass: a limit that finds nothing scans the
+        # partitions in escalating jobs (1, 4, 16, … of them). The
+        # per-check probes that name the violation only run on the
+        # (rare) failure path.
         violated = {
             name: ~_F.coalesce(_F.expr(expr).cast("boolean"), _F.lit(True))
             for name, expr in checks.items()
         }
-        if not df.filter(functools.reduce(operator.or_, violated.values())).limit(1).collect():
+        any_violated = functools.reduce(operator.or_, violated.values())
+        if local_relation_rows(df) is not None:
+            clean = not df.filter(any_violated).limit(1).collect()
+        else:
+            clean = not df.agg(_F.max(any_violated.cast("int"))).first()[0]
+        if clean:
             return
         for name, expr in checks.items():
             row = df.filter(violated[name]).limit(1).collect()
@@ -1598,11 +1604,7 @@ class LakeTable:
     # -- commit machinery --------------------------------------------------
     def _write_manifest(self, entries: list[dict[str, Any]]) -> str:
         name = f"manifest-{uuid.uuid4().hex}.parquet"
-        path = os.path.join(self._meta_dir, name)
-        pq.write_table(
-            pa.Table.from_pylist(entries, schema=MANIFEST_SCHEMA), path
-        )
-        return name
+        return mfiles.write(self._meta_dir, name, entries, MANIFEST_SCHEMA)
 
     def _commit_snapshot(
         self,
@@ -1669,7 +1671,7 @@ class LakeTable:
             carried = {**legacy.files, **reads}
             stale = upgrade.drifting(self._meta_dir, legacy, manifests, reads)
             manifests = [
-                pq.read_table(os.path.join(self._meta_dir, m)).to_pylist()
+                mfiles.entries(self._meta_dir, [m])
                 if isinstance(m, str) and m in stale
                 else m
                 for m in manifests
@@ -1687,7 +1689,7 @@ class LakeTable:
                 if known is None:
                     fresh.append(e)
                 else:
-                    e.update(zip(FACT_COLUMNS, known))
+                    e.update(zip(mfiles.FACT_COLUMNS, known))
         nxt = int(meta.get("next_row_id", 0))
         for e in sorted(fresh, key=lambda x: x["file_path"]):
             e["first_row_id"] = nxt
@@ -1705,38 +1707,32 @@ class LakeTable:
         # re-reading the whole inventory, which at 100 TB would put the
         # scan-planning cost on every write. Rewrites (replace/
         # overwrite/compact swap manifests out) recompute from scratch.
+        # The manifests this commit wrote are summed from its entries.
 
         def _sum_manifests(ms: list[str]) -> tuple[int, int, int]:
-            recs = byts = files = 0
-            for m in ms:
-                if m in in_memory:  # written by this commit
-                    es = in_memory[m]
-                    recs += sum(e["record_count"] for e in es)
-                    byts += sum(e["file_size_bytes"] for e in es)
-                    files += len(es)
-                    continue
-                t = pq.read_table(
-                    os.path.join(self._meta_dir, m),
-                    columns=["record_count", "file_size_bytes"],
-                )
-                recs += sum(t.column("record_count").to_pylist())
-                byts += sum(t.column("file_size_bytes").to_pylist())
-                files += t.num_rows
-            return recs, byts, files
+            es = [
+                e
+                for m in ms
+                for e in in_memory.get(m) or mfiles.entries(self._meta_dir, [m])
+            ]
+            return (
+                sum(e["record_count"] for e in es),
+                sum(e["file_size_bytes"] for e in es),
+                len(es),
+            )
 
         def _sum_delete_manifests(ms: list[str]) -> tuple[int, int, int]:
             pos = eq = files = 0
-            for m in ms:
-                for e in pq.read_table(os.path.join(self._meta_dir, m)).to_pylist():
-                    files += 1
-                    # "dv" record_count is the commit's DELTA of newly
-                    # tombstoned positions (vectors supersede, so raw
-                    # cardinalities would double-count merged history) —
-                    # summing deltas keeps the running total exact
-                    if e["content"] in ("position", "dv"):
-                        pos += e["record_count"]
-                    else:
-                        eq += e["record_count"]
+            for e in mfiles.entries(self._meta_dir, ms):
+                files += 1
+                # "dv" record_count is the commit's DELTA of newly
+                # tombstoned positions (vectors supersede, so raw
+                # cardinalities would double-count merged history) —
+                # summing deltas keeps the running total exact
+                if e["content"] in ("position", "dv"):
+                    pos += e["record_count"]
+                else:
+                    eq += e["record_count"]
             return pos, eq, files
 
         ps = parent_snap["summary"] if parent_snap else None
@@ -1965,18 +1961,11 @@ class LakeTable:
     def _delete_entries(self, snap: dict[str, Any] | None) -> list[dict[str, Any]]:
         if not snap:
             return []
-        rows: list[dict[str, Any]] = []
-        for m in self._lists(snap).delete_manifests:
-            rows.extend(pq.read_table(os.path.join(self._meta_dir, m)).to_pylist())
-        return rows
+        return mfiles.entries(self._meta_dir, self._lists(snap).delete_manifests)
 
     def _write_delete_manifest(self, entries: list[dict[str, Any]]) -> str:
         name = f"delete-manifest-{uuid.uuid4().hex}.parquet"
-        pq.write_table(
-            pa.Table.from_pylist(entries, schema=DELETE_MANIFEST_SCHEMA),
-            os.path.join(self._meta_dir, name),
-        )
-        return name
+        return mfiles.write(self._meta_dir, name, entries, DELETE_MANIFEST_SCHEMA)
 
     def _file_facts(
         self,
@@ -2087,10 +2076,10 @@ class LakeTable:
         cached = getattr(self, "_stats_by_uri_cache", None)
         if cached is not None and cached[0] == key:
             return cached[1]
-        out: dict[str, dict] = {}
-        for m in self._lists(snap).manifests:
-            for fe in pq.read_table(os.path.join(self._meta_dir, m)).to_pylist():
-                out[_as_uri(fe["file_path"])] = fe
+        out = {
+            _as_uri(fe["file_path"]): fe
+            for fe in mfiles.entries(self._meta_dir, self._lists(snap).manifests)
+        }
         self._stats_by_uri_cache = (key, out)
         return out
 
@@ -3556,13 +3545,7 @@ class LakeTable:
     def _snapshot_paths(self, snap: dict[str, Any] | None) -> set[str]:
         if snap is None:
             return set()
-        paths: set[str] = set()
-        for m in self._lists(snap).manifests:
-            t = pq.read_table(
-                os.path.join(self._meta_dir, m), columns=["file_path"]
-            )
-            paths.update(t.column("file_path").to_pylist())
-        return paths
+        return set(mfiles.file_paths(self._meta_dir, self._lists(snap).manifests))
 
     def _tombstone_affected_paths(
         self, delete_manifests: set[str], prev: dict[str, Any] | None
@@ -3578,24 +3561,19 @@ class LakeTable:
             return set()
         uris: set[str] = set()
         eq_entries: list[dict[str, Any]] = []
-        for m in sorted(delete_manifests):
-            for e in pq.read_table(os.path.join(self._meta_dir, m)).to_pylist():
-                # position deletes AND deletion vectors name their
-                # victim files outright (the dv parquet's file_path col)
-                if e["content"] in ("position", "dv"):
-                    t = pq.read_table(e["file_path"], columns=["file_path"])
-                    uris.update(set(t.column("file_path").to_pylist()))
-                else:
-                    eq_entries.append(e)
+        for e in mfiles.entries(self._meta_dir, sorted(delete_manifests)):
+            # position deletes AND deletion vectors name their
+            # victim files outright (the dv parquet's file_path col)
+            if e["content"] in ("position", "dv"):
+                t = pq.read_table(e["file_path"], columns=["file_path"])
+                uris.update(set(t.column("file_path").to_pylist()))
+            else:
+                eq_entries.append(e)
         prev_paths = self._snapshot_paths(prev)
         affected = {p for p in prev_paths if _as_uri(p) in uris}
         if eq_entries:
             births = {p: f[1] for p, f in self._file_facts(prev).items()}
-            entries: list[dict[str, Any]] = []
-            for m in self._lists(prev).manifests:
-                entries.extend(
-                    pq.read_table(os.path.join(self._meta_dir, m)).to_pylist()
-                )
+            entries = mfiles.entries(self._meta_dir, self._lists(prev).manifests)
             for e in eq_entries:
                 cols = json.loads(e["equality_cols"])
                 kt = pq.read_table(e["file_path"], columns=cols)
@@ -3758,16 +3736,12 @@ class LakeTable:
         if to_id is None:
             return []
         out: dict[str, dict[str, Any]] = {}
-        cache: dict[str, dict[str, dict[str, Any]]] = {}
 
         def entries_map(snap: dict[str, Any] | None) -> dict[str, dict[str, Any]]:
-            merged: dict[str, dict[str, Any]] = {}
-            for m in self._lists(snap).manifests:
-                if m not in cache:
-                    t = pq.read_table(os.path.join(self._meta_dir, m))
-                    cache[m] = {r["file_path"]: r for r in t.to_pylist()}
-                merged.update(cache[m])
-            return merged
+            return {
+                e["file_path"]: e
+                for e in mfiles.entries(self._meta_dir, self._lists(snap).manifests)
+            }
 
         for prev, s, pre_paths, post_paths in self._commit_changes(
             from_snapshot_id, to_id
@@ -5613,37 +5587,29 @@ class LakeTable:
         ]
         snap = self.snapshot()
         agg: dict[str, list[int]] = {}
-        for m in self._lists(snap).manifests:
-            t = pq.read_table(
-                os.path.join(self._meta_dir, m),
-                columns=["record_count", "column_mins"],
-            )
-            for rc, mins_json in zip(
-                t.column("record_count").to_pylist(),
-                t.column("column_mins").to_pylist(),
-            ):
-                mins = json.loads(mins_json)
-                # render exactly like the DataFrame path's
-                # get_json_object + concat_ws: JSON booleans lowercase,
-                # NULL values drop their whole segment, and floats use
-                # Java's Double.toString notation (Jackson re-serializes
-                # them server-side in Spark: 1e-07 → '1.0E-7') — review
-                # r9, twice: Python str() diverged on bools/NULLs and
-                # then on exponent-notation doubles
-                segs = []
-                for p in phys:
-                    v = mins.get(p)
-                    if v is None:
-                        continue
-                    if isinstance(v, bool):
-                        v = "true" if v else "false"
-                    elif isinstance(v, float):
-                        v = _java_double_str(v)
-                    segs.append(f"{p}={v}")
-                key = "/".join(segs)
-                cur = agg.setdefault(key, [0, 0])
-                cur[0] += 1
-                cur[1] += rc
+        for e in mfiles.entries(self._meta_dir, self._lists(snap).manifests):
+            mins = json.loads(e["column_mins"])
+            # render exactly like the DataFrame path's
+            # get_json_object + concat_ws: JSON booleans lowercase,
+            # NULL values drop their whole segment, and floats use
+            # Java's Double.toString notation (Jackson re-serializes
+            # them server-side in Spark: 1e-07 → '1.0E-7') — review
+            # r9, twice: Python str() diverged on bools/NULLs and
+            # then on exponent-notation doubles
+            segs = []
+            for p in phys:
+                v = mins.get(p)
+                if v is None:
+                    continue
+                if isinstance(v, bool):
+                    v = "true" if v else "false"
+                elif isinstance(v, float):
+                    v = _java_double_str(v)
+                segs.append(f"{p}={v}")
+            key = "/".join(segs)
+            cur = agg.setdefault(key, [0, 0])
+            cur[0] += 1
+            cur[1] += e["record_count"]
         return [
             {"partition": k, "file_count": fc, "record_count": rc}
             for k, (fc, rc) in sorted(agg.items())
@@ -5709,8 +5675,6 @@ class LakeTable:
             # on the (unique) manifest file name, so entry rows never
             # land on the driver (r9; the loop below materialized
             # O(snapshots × entries) driver-side rows).
-            import pyarrow.parquet as _pq
-
             born: dict[str, int] = {}
             refs: list[tuple[str, int]] = []
             for snap in sorted(
@@ -5729,7 +5693,7 @@ class LakeTable:
             # snapshot × entry), not per distinct entry: long-lived
             # tables whose snapshots share manifests multiply the
             # driver-side row list by the reference count (review r9)
-            n_rows = sum(self._manifest_row_count(m) for m, _ in refs)
+            n_rows = sum(mfiles.count(self._meta_dir, [m]) for m, _ in refs)
             if distinct_m and n_rows > threshold:
                 from pyspark.sql import functions as _F
 
@@ -5758,11 +5722,7 @@ class LakeTable:
                 )
             rows = []
             for m, sid in refs:
-                t = _pq.read_table(
-                    os.path.join(self._meta_dir, m),
-                    columns=["file_path", "record_count", "file_size_bytes"],
-                )
-                for e in t.to_pylist():
+                for e in mfiles.entries(self._meta_dir, [m]):
                     rows.append(
                         {
                             "status": 1 if born[m] == sid else 0,
@@ -5930,30 +5890,11 @@ class LakeTable:
         return df
 
     def _n_manifest_entries(self, snap: dict[str, Any]) -> int:
-        """Entry count from manifest parquet FOOTERS (no data I/O) —
-        the tier-selection input shared by plan_files and the metadata
-        folds (r9). Memoized per manifest set: manifests are immutable
-        once committed, and the folds would otherwise read every footer
-        twice per call (once for tier selection, once inside
-        plan_files — review r9)."""
-        return sum(
-            self._manifest_row_count(m) for m in self._lists(snap).manifests
-        )
-
-    def _manifest_row_count(self, manifest: str) -> int:
-        """One manifest's entry count from its parquet footer, memoized
-        per handle — manifests are immutable, and the fold/entries
-        paths would otherwise re-read the same footers per call."""
-        cache = getattr(self, "_manifest_rows_cache", None)
-        if cache is None:
-            cache = self._manifest_rows_cache = {}
-        if manifest not in cache:
-            if len(cache) > 4096:
-                cache.clear()  # bounded
-            cache[manifest] = pq.read_metadata(
-                os.path.join(self._meta_dir, manifest)
-            ).num_rows
-        return cache[manifest]
+        """Entry count of the snapshot's manifests, from the reader's
+        cache or their parquet footers (no entry decoded) — the
+        tier-selection input shared by plan_files and the metadata
+        folds (r9)."""
+        return mfiles.count(self._meta_dir, self._lists(snap).manifests)
 
     def _fold_distributed(self, snap: dict[str, Any]) -> bool:
         """Whether metadata folds should run as Spark jobs over the
@@ -6174,15 +6115,14 @@ class LakeTable:
         if n_entries > threshold:
             kept = self.plan_files_distributed(predicates, snapshot_id)
         else:
-            rows: list[dict[str, Any]] = []
-            for m in self._lists(snap).manifests:
-                t = pq.read_table(os.path.join(self._meta_dir, m))
-                rows.extend(t.to_pylist())
             phys_preds = self._physical_predicates(predicates)
-            kept = [r for r in rows if _file_matches(r, phys_preds)]
-        n_delete_files = sum(
-            pq.read_metadata(os.path.join(self._meta_dir, m)).num_rows
-            for m in self._lists(snap).delete_manifests
+            kept = mfiles.entries(
+                self._meta_dir,
+                self._lists(snap).manifests,
+                (lambda r: _file_matches(r, phys_preds)) if phys_preds else None,
+            )
+        n_delete_files = mfiles.count(
+            self._meta_dir, self._lists(snap).delete_manifests
         )
         self.reporter.report(
             ScanReport(
@@ -6455,10 +6395,7 @@ class LakeTable:
             ):
                 scan_paths.add(r["file_path"])  # boundary — exact rows
                 continue
-            mins = json.loads(r["column_mins"])
-            maxs = json.loads(r["column_maxs"])
-            nulls = json.loads(r.get("column_null_counts") or "{}")
-            nans = json.loads(r.get("column_nan_counts") or "{}")
+            mins, maxs, nulls, nans, _ = mfiles.stats(r)
             for c in cols:
                 if not foldable[c] and not is_float[c]:
                     continue  # already on the scan leg in full
@@ -6701,9 +6638,7 @@ class LakeTable:
             ):
                 boundary.append(r)
                 continue
-            mins = json.loads(r["column_mins"])
-            maxs = json.loads(r["column_maxs"])
-            nulls = json.loads(r.get("column_null_counts") or "{}")
+            mins, maxs, nulls, _, _ = mfiles.stats(r)
             rc = r["record_count"]
             vals: list[Any] = []
             for f in col_fields:
@@ -7012,10 +6947,7 @@ class LakeTable:
             ):
                 boundary.append(r)
                 continue
-            mins = json.loads(r["column_mins"])
-            maxs = json.loads(r["column_maxs"])
-            nulls = json.loads(r.get("column_null_counts") or "{}")
-            nans = json.loads(r.get("column_nan_counts") or "{}")
+            mins, maxs, nulls, nans, _ = mfiles.stats(r)
             rc = r["record_count"]
 
             def _fold_ok(col: str, phys: str) -> bool:
@@ -7611,10 +7543,7 @@ class LakeTable:
         driver tier under the distributed threshold, one Spark job with
         the OR of keep conditions above it; ONE ScanReport either way."""
         t_plan = time.time()
-        n_entries = sum(
-            pq.read_metadata(os.path.join(self._meta_dir, m)).num_rows
-            for m in self._lists(snap).manifests
-        )
+        n_entries = self._n_manifest_entries(snap)
         threshold = int(
             self.properties.get("planning.distributed-threshold", "100000")
         )
@@ -7629,14 +7558,11 @@ class LakeTable:
                 keep = keep | self._stats_keep_condition(p)
             kept = [r.asDict() for r in files_df.filter(keep).collect()]
         else:
-            rows: list[dict[str, Any]] = []
-            for m in self._lists(snap).manifests:
-                rows.extend(
-                    pq.read_table(os.path.join(self._meta_dir, m)).to_pylist()
-                )
-            kept = [
-                r for r in rows if any(_file_matches(r, p) for p in preds)
-            ]
+            kept = mfiles.entries(
+                self._meta_dir,
+                self._lists(snap).manifests,
+                lambda r: any(_file_matches(r, p) for p in preds),
+            )
         self.reporter.report(
             ScanReport(
                 self.identifier,
@@ -8160,9 +8086,7 @@ class LakeTable:
             phys_branches = None
         entries = []
         for r in files:
-            mins = json.loads(r["column_mins"])
-            maxs = json.loads(r["column_maxs"])
-            nulls = json.loads(r.get("column_null_counts") or "{}")
+            mins, maxs, nulls, _, _ = mfiles.stats(r)
             rc = r["record_count"]
             nn = nulls.get(phys)
             entries.append(
@@ -8521,11 +8445,7 @@ def _coerce_stat_literal(stat: Any, val: Any) -> Any:
 def _file_matches(row: dict[str, Any], predicates: dict[str, Any] | None) -> bool:
     if not predicates:
         return True
-    mins = json.loads(row["column_mins"])
-    maxs = json.loads(row["column_maxs"])
-    blooms = json.loads(row.get("column_blooms") or "{}")
-    nulls = json.loads(row.get("column_null_counts") or "{}")
-    nans = json.loads(row.get("column_nan_counts") or "{}")
+    mins, maxs, nulls, nans, blooms = mfiles.stats(row)
     for col, pred in predicates.items():
         for op, val in _pred_list(pred):
             # null-count prunes (r8): a row matches IS NULL only in a
@@ -8596,10 +8516,7 @@ def _file_fully_matches(
     known-zero null count (nulls never satisfy a comparison, and min/max
     stats say nothing about them). Anything unprovable → False, which
     just routes the file to the scan path — never wrong, only slower."""
-    mins = json.loads(row["column_mins"])
-    maxs = json.loads(row["column_maxs"])
-    nulls = json.loads(row.get("column_null_counts") or "{}")
-    nans = json.loads(row.get("column_nan_counts") or "{}")
+    mins, maxs, nulls, nans, _ = mfiles.stats(row)
     for col, pred in predicates.items():
         for op, val in _pred_list(pred):
             # null-predicate proofs come straight from the null count

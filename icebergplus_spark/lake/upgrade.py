@@ -46,7 +46,8 @@ from typing import Any, NamedTuple
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from icebergplus_spark.lake.manifest_list import _manifest_facts, snapshot_lists
+from icebergplus_spark.lake import manifests as mfiles
+from icebergplus_spark.lake.manifest_list import snapshot_lists
 
 FORMAT_VERSION = 2
 FACTS_PREFIX = "lineage-facts-"
@@ -163,7 +164,7 @@ def drifting(
     def stale(override: dict[str, int]) -> set[str]:
         out = set()
         for m in names:
-            for p, fact in _manifest_facts(os.path.join(meta_dir, m)).items():
+            for p, fact in mfiles.facts(os.path.join(meta_dir, m)).items():
                 if fact is None and p in reads:
                     first, *rest = facts.files[p]
                     if (override.get(p, first), *rest) != reads[p]:

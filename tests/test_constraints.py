@@ -202,3 +202,30 @@ def test_small_merge_into_constrained_table_runs_no_job(spark, tmp_path):
     with pytest.raises(ConstraintViolation, match="q_nonneg"):
         upsert(-1)
     assert cat.load_table("db.m").scan().count() == 2501
+
+
+def test_constraint_probe_jobs_local_and_large(spark, tmp_path):
+    """The write-time probe runs no job over a local relation, and over
+    a large clean batch no more jobs than one aggregate pass: a
+    filter + limit(1) that finds nothing scans a 64-partition batch in
+    escalating jobs (1, 4, 16, 64 partitions)."""
+    from icebergplus_spark.localrel import local_rows_df
+
+    cat = LocalLakeCatalog(spark, str(tmp_path / "wh")).start()
+    t = cat.create_table("db.q", local_rows_df(spark, [], "q long").schema)
+    t.add_constraint("q_nonneg", "q >= 0")
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(action):
+        before = set(tracker.getJobIdsForGroup(None))
+        action()
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    small = local_rows_df(spark, [(k,) for k in range(50)], "q long")
+    assert jobs(lambda: t._enforce_constraints(small)) == 0
+
+    big = spark.range(0, 64_000, numPartitions=64).selectExpr("id AS q")
+    aggregate = jobs(lambda: big.agg(F.max((F.col("q") < 0).cast("int"))).first())
+    assert jobs(lambda: t._enforce_constraints(big)) <= aggregate
+    with pytest.raises(ConstraintViolation, match="q_nonneg"):
+        t._enforce_constraints(big.selectExpr("q - 5 AS q"))

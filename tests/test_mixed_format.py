@@ -218,8 +218,6 @@ def _downgrade(t, with_map):
     """Rewrite ``t``'s head version and manifests in the version-1 shape."""
     import pyarrow.parquet as pq
 
-    from icebergplus_spark.lake import manifest_list
-
     entries = {}
     manifests = set()
     for s in t.history():
@@ -232,7 +230,6 @@ def _downgrade(t, with_map):
         path = os.path.join(t._meta_dir, m)
         table = pq.read_table(path)
         pq.write_table(table.drop_columns(list(FACT_COLUMNS)), path)
-    manifest_list._manifest_facts.cache_clear()
     path = versions.path(t._meta_dir, t._meta["_phys_version"])
     meta = versions.read(t._meta_dir, t._meta["_phys_version"])
     del meta["format_version"]
